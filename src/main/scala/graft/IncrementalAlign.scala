@@ -798,29 +798,15 @@ object IncrementalAlign {
     * therefore leaves the previous epoch fully intact — no torn state
     * mixing one table's new snapshot with another's old one. Orphaned
     * component snapshots from a crashed save are reclaimed by [[expire]]
-    * once every retained epoch references a higher id. */
+    * once every retained epoch references a higher id.
+    *
+    * The components commit concurrently, one Spark job each, in the
+    * caller's job group, and the marker is written only after all of
+    * them succeeded; a failing component cancels and awaits the others
+    * and leaves no marker (see [[graft.tableio.StateStore.save]]). */
   def save(spark: SparkSession, state: AlignState, dir: String,
            extras: Seq[(String, org.apache.spark.sql.DataFrame)] = Nil): Unit = {
     import spark.implicits._
-    val ids = scala.collection.mutable.LinkedHashMap[String, Long]()
-    def put(name: String, snap: TableIO.Snapshot): Unit = ids(name) = snap.id
-    // caller-supplied components (e.g. the stream writers' progress
-    // marker) commit inside the SAME epoch — one atomic marker covers
-    // state + extras; load() reads components by name and ignores these
-    extras.foreach { case (name, df) =>
-      put(name, TableIO.commit(spark, df, s"$dir/$name", "state")) }
-    put("ents", TableIO.commit(spark, state.ents.toDF(), s"$dir/ents", "state"))
-    put("id_triples", TableIO.commit(spark, state.idTriples.toDF(), s"$dir/id_triples", "state"))
-    put("raw_embs", TableIO.commit(spark, state.rawEmbs.toDF(), s"$dir/raw_embs", "state"))
-    put("encoded", TableIO.commit(spark, state.encoded, s"$dir/encoded", "state"))
-    put("topk", TableIO.commit(spark, state.topk.toDF(), s"$dir/topk", "state"))
-    put("accepted", TableIO.commit(spark, state.accepted, s"$dir/accepted", "state"))
-    put("assignment", TableIO.commit(spark, state.assignment, s"$dir/assignment", "state"))
-    put("canonical", TableIO.commit(spark,
-      state.canonical.withColumn("bucket", pmod(col("subjId"), lit(16))),
-      s"$dir/canonical", "state",
-      inputs = Seq(s"$dir/id_triples", s"$dir/assignment"),
-      partitionCols = Seq("bucket")))
     val w = state.weights
     val meta =
       w.attnSrc.iterator.zipWithIndex.map { case (v, i) => ("attnSrc", i.toLong, v.toDouble) } ++
@@ -840,17 +826,26 @@ object IncrementalAlign {
           ("geomSeed", 0L, java.lang.Double.longBitsToDouble(g.seed))) ++
           g.center.iterator.zipWithIndex.map { case (v, i) => ("geomCenter", i.toLong, v.toDouble) }
       }
-    put("meta", TableIO.commit(spark, meta.toSeq.toDF("kind", "idx", "value"), s"$dir/meta", "state"))
-    state.index.foreach(ix =>
-      put("index", TableIO.commit(spark, ix.toDF(), s"$dir/index", "state")))
-    put("sample", TableIO.commit(spark,
-      state.sampleIds.zipWithIndex.map { case (id, i) => (i.toLong, id) }.toSeq
-        .toDF("idx", "id"), s"$dir/sample", "state"))
-    // epoch marker LAST — this call is the commit point of the whole save
-    // (generic multi-table machinery lives in tableio.StateStore; this
-    // save keeps its own component commits for the custom options —
-    // canonical partitioning, lineage inputs, optional components)
-    graft.tableio.StateStore.writeMarker(dir, ids.toSeq)
+    // caller-supplied components (e.g. the stream writers' progress
+    // marker) commit inside the SAME epoch — one atomic marker covers
+    // state + extras; load() reads components by name and ignores these
+    val components = extras ++ Seq(
+      "ents" -> state.ents.toDF(),
+      "id_triples" -> state.idTriples.toDF(),
+      "raw_embs" -> state.rawEmbs.toDF(),
+      "encoded" -> state.encoded,
+      "topk" -> state.topk.toDF(),
+      "accepted" -> state.accepted,
+      "assignment" -> state.assignment,
+      "canonical" -> state.canonical.withColumn("bucket", pmod(col("subjId"), lit(16))),
+      "meta" -> meta.toSeq.toDF("kind", "idx", "value")) ++
+      state.index.map(ix => "index" -> ix.toDF()) ++ Seq(
+      "sample" -> state.sampleIds.zipWithIndex.map { case (id, i) => (i.toLong, id) }.toSeq
+        .toDF("idx", "id"))
+    graft.tableio.StateStore.save(spark, dir, components, Map(
+      "canonical" -> graft.tableio.StateStore.CommitOpts(
+        partitionCols = Seq("bucket"),
+        inputs = Seq(s"$dir/id_triples", s"$dir/assignment"))))
     ()
   }
 

@@ -124,30 +124,94 @@ object NeighborAgg {
     * broadcast pack needs (keys are unique ids, so pivot ties cannot
     * recurse degenerately on equal runs; a boxed `sortBy` here costs
     * both tuple allocation and comparator dispatch on a 100k+ row
-    * driver-serial path). */
-  private def sortPaired(keys: Array[Long], p1: Array[Int], p2: Array[Int],
-                         lo: Int, hi: Int): Unit = {
-    if (lo >= hi) return
+    * driver-serial path). Recursion goes into the smaller side and the
+    * larger side is looped on, so the stack depth is at most log2(n)
+    * whatever the key order; the two sides are disjoint, so the order
+    * they are sorted in does not change the result. */
+  private[graft] def sortPaired(keys: Array[Long], p1: Array[Int], p2: Array[Int],
+                                lo0: Int, hi0: Int): Unit = {
     @inline def swap(i: Int, j: Int): Unit = {
       val k = keys(i); keys(i) = keys(j); keys(j) = k
       val a = p1(i); p1(i) = p1(j); p1(j) = a
       if (p2 != null) { val b = p2(i); p2(i) = p2(j); p2(j) = b }
     }
-    val mid = lo + (hi - lo) / 2
-    // median-of-three pivot selection
-    if (keys(mid) < keys(lo)) swap(mid, lo)
-    if (keys(hi) < keys(lo)) swap(hi, lo)
-    if (keys(hi) < keys(mid)) swap(hi, mid)
-    val pivot = keys(mid)
-    var i = lo
-    var j = hi
-    while (i <= j) {
-      while (keys(i) < pivot) i += 1
-      while (keys(j) > pivot) j -= 1
-      if (i <= j) { swap(i, j); i += 1; j -= 1 }
+    var lo = lo0
+    var hi = hi0
+    while (lo < hi) {
+      val mid = lo + (hi - lo) / 2
+      // median-of-three pivot selection
+      if (keys(mid) < keys(lo)) swap(mid, lo)
+      if (keys(hi) < keys(lo)) swap(hi, lo)
+      if (keys(hi) < keys(mid)) swap(hi, mid)
+      val pivot = keys(mid)
+      var i = lo
+      var j = hi
+      while (i <= j) {
+        while (keys(i) < pivot) i += 1
+        while (keys(j) > pivot) j -= 1
+        if (i <= j) { swap(i, j); i += 1; j -= 1 }
+      }
+      if (j - lo < hi - i) { sortPaired(keys, p1, p2, lo, j); lo = i }
+      else { sortPaired(keys, p1, p2, i, hi); hi = j }
     }
-    sortPaired(keys, p1, p2, lo, j)
-    sortPaired(keys, p1, p2, i, hi)
+  }
+
+  /** The [[blocks]] fast path's embedding side: ids sorted ascending and
+    * the embeddings packed row-major in the same order. */
+  private def packEmbeddings(embs: Dataset[Emb], dim: Int): (Array[Long], Array[Float]) = {
+    import embs.sparkSession.implicits._
+    val packed: Array[(Array[Long], Array[Float])] = embs.mapPartitions { it =>
+      val idB = new scala.collection.mutable.ArrayBuffer[Long]
+      val emB = new scala.collection.mutable.ArrayBuffer[Array[Float]]
+      it.foreach { e => idB += e.id; emB += e.emb }
+      val flat = new Array[Float](emB.length * dim)
+      var i = 0
+      while (i < emB.length) { System.arraycopy(emB(i), 0, flat, i * dim, dim); i += 1 }
+      Iterator.single((idB.toArray, flat))
+    }.collect()
+    // single output allocation + primitive paired sort + direct gather
+    // from the partition buffers: boxed sortBy tuples and a second
+    // 100 MB concat buffer measured as multi-second driver gaps on
+    // this host's slow first-touch page-fault path
+    val total = packed.iterator.map(_._1.length).sum
+    val embIds = new Array[Long](total)
+    val partOf = new Array[Int](total)
+    val idxOf = new Array[Int](total)
+    var off = 0
+    var p = 0
+    while (p < packed.length) {
+      val ids = packed(p)._1
+      var i = 0
+      while (i < ids.length) {
+        embIds(off) = ids(i); partOf(off) = p; idxOf(off) = i; off += 1; i += 1
+      }
+      p += 1
+    }
+    sortPaired(embIds, partOf, idxOf, 0, total - 1)
+    val embFlat = new Array[Float](total * dim)
+    var r = 0
+    while (r < total) {
+      System.arraycopy(packed(partOf(r))._2, idxOf(r) * dim, embFlat, r * dim, dim)
+      r += 1
+    }
+    (embIds, embFlat)
+  }
+
+  /** The [[blocks]] fast path's kg side: entity ids sorted ascending and
+    * their kg in the same order. */
+  private def packKgs(ents: Dataset[Entity]): (Array[Long], Array[Int]) = {
+    import ents.sparkSession.implicits._
+    val kgPacked = ents.toDF().select(col("id"), col("kg")).as[(Long, Int)]
+      .mapPartitions { it =>
+        val ids = new scala.collection.mutable.ArrayBuffer[Long]
+        val kgs = new scala.collection.mutable.ArrayBuffer[Int]
+        it.foreach { case (i, kg) => ids += i; kgs += kg }
+        Iterator.single((ids.toArray, kgs.toArray))
+      }.collect()
+    val kgIds = kgPacked.flatMap(_._1)
+    val kgVals = kgPacked.flatMap(_._2)
+    sortPaired(kgIds, kgVals, null, 0, kgIds.length - 1)
+    (kgIds, kgVals)
   }
 
   /** Default byte budget for the [[blocks]] broadcast fast path:
@@ -205,55 +269,11 @@ object NeighborAgg {
       // permutation.
       // the kg collect is independent of the embedding collect — run it
       // concurrently (guide §2.6: overlap independent jobs) so the
-      // serial prelude pays one job round-trip, not two
-      val kgFuture = scala.concurrent.Future {
-        ents.toDF().select(col("id"), col("kg")).as[(Long, Int)]
-          .mapPartitions { it =>
-            val ids = new scala.collection.mutable.ArrayBuffer[Long]
-            val kgs = new scala.collection.mutable.ArrayBuffer[Int]
-            it.foreach { case (i, kg) => ids += i; kgs += kg }
-            Iterator.single((ids.toArray, kgs.toArray))
-          }.collect()
-      }(scala.concurrent.ExecutionContext.global)
-      val packed: Array[(Array[Long], Array[Float])] = embs.mapPartitions { it =>
-        val idB = new scala.collection.mutable.ArrayBuffer[Long]
-        val emB = new scala.collection.mutable.ArrayBuffer[Array[Float]]
-        it.foreach { e => idB += e.id; emB += e.emb }
-        val flat = new Array[Float](emB.length * dim)
-        var i = 0
-        while (i < emB.length) { System.arraycopy(emB(i), 0, flat, i * dim, dim); i += 1 }
-        Iterator.single((idB.toArray, flat))
-      }.collect()
-      // single output allocation + primitive paired sort + direct gather
-      // from the partition buffers: boxed sortBy tuples and a second
-      // 100 MB concat buffer measured as multi-second driver gaps on
-      // this host's slow first-touch page-fault path
-      val total = packed.iterator.map(_._1.length).sum
-      val embIds = new Array[Long](total)
-      val partOf = new Array[Int](total)
-      val idxOf = new Array[Int](total)
-      var off = 0
-      var p = 0
-      while (p < packed.length) {
-        val ids = packed(p)._1
-        var i = 0
-        while (i < ids.length) {
-          embIds(off) = ids(i); partOf(off) = p; idxOf(off) = i; off += 1; i += 1
-        }
-        p += 1
-      }
-      sortPaired(embIds, partOf, idxOf, 0, total - 1)
-      val embFlat = new Array[Float](total * dim)
-      var r = 0
-      while (r < total) {
-        System.arraycopy(packed(partOf(r))._2, idxOf(r) * dim, embFlat, r * dim, dim)
-        r += 1
-      }
-      val kgPacked = scala.concurrent.Await.result(kgFuture,
-        scala.concurrent.duration.Duration.Inf)
-      val kgIds = kgPacked.flatMap(_._1)
-      val kgVals = kgPacked.flatMap(_._2)
-      sortPaired(kgIds, kgVals, null, 0, kgIds.length - 1)
+      // serial prelude pays one job round-trip, not two; both run in the
+      // caller's job group, and a failure of either cancels and awaits
+      // the other
+      val ((embIds, embFlat), (kgIds, kgVals)) = graft.util.ParJobs.both(spark)(
+        packEmbeddings(embs, dim), packKgs(ents))
       val bcEmbIds = spark.sparkContext.broadcast(embIds)
       val bcEmbFlat = spark.sparkContext.broadcast(embFlat)
       val bcKgIds = spark.sparkContext.broadcast(kgIds)

@@ -17,23 +17,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (time travel); [[expire]] bounds storage at O(keepEpochs × state)
   * on an unbounded stream and sweeps up orphan snapshots from crashed
   * saves once superseded.
+  *
+  * The components of one save are independent tables, so they commit
+  * CONCURRENTLY (at most [[MaxParallelCommits]] at a time, one Spark
+  * write job each) in the caller's job group; the marker is written
+  * only after every component commit has succeeded. When one component
+  * fails, the other component jobs are cancelled and awaited, no
+  * marker is written, and the failure is rethrown — the previous epoch
+  * stays the loadable one (see [[graft.util.ParJobs]]).
   */
 object StateStore {
 
-  /** Commit `components` then the epoch marker; returns the new epoch. */
+  /** Per-component [[TableIO.commit]] options. */
+  final case class CommitOpts(partitionCols: Seq[String] = Nil, inputs: Seq[String] = Nil)
+
+  /** Component commits in flight at once: enough to overlap the driver
+    * latency of small writes, few enough not to oversubscribe a local
+    * driver. */
+  private val MaxParallelCommits = 4
+
+  /** Commit `components` (concurrently) then the epoch marker; returns
+    * the new epoch. `opts` gives commit options by component name. */
   def save(spark: SparkSession, dir: String,
-           components: Seq[(String, DataFrame)]): Long = {
-    val ids = components.map { case (name, df) =>
-      name -> TableIO.commit(spark, df, s"$dir/$name", "state").id
-    }
-    writeMarker(dir, ids)
+           components: Seq[(String, DataFrame)],
+           opts: Map[String, CommitOpts] = Map.empty): Long = {
+    val commits = components.map { case (name, df) => () => {
+      val o = opts.getOrElse(name, CommitOpts())
+      name -> TableIO.commit(spark, df, s"$dir/$name", "state",
+        inputs = o.inputs, partitionCols = o.partitionCols).id
+    } }
+    writeMarker(dir, graft.util.ParJobs.run(spark, MaxParallelCommits)(commits))
   }
 
   /** Write the epoch marker LAST — this call is the commit point of a
-    * multi-table save. `ids` are component → committed snapshot id
-    * (callers with custom commit options run TableIO.commit themselves
-    * and hand the ids here, as IncrementalAlign does). */
-  def writeMarker(dir: String, ids: Seq[(String, Long)]): Long = {
+    * multi-table save. `ids` are component → committed snapshot id. */
+  private def writeMarker(dir: String, ids: Seq[(String, Long)]): Long = {
     val k = epochs(dir).lastOption.getOrElse(-1L) + 1
     java.nio.file.Files.createDirectories(epochDir(dir))
     val tmp = epochDir(dir).resolve(s".epoch-$k.txt.tmp")

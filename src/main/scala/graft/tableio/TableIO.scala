@@ -1,6 +1,8 @@
 package graft.tableio
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -12,9 +14,20 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   *   table/data/snap-<n>/...(parquet, optionally partitioned dirs)
-  *   table/_metrics/                 — append-only per-commit metrics table
+  *   table/_metrics/commit-<n>.json  — append-only per-commit metrics
+  *                                     rows, one small file per commit
+  *                                     written from the driver (older
+  *                                     builds appended parquet rows
+  *                                     here; [[metrics]] reads both)
   *   table/_meta/snapshot-<n>.json   — committed LAST; the manifest
   *                                     whose n is max defines the table
+  *
+  * The manifest's `schema` field is the Spark schema of the committed
+  * data files (data columns only — partition columns live in directory
+  * names and keep being inferred from them). Reads hand it to the
+  * parquet source, so building a snapshot's DataFrame runs no
+  * schema-inference job; a manifest without it (committed by an older
+  * build) falls back to inference.
   *
   * Gives exactly the properties the north rule exercises: atomic
   * snapshot commit (manifest-last-write of a complete JSON), checkpointed
@@ -41,6 +54,27 @@ object TableIO {
                             partitionRows: Map[String, Long])
 
   private def metaDir(base: String): Path = Paths.get(base, "_meta")
+
+  private val Json = new ObjectMapper()
+
+  private def manifest(base: String, id: Long): JsonNode =
+    Json.readTree(Files.readString(metaDir(base).resolve(s"snapshot-$id.json")))
+
+  /** A parquet reader carrying the manifest's committed data schema, when
+    * it has one (see the layout note above). */
+  private def reader(spark: SparkSession, m: JsonNode): DataFrameReader =
+    Option(m.get("schema")).fold(spark.read)(s =>
+      spark.read.schema(DataType.fromJson(s.toString).asInstanceOf[StructType]))
+
+  /** The Spark schema parquet files written by Spark carry in their footer
+    * — the schema inference would read back. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Columns of a `_metrics` row. */
+  private val MetricsSchema: StructType = StructType(Seq(
+    StructField("snapshot", LongType), StructField("stage", StringType),
+    StructField("rows", LongType), StructField("n_files", LongType),
+    StructField("wall_ms", LongType)))
 
   def latestSnapshotId(base: String): Option[Long] = {
     val md = metaDir(base)
@@ -87,7 +121,7 @@ object TableIO {
     if (!Files.exists(metaDir(base).resolve(s"snapshot-$id.json")))
       throw new IllegalStateException(
         s"no snapshot $id at $base (have: ${snapshotIds(base).mkString(",")})")
-    spark.read.parquet(s"$base/data/snap-$id")
+    reader(spark, manifest(base, id)).parquet(s"$base/data/snap-$id")
   }
 
   /** Per-file row counts AND per-file numeric column ranges of a
@@ -95,15 +129,17 @@ object TableIO {
     * physical write partition. Ranges cover INT32/INT64/FLOAT/DOUBLE
     * columns whose every row group carries non-null min/max statistics;
     * they feed the manifest's `col_stats` for metadata-driven file
-    * skipping ([[prunedFiles]]/[[readRange]]). */
+    * skipping ([[prunedFiles]]/[[readRange]]). Also returns the Spark
+    * schema JSON stored in the first footer (null when no file has one). */
   private def footerCounts(spark: SparkSession, dataPath: String)
-      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]]) = {
+      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]], String) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(dataPath)
     val fs = root.getFileSystem(conf)
     val out = scala.collection.mutable.LinkedHashMap[String, Long]()
     val stats = scala.collection.mutable.LinkedHashMap[String, Map[String, (BigDecimal, BigDecimal)]]()
+    var schema: String = null
     val it = fs.listFiles(root, true)
     while (it.hasNext) {
       val f = it.next()
@@ -112,6 +148,8 @@ object TableIO {
         try {
           val rel = root.toUri.relativize(f.getPath.toUri).toString
           out(rel) = rd.getRecordCount
+          if (schema == null)
+            schema = rd.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
           val perCol = scala.collection.mutable.LinkedHashMap[String, (BigDecimal, BigDecimal)]()
           val disabled = scala.collection.mutable.Set.empty[String]
           rd.getFooter.getBlocks.asScala.foreach { block =>
@@ -144,7 +182,7 @@ object TableIO {
         } finally rd.close()
       }
     }
-    (out.toMap, stats.toMap)
+    (out.toMap, stats.toMap, schema)
   }
 
   /** Commit df as the next snapshot of `base`. Returns the snapshot.
@@ -162,7 +200,6 @@ object TableIO {
              inputs: Seq[String] = Nil, partitionCols: Seq[String] = Nil,
              rangeClusterBy: Seq[String] = Nil,
              rangeClusterParts: Int = 0): Snapshot = {
-    import spark.implicits._
     import org.apache.spark.sql.functions.col
     val next = latestSnapshotId(base).getOrElse(-1L) + 1
     val dataPath = s"$base/data/snap-$next"
@@ -178,13 +215,22 @@ object TableIO {
     val writer = clustered.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(dataPath) // the ONLY action that computes df
-    val (counts, colStats) = footerCounts(spark, dataPath)
+    val (counts, colStats, schema) = footerCounts(spark, dataPath)
     val rows = counts.values.sum
     val wallMs = (System.nanoTime() - t0) / 1000000
-    // S8 metric sink: append-only per-commit metrics table
-    Seq((next, stage, rows, counts.size.toLong, wallMs))
-      .toDF("snapshot", "stage", "rows", "n_files", "wall_ms")
-      .write.mode("append").parquet(s"$base/_metrics")
+    // S8 metric sink: one append-only row per commit, written from the
+    // driver (a Spark write job per row cost as much as the data write
+    // of a small state component). The atomic rename publishes complete
+    // rows only; a retry after a crash before the manifest rewrites the
+    // row of the same n.
+    val metricsDir = Paths.get(base, "_metrics")
+    Files.createDirectories(metricsDir)
+    val row = Json.createObjectNode().put("snapshot", next).put("stage", stage)
+      .put("rows", rows).put("n_files", counts.size.toLong).put("wall_ms", wallMs)
+    val rowTmp = metricsDir.resolve(s".commit-$next.json.tmp")
+    Files.writeString(rowTmp, Json.writeValueAsString(row) + "\n")
+    Files.move(rowTmp, metricsDir.resolve(s"commit-$next.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     Files.createDirectories(metaDir(base))
     val lineage = counts.toSeq.sortBy(_._1)
       .map { case (p, n) => s"\"$p\":$n" }.mkString("{", ",", "}")
@@ -201,7 +247,8 @@ object TableIO {
          |"inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],
          |"partition_rows":$lineage,
          |"col_stats":$statsJson,
-         |"partition_cols":[${partitionCols.map(c => "\"" + c + "\"").mkString(",")}]}""".stripMargin
+         |"partition_cols":[${partitionCols.map(c => "\"" + c + "\"").mkString(",")}]${
+           if (schema == null) "" else s",\n\"schema\":$schema"}}""".stripMargin
     val tmp = metaDir(base).resolve(s".snapshot-$next.json.tmp")
     Files.writeString(tmp, json)
     Files.move(tmp, metaDir(base).resolve(s"snapshot-$next.json"),
@@ -213,12 +260,24 @@ object TableIO {
   def read(spark: SparkSession, base: String): DataFrame = {
     val id = latestSnapshotId(base).getOrElse(
       throw new IllegalStateException(s"no snapshot at $base"))
-    spark.read.parquet(s"$base/data/snap-$id")
+    reader(spark, manifest(base, id)).parquet(s"$base/data/snap-$id")
   }
 
-  /** The append-only commit-metrics table of `base` (S8 sink). */
-  def metrics(spark: SparkSession, base: String): DataFrame =
-    spark.read.parquet(s"$base/_metrics")
+  /** The append-only commit-metrics table of `base` (S8 sink): the
+    * per-commit row files plus any parquet rows older builds appended. */
+  def metrics(spark: SparkSession, base: String): DataFrame = {
+    val dir = s"$base/_metrics"
+    val rows = spark.read.schema(MetricsSchema)
+      .option("pathGlobFilter", "commit-*.json").json(dir)
+    val legacy = {
+      val st = Files.list(Paths.get(dir))
+      try st.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
+      finally st.close()
+    }
+    if (!legacy) rows
+    else rows.unionByName(spark.read.schema(MetricsSchema)
+      .option("pathGlobFilter", "*.parquet").parquet(dir))
+  }
 
   /** Manifest-driven file skipping: the data files of `base`'s latest
     * snapshot whose committed [min,max] range on `column` intersects
@@ -238,8 +297,7 @@ object TableIO {
       : (Seq[String], Int, String) = {
     val id = latestSnapshotId(base).getOrElse(
       throw new IllegalStateException(s"no snapshot at $base"))
-    val json = Files.readString(metaDir(base).resolve(s"snapshot-$id.json"))
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val root = manifest(base, id)
     val dataPath = root.get("data").asText()
     val statsNode = root.get("col_stats")
     // partition_rows is the authoritative file inventory (present since

@@ -241,6 +241,50 @@ class IncrementalSpec extends SparkTestBase {
     assert(graft.tableio.TableIO.snapshotIds(s"$dir/ents") == Seq(1L))
   }
 
+  test("state commit runs one Spark job per component; load runs two") {
+    val ((d1, e1), _) = splitFixture(35, 50)
+    val s1 = IncrementalAlign.initial(spark, d1, e1, icfgIdx)
+    val dir = java.nio.file.Files.createTempDirectory("align-jobs").toString
+    val extras = Seq(graft.streaming.StreamProgress.Component ->
+      graft.streaming.StreamProgress.of(spark, 0L))
+    val (_, saveJobs) = countJobs(IncrementalAlign.save(spark, s1, dir, extras))
+    val n = graft.tableio.StateStore.readEpoch(dir, 0L).size
+    assert(n == 12, s"expected 12 components (10 + index + progress), saw $n")
+    // no metrics-row job, no schema-inference job: exactly the data writes
+    assert(saveJobs == n, s"save of $n components ran $saveJobs jobs")
+    val (loaded, loadJobs) = countJobs(IncrementalAlign.load(spark, dir))
+    assert(loadJobs == 2, s"load ran $loadJobs jobs") // the meta and sample collects
+    assert(topkMap(loaded) == topkMap(s1))
+  }
+
+  test("a failing component aborts the save: siblings cancelled, no marker, previous epoch intact") {
+    val ((d1, e1), (d2, e2)) = splitFixture(35, 50)
+    val s1 = IncrementalAlign.initial(spark, d1, e1, icfg)
+    val dir = java.nio.file.Files.createTempDirectory("align-fail").toString
+    IncrementalAlign.save(spark, s1, dir)                       // epoch 0
+    val s2 = IncrementalAlign.delta(spark, s1, d2, e2, icfg)
+    val boom = spark.range(0, 8, 1, 4).map { i =>
+      if (i == 5) throw new IllegalStateException("injected component failure")
+      i
+    }.toDF("x")
+    // a sibling slow enough to be running when the failure lands
+    val slow = spark.range(0, 4, 1, 4).map { i => Thread.sleep(3000); i }.toDF("x")
+    val err = intercept[Throwable](
+      IncrementalAlign.save(spark, s2, dir, extras = Seq("boom" -> boom, "slow" -> slow)))
+    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected component failure")), err)
+    assert(IncrementalAlign.stateEpochs(dir) == Seq(0L))         // no new marker
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a component job outlived the failed save")
+    val resumed = IncrementalAlign.load(spark, dir)
+    assert(topkMap(resumed) == topkMap(s1))
+    assert(resumed.sampleIds.toSeq == s1.sampleIds.toSeq)
+    assert(acceptedSet(resumed) == acceptedSet(s1))
+    assert(effectiveAssign(resumed) == effectiveAssign(s1))
+    assert(canonBag(resumed) == canonBag(s1))
+  }
+
   test("streaming micro-batch ingestion equals the from-scratch batch run") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -506,6 +506,52 @@ class OperatorSpec extends SparkTestBase {
     assert(fast.nonEmpty)
   }
 
+  test("sortPaired: 1M adversarially ordered keys sort without deep recursion, same result as before") {
+    // keys 0..n-1 in order, except the leftmost subrange that the sort
+    // reaches on sorted input: that block is ordered so the median-of-three
+    // pivot is always the second-largest key, and every partition peels
+    // two keys off the right — the previous sort recursed once per two
+    // keys there (block/2 frames deep) and overflowed the stack
+    val n = 1 << 20
+    var hi = n - 1
+    while (hi + 1 > 100000) hi = hi / 2 - 1
+    val m = hi + 1
+    val at = Array.tabulate(m)(identity) // original position of the item now at each slot
+    val rank = Array.fill(m)(-1)
+    var (lo, top) = (0, m - 1)
+    hi = m - 1
+    while (hi - lo >= 3) {
+      val mid = lo + (hi - lo) / 2
+      rank(at(hi)) = top; rank(at(mid)) = top - 1; top -= 2
+      val t = at(mid); at(mid) = at(hi - 1); at(hi - 1) = t
+      hi -= 2
+    }
+    (lo to hi).foreach { p => rank(at(p)) = p - lo }
+    val keys = Array.tabulate(n)(p => if (p < m) rank(p).toLong else p.toLong)
+    val p1 = Array.tabulate(n)(identity)
+    val p2 = Array.tabulate(n)(p => p * 7)
+    NeighborAgg.sortPaired(keys, p1, p2, 0, n - 1)
+    assert(keys.sameElements(Array.tabulate(n)(_.toLong)))
+    // each key carries its original position along
+    val origin = Array.tabulate(n)(p => if (p < m) rank(p) else p)
+    assert((0 until n).forall(r => origin(p1(r)) == r && p2(r) == p1(r) * 7))
+
+    // and on a shuffled input with duplicate keys the result is the one
+    // the previous (unbounded-recursion) sort produced, slot for slot
+    val rng = new scala.util.Random(11)
+    val k0 = Array.fill(200000)(rng.nextInt(50000).toLong)
+    val (ka, a1, a2) = (k0.clone(), Array.tabulate(k0.length)(identity), Array.tabulate(k0.length)(-_))
+    val (kb, b1, b2) = (k0.clone(), a1.clone(), a2.clone())
+    NeighborAgg.sortPaired(ka, a1, a2, 0, ka.length - 1)
+    OperatorSpec.previousSortPaired(kb, b1, b2, 0, kb.length - 1)
+    assert(ka.sameElements(kb) && a1.sameElements(b1) && a2.sameElements(b2))
+    val (kc, c1) = (k0.clone(), Array.tabulate(k0.length)(identity))
+    val (kd, d1) = (k0.clone(), c1.clone())
+    NeighborAgg.sortPaired(kc, c1, null, 0, kc.length - 1)
+    OperatorSpec.previousSortPaired(kd, d1, null, 0, kd.length - 1)
+    assert(kc.sameElements(kd) && c1.sameElements(d1))
+  }
+
   test("BoundedProbe.atMost is exact at the boundary across partitionings") {
     import spark.implicits._
     for (parts <- Seq(1, 3, 16)) {
@@ -516,5 +562,33 @@ class OperatorSpec extends SparkTestBase {
       assert(!graft.util.BoundedProbe.atMost(df, 1))
     }
     assert(graft.util.BoundedProbe.atMost(spark.emptyDataFrame, 0))
+  }
+}
+
+object OperatorSpec {
+  /** The paired quicksort as it was before its recursion was bounded
+    * (both sides recursed) — the reference the bounded one must match. */
+  private[graft] def previousSortPaired(keys: Array[Long], p1: Array[Int], p2: Array[Int],
+                                        lo: Int, hi: Int): Unit = {
+    if (lo >= hi) return
+    @inline def swap(i: Int, j: Int): Unit = {
+      val k = keys(i); keys(i) = keys(j); keys(j) = k
+      val a = p1(i); p1(i) = p1(j); p1(j) = a
+      if (p2 != null) { val b = p2(i); p2(i) = p2(j); p2(j) = b }
+    }
+    val mid = lo + (hi - lo) / 2
+    if (keys(mid) < keys(lo)) swap(mid, lo)
+    if (keys(hi) < keys(lo)) swap(hi, lo)
+    if (keys(hi) < keys(mid)) swap(hi, mid)
+    val pivot = keys(mid)
+    var i = lo
+    var j = hi
+    while (i <= j) {
+      while (keys(i) < pivot) i += 1
+      while (keys(j) > pivot) j -= 1
+      if (i <= j) { swap(i, j); i += 1; j -= 1 }
+    }
+    previousSortPaired(keys, p1, p2, lo, j)
+    previousSortPaired(keys, p1, p2, i, hi)
   }
 }

@@ -1,10 +1,33 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `f` under a fresh job group; returns its result and the number
+    * of Spark jobs submitted in that group (jobs of threads `f` starts
+    * inherit the group and count too). */
+  def countJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "countJobs")
+      val out = try f finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

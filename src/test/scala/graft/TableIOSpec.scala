@@ -26,6 +26,71 @@ class TableIOSpec extends SparkTestBase {
     assert(m.length == 1 && m.head.getAs[Long]("rows") == 100)
   }
 
+  test("read/readAt/metrics build their DataFrames without a Spark job") {
+    val base = tmp()
+    TableIO.commit(spark, (1 to 100).map(i => (i.toLong, s"v$i", i % 4)).toDF("id", "v", "bucket"),
+      base, "s", partitionCols = Seq("bucket"))
+    TableIO.commit(spark, Seq((7L, "w", 1)).toDF("id", "v", "bucket"),
+      base, "s", partitionCols = Seq("bucket"))
+    val ((latest, first, m), jobs) = countJobs(
+      (TableIO.read(spark, base), TableIO.readAt(spark, base, 0), TableIO.metrics(spark, base)))
+    assert(jobs == 0, s"building the reads submitted $jobs jobs")
+    assert(latest.count() == 1 && first.count() == 100 && m.count() == 2)
+  }
+
+  test("the manifest records the data schema; a partitioned table reads back as inference reads it") {
+    import org.apache.spark.sql.types._
+    val base = tmp()
+    val df = (0L until 200L).map(i => (i, s"v$i", i.toDouble / 3, Seq(i.toFloat), i % 16))
+      .toDF("id", "v", "x", "emb", "bucket")
+    TableIO.commit(spark, df, base, "s", partitionCols = Seq("bucket"))
+    val json = Files.readString(Path.of(base, "_meta", "snapshot-0.json"))
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val recorded = DataType.fromJson(root.get("schema").toString).asInstanceOf[StructType]
+    // data columns only: the partition column lives in directory names
+    assert(recorded.fieldNames.toSeq == Seq("id", "v", "x", "emb"))
+    // the schema inference of earlier builds, partition-column type included
+    val inferred = spark.read.parquet(s"$base/data/snap-0")
+    val back = TableIO.read(spark, base)
+    assert(back.schema == inferred.schema, s"${back.schema} vs ${inferred.schema}")
+    assert(back.schema("bucket").dataType == IntegerType)
+    assert(back.collect().map(_.toSeq).toSet == inferred.collect().map(_.toSeq).toSet)
+    assert(TableIO.readAt(spark, base, 0).schema == inferred.schema)
+  }
+
+  test("a manifest without a schema field (older build) still reads by inference") {
+    val base = tmp()
+    TableIO.commit(spark, Seq((1L, "a", 0L), (2L, "b", 1L)).toDF("k", "v", "bucket"),
+      base, "s", partitionCols = Seq("bucket"))
+    val mf = Path.of(base, "_meta", "snapshot-0.json")
+    val json = Files.readString(mf)
+    val legacy = json.substring(0, json.indexOf(",\n\"schema\":")) + "}"
+    Files.writeString(mf, legacy)
+    assert(!Files.readString(mf).contains("schema"))
+    val back = TableIO.read(spark, base)
+    assert(back.schema == spark.read.parquet(s"$base/data/snap-0").schema)
+    assert(back.select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "a"), (2L, "b")))
+    assert(TableIO.readAt(spark, base, 0).count() == 2)
+  }
+
+  test("metrics returns legacy parquet rows together with per-commit rows") {
+    val base = tmp()
+    TableIO.commit(spark, Seq((1L, "a")).toDF("k", "v"), base, "s")
+    TableIO.commit(spark, Seq((2L, "b"), (3L, "c")).toDF("k", "v"), base, "s")
+    TableIO.commit(spark, Seq((4L, "d")).toDF("k", "v"), base, "s")
+    // snapshot 0's row as an older build appended it: parquet, no row file
+    Files.delete(Path.of(base, "_metrics", "commit-0.json"))
+    Seq((0L, "s", 1L, 1L, 5L)).toDF("snapshot", "stage", "rows", "n_files", "wall_ms")
+      .write.mode("append").parquet(s"$base/_metrics")
+    def rows() = TableIO.metrics(spark, base).collect()
+      .map(r => (r.getAs[Long]("snapshot"), r.getAs[Long]("rows"))).sortBy(_._1).toSeq
+    assert(rows() == Seq((0L, 1L), (1L, 2L), (2L, 1L)))
+    TableIO.expireSnapshots(base, keepLast = 1)
+    assert(TableIO.metrics(spark, base).count() == 3) // history append-only
+    assert(rows() == Seq((0L, 1L), (1L, 2L), (2L, 1L)))
+  }
+
   test("manifest column stats: readRange skips files by committed ranges, result exact") {
     val base = tmp()
     // 8 range-disjoint files over id ∈ [0, 8000): stats land per file
