@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
 import graft.align.{GatKernel, GatWeights, MoCoTrainer}
-import graft.candidates.{BucketIndex, IndexGeometry, ScoredTopK}
+import graft.candidates.{BucketIndex, CellJoin, IndexGeometry, ScoredTopK}
 import graft.candidates.BucketIndex.IndexRow
 import graft.candidates.ScoredTopK.ScoredQuery
 import graft.canon.ConnectedComponents
@@ -353,7 +353,7 @@ object IncrementalAlign {
       cfg: IncrementalConfig, kPrime: Int, tau: Double)
       : (Dataset[ScoredQuery], Array[Long], IndexGeometry, Dataset[IndexRow]) = {
     import spark.implicits._
-    val sample = BucketIndex.corpusSample(corpusDs, cfg.sampleSize)
+    val sample = CellJoin.countAndSample(corpusDs, cfg.sampleSize)._2
     val g = geometry.getOrElse(IndexGeometry.fit(sample, cfg.indexBands,
       cfg.indexRowsPerBand, cfg.indexWScale))
     val bcG = spark.sparkContext.broadcast(g)
@@ -644,23 +644,56 @@ object IncrementalAlign {
     // of what the indexed candidate rule prunes (exact mode scores
     // |rescoreQs| x |corpus| pairs; indexed only bucket-sharing ones)
     val candAcc = sc.longAccumulator("rescoreCandidatePairs")
+    // both scans emit per-partition (srcId, ids, cos, count) partials
+    // over disjoint corpus slices; complete ⇔ the list covers the whole
+    // candidate set (count <= kPrime) — the bootstrap's convention
     val rescored: Dataset[Maint] =
       if (rescoreQs.isEmpty) spark.emptyDataset[Maint]
-      else if (bcGeom.value == null)
-        encodedUC.filter(col("kg") === 2).select(col("id"), col("emb"))
-          .as[(Long, Array[Float])]
-          .mapPartitions { it =>
-            val qs = bcQs.value
-            val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
-            var rows = 0L
-            it.foreach { case (cid, cemb) =>
-              rows += 1
-              var i = 0
-              while (i < qs.length) { bufs(i).offer(cid, Embedder.dot(qs(i)._2, cemb)); i += 1 }
+      else {
+        val partials: Dataset[(Long, Array[Long], Array[Double], Long)] =
+          if (bcGeom.value == null)
+            // EXACT rescore: every corpus row is a candidate
+            encodedUC.filter(col("kg") === 2).select(col("id"), col("emb"))
+              .as[(Long, Array[Float])]
+              .mapPartitions { it =>
+                val qs = bcQs.value
+                val bufs = Array.fill(qs.length)(new CellJoin.TopKBuf(kPrime))
+                var rows = 0L
+                it.foreach { case (cid, cemb) =>
+                  rows += 1
+                  var i = 0
+                  while (i < qs.length) { bufs(i).offer(cid, Embedder.dot(qs(i)._2, cemb)); i += 1 }
+                }
+                candAcc.add(rows * qs.length)
+                qs.indices.iterator.map(i => (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, rows))
+              }
+          else {
+            // INDEXED rescore: probe the maintained bucket index instead
+            // of scanning the corpus. Each (query, row) pair scores
+            // exactly once — in their FIRST shared band (the row's key
+            // prefix rules out earlier shares). At the design point the
+            // index is key-partitioned and this pass prunes to the probed
+            // buckets.
+            val bcQKeys = sc.broadcast(rescoreQs.map(q => bcGeom.value.keysOf(q._2)))
+            indexU.get.mapPartitions { it =>
+              val qs = bcQs.value; val qKeys = bcQKeys.value
+              val bufs = Array.fill(qs.length)(new CellJoin.TopKBuf(kPrime))
+              val cnts = new Array[Long](qs.length)
+              it.foreach { r =>
+                var i = 0
+                while (i < qs.length) {
+                  if (qKeys(i)(r.band) == r.key && !CellJoin.sharesBand(qKeys(i), r.prefix)) {
+                    bufs(i).offer(r.id, Embedder.dot(qs(i)._2, r.emb)); cnts(i) += 1
+                  }
+                  i += 1
+                }
+              }
+              var tot = 0L; cnts.foreach(tot += _); candAcc.add(tot)
+              qs.indices.iterator.map(i =>
+                (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, cnts(i)))
             }
-            candAcc.add(rows * qs.length)
-            qs.indices.iterator.map(i => (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, rows))
           }
+        partials
           .groupByKey(_._1)
           .reduceGroups { (x, y) =>
             val (ids, cs) = ScoredTopK.merge(x._2, x._3, y._2, y._3, kPrime)
@@ -669,55 +702,9 @@ object IncrementalAlign {
           .mapPartitions { it =>
             // one hash map per partition, not a linear bcQs scan per row
             val qEmb = bcQs.value.toMap
-            it.map { case (srcId, (_, ids, cs, corpusRows)) =>
-              // complete ⇔ the list covers the whole corpus — same
-              // convention as the bootstrap (corpusArr.length <= kPrime)
-              // and the indexed rescore (cands <= kPrime); the previous
-              // ids.length < kPrime diverged at |corpus| == kPrime
+            it.map { case (srcId, (_, ids, cs, count)) =>
               Maint(ScoredTopK.finish(srcId, qEmb(srcId), ids, cs, bcSample.value, tau,
-                complete = corpusRows <= kPrime),
-                bcOld.value.getOrElse(srcId, -1L), rescore = true)
-            }
-          }
-      else {
-        // INDEXED rescore: probe the maintained bucket index instead of
-        // scanning the corpus. Each (query, row) pair scores exactly
-        // once — in their FIRST shared band (the row's key prefix rules
-        // out earlier shares), so per-partition top-k slices are
-        // disjoint and merge exactly; candidate counts sum to the true
-        // candidate-set size, giving the completeness bit. At the
-        // design point the index is key-partitioned and this pass
-        // prunes to the probed buckets.
-        val bcQKeys = sc.broadcast(rescoreQs.map(q => bcGeom.value.keysOf(q._2)))
-        indexU.get
-          .mapPartitions { it =>
-            val qs = bcQs.value; val qKeys = bcQKeys.value
-            val bufs = Array.fill(qs.length)(new ScoredTopK.TopKBuf(kPrime))
-            val cnts = new Array[Long](qs.length)
-            it.foreach { r =>
-              var i = 0
-              while (i < qs.length) {
-                if (qKeys(i)(r.band) == r.key &&
-                    !BucketIndex.sharedEarlier(qKeys(i), r.prefix)) {
-                  bufs(i).offer(r.id, Embedder.dot(qs(i)._2, r.emb)); cnts(i) += 1
-                }
-                i += 1
-              }
-            }
-            var tot = 0L; cnts.foreach(tot += _); candAcc.add(tot)
-            qs.indices.iterator.map(i =>
-              (qs(i)._1, bufs(i).resultIds, bufs(i).resultCos, cnts(i)))
-          }
-          .groupByKey(_._1)
-          .reduceGroups { (x, y) =>
-            val (ids, cs) = ScoredTopK.merge(x._2, x._3, y._2, y._3, kPrime)
-            (x._1, ids, cs, x._4 + y._4)
-          }
-          .mapPartitions { it =>
-            val qEmb = bcQs.value.toMap
-            it.map { case (srcId, (_, ids, cs, cands)) =>
-              Maint(ScoredTopK.finish(srcId, qEmb(srcId), ids, cs, bcSample.value, tau,
-                complete = cands <= kPrime),
+                complete = count <= kPrime),
                 bcOld.value.getOrElse(srcId, -1L), rescore = true)
             }
           }

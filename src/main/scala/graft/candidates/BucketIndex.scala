@@ -1,7 +1,9 @@
 package graft.candidates
 
+import org.apache.spark.sql.Dataset
 import graft.kg.{Dims, Emb}
 import graft.embed.Embedder
+import CellJoin.CellRow
 
 /** Frozen LSH bucket-index geometry — the candidate-generation contract
   * of the INDEXED continuous-construction mode (IncrementalAlign with
@@ -23,13 +25,13 @@ import graft.embed.Embedder
   * the same exactness contract as the exact mode, relative to the
   * indexed candidate rule (gated in IncrementalSpec).
   *
-  * Geometry pieces reuse [[LshTopK]]'s machinery: seeded deterministic
-  * unit projections, mean-centering, banded FNV keys. `fit` mirrors
-  * LshTopK.topK's width derivation (wScale × per-coordinate residual
-  * std of the calibration sample) — but the result is COMMITTED in the
-  * alignment state rather than re-derived per call, because candidate
-  * membership must not drift as the corpus grows; a production system
-  * refreshes the geometry only on an explicit index rebuild. */
+  * The geometry is [[LshTopK]]'s (seeded deterministic unit projections,
+  * mean-centering, banded FNV keys, width = wScale × per-coordinate
+  * residual std of the calibration sample; LshTopK.topK fits it per
+  * call) — but here it is COMMITTED in the alignment state rather than
+  * re-derived per call, because candidate membership must not drift as
+  * the corpus grows; a production system refreshes the geometry only on
+  * an explicit index rebuild. */
 final case class IndexGeometry(bands: Int, rows: Int, width: Double,
                                seed: Long, center: Array[Float],
                                /** the width-scale `fit` was called with —
@@ -40,8 +42,7 @@ final case class IndexGeometry(bands: Int, rows: Int, width: Double,
                                  * from the one the frozen fit used */
                                wScale: Double = 1.0) {
   @transient private lazy val projs =
-    LshTopK.projections(LshTopK.LshConfig(bands = bands, rowsPerBand = rows, seed = seed),
-      center.length)
+    LshTopK.projections(bands, rows, seed, center.length)
 
   /** Band keys of one embedding under the frozen geometry. */
   def keysOf(emb: Array[Float]): Array[Long] = {
@@ -53,8 +54,8 @@ final case class IndexGeometry(bands: Int, rows: Int, width: Double,
 }
 
 object IndexGeometry {
-  /** Fit a geometry from the (deterministic, driver-side) calibration
-    * sample — same width rule as LshTopK.topK's auto mode. */
+  /** Fit a geometry from the (deterministic, driver-side, id-sorted)
+    * calibration sample. */
   def fit(sample: Array[Emb], bands: Int = 10, rows: Int = 2,
           wScale: Double = 1.0, seed: Long = Dims.Seed): IndexGeometry = {
     require(sample.nonEmpty, "IndexGeometry.fit: empty sample")
@@ -78,28 +79,12 @@ object BucketIndex {
   /** One committed index row: the corpus row's occurrence in band `band`
     * with its band-key prefix keys[0..band) — the prefix lets a probe
     * score each (query, row) pair exactly once (in their FIRST shared
-    * band), the same cross-band dedup as LshTopK's cogroup cells. At the
-    * design point this table is committed bucket-partitioned (TableIO
+    * band), the same cross-band dedup as LshTopK's cells. At the design
+    * point this table is committed bucket-partitioned (TableIO
     * partitionCols on a key bucket), so probes prune partitions instead
     * of scanning. */
   final case class IndexRow(band: Int, key: Long, id: Long,
                             emb: Array[Float], prefix: Array[Long])
-
-  /** true iff the pair shares any band (the candidate rule). */
-  def sharesBucket(qKeys: Array[Long], rKeys: Array[Long]): Boolean = {
-    val n = math.min(qKeys.length, rKeys.length)
-    var j = 0
-    while (j < n) { if (qKeys(j) == rKeys(j)) return true; j += 1 }
-    false
-  }
-
-  /** true iff the pair ALSO shares a band before `band` (dedup guard for
-    * an index row found via band `band`: `prefix` = r's keys[0..band)). */
-  def sharedEarlier(qKeys: Array[Long], prefix: Array[Long]): Boolean = {
-    var j = 0
-    while (j < prefix.length) { if (qKeys(j) == prefix(j)) return true; j += 1 }
-    false
-  }
 
   /** Exact cosine top-k of one query over the BUCKET-SHARING subset of a
     * driver-side corpus slice (keys precomputed, aligned with `corpus`).
@@ -108,11 +93,11 @@ object BucketIndex {
   def scoreShared(qEmb: Array[Float], qKeys: Array[Long],
                   corpus: Array[Emb], corpusKeys: Array[Array[Long]],
                   k: Int): (Array[Long], Array[Double], Long) = {
-    val buf = new ScoredTopK.TopKBuf(k)
+    val buf = new CellJoin.TopKBuf(k)
     var cands = 0L
     var i = 0
     while (i < corpus.length) {
-      if (sharesBucket(qKeys, corpusKeys(i))) {
+      if (CellJoin.sharesBand(qKeys, corpusKeys(i))) {
         buf.offer(corpus(i).id, Embedder.dot(qEmb, corpus(i).emb))
         cands += 1
       }
@@ -128,117 +113,46 @@ object BucketIndex {
       IndexRow(j, keys(j), id, emb, java.util.Arrays.copyOf(keys, j)))
   }
 
-  @inline def packKey(band: Int, key: Long): Long =
-    (band.toLong << 48) ^ (key & 0xffffffffffffL)
-
-  /** true iff the two band-key prefixes (both covering bands [0, band))
-    * share any earlier band — the cogroup form of [[sharedEarlier]],
-    * where the query side also carries only its prefix. */
-  @inline def sharedPrefix(p: Array[Long], r: Array[Long]): Boolean = {
-    var j = 0
-    while (j < p.length) { if (p(j) == r(j)) return true; j += 1 }
-    false
-  }
-
-  /** Deterministic order-statistics corpus sample in ONE distributed
-    * pass (LshTopK.countAndSample; same (hash(id), id) discipline as
-    * ScoredTopK.sampleIdsOf, so the returned rows — ascending by id —
-    * ARE the calibration sample of the corpus id set). */
-  def corpusSample(corpus: org.apache.spark.sql.Dataset[Emb], sampleSize: Int): Array[Emb] =
-    LshTopK.countAndSample(corpus, sampleSize)._2
-
   /** Distributed bootstrap scorer — the indexed twin of the exact
     * bootstrap's broadcast scorer, with NEITHER side collected: query
-    * probe rows (bands per query, same shape as [[IndexRow]]) cogroup
-    * with the index by (band, key); inside a cell each (query, row)
-    * pair scores exactly once — in their FIRST shared band (both
-    * prefixes cover bands [0, band), so [[sharedPrefix]] rules out
-    * earlier shares) — so per-cell top-k slices are disjoint and the
-    * reduceGroups merge is exact (ScoredTopK laws), and candidate
-    * counts sum to the true candidate-set size. Returns
+    * probe rows (bands per query, same shape as [[IndexRow]]) meet the
+    * index in the salted cell join ([[CellJoin]], one cell per
+    * (band, key), hot cells tiled past `cellCap`). Inside a cell each
+    * (query, row) pair scores exactly once — in their FIRST shared band
+    * (both prefixes cover bands [0, band)) — so per-cell top-k slices are
+    * disjoint, the reduceGroups merge is exact (ScoredTopK laws), and
+    * candidate counts sum to the true candidate-set size. Returns
     * (srcId, emb, topIds, topCos, candidateCount) for every query with
     * ≥1 candidate; callers emit empty-complete rows for the rest.
-    *
-    * SKEW: a hot bucket would concentrate |P|×|C| work in one task, so
-    * hot cells TILE — per-cell counts on both sides (two key-only jobs),
-    * cells over `cellCap` members split into ⌈n/cap⌉ deterministic hash
-    * tiles per side, and each (probe-tile, row-tile) pair becomes its
-    * own cogroup key: every (query, row) pair still meets exactly once
-    * (probe i fans over row tiles j, row j over probe tiles i — they
-    * meet at (i, j) only), per-task work is bounded at ~cap² scored
-    * pairs, and replication stays O(n/cap) per row — the bipartite form
-    * of PairBlocking's tiling, exactness property-gated in OperatorSpec.
-    *
-    * Scale note: shuffle carries bands× copies of each embedding — the
-    * same trade as LshTopK's banding; quantization is the production
-    * step down. */
-  def cogroupTopK(queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                  index: org.apache.spark.sql.Dataset[IndexRow],
+    * Scores stay full float: the shuffle carries bands× copies of each
+    * embedding — the same trade as LshTopK's banding. */
+  def cogroupTopK(queries: Dataset[(Long, Array[Float])], index: Dataset[IndexRow],
                   geom: IndexGeometry, kPrime: Int, cellCap: Int = 512)
-      : org.apache.spark.sql.Dataset[(Long, Array[Float], Array[Long], Array[Double], Long)] = {
+      : Dataset[(Long, Array[Float], Array[Long], Array[Double], Long)] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    require(cellCap > 0, "cellCap must be positive")
     val bcG = spark.sparkContext.broadcast(geom)
-    val probes = queries.flatMap { case (id, emb) => rowsOf(id, emb, bcG.value) }
-    // hot-cell inventory: (cell, probe tiles, row tiles) for cells where
-    // either side exceeds the cap — key-only aggregations, driver map is
-    // hot-cells-sized (≤ rows/cap entries) by construction
-    import org.apache.spark.sql.functions.col
-    def cellCounts(ds: org.apache.spark.sql.Dataset[IndexRow], name: String) =
-      ds.map(r => packKey(r.band, r.key)).groupByKey(identity).count().toDF("cell", name)
-    val hotMap: Map[Long, (Int, Int)] =
-      cellCounts(probes, "np").join(cellCounts(index, "nr"), Seq("cell"), "outer")
-        .na.fill(0L, Seq("np", "nr"))
-        .filter(col("np") > cellCap || col("nr") > cellCap)
-        .as[(Long, Long, Long)].collect()
-        .map { case (cell, np, nr) =>
-          cell -> (((np + cellCap - 1) / cellCap).toInt.max(1),
-                   ((nr + cellCap - 1) / cellCap).toInt.max(1))
-        }.toMap
-    val bcHot = spark.sparkContext.broadcast(hotMap)
-    @inline def tileOf(id: Long, t: Int): Int =
-      (graft.util.DetHash.nonNeg(graft.util.DetHash.h1(29L, id)) % t).toInt
-    val saltedProbes = probes.flatMap { p =>
-      val cell = packKey(p.band, p.key)
-      bcHot.value.get(cell) match {
-        case None => Iterator(((cell, 0, 0), p))
-        case Some((tp, tr)) =>
-          val i = tileOf(p.id, tp)
-          Iterator.tabulate(tr)(j => ((cell, i, j), p))
-      }
-    }
-    val saltedRows = index.flatMap { r =>
-      val cell = packKey(r.band, r.key)
-      bcHot.value.get(cell) match {
-        case None => Iterator(((cell, 0, 0), r))
-        case Some((tp, tr)) =>
-          val j = tileOf(r.id, tr)
-          Iterator.tabulate(tp)(i => ((cell, i, j), r))
-      }
-    }
-    saltedProbes.groupByKey(_._1)
-      .cogroup(saltedRows.groupByKey(_._1)) { (_, ps, rs) =>
-        val pa = ps.map(_._2).toArray
-        if (pa.isEmpty) Iterator.empty
-        else {
-          val ra = rs.map(_._2).toArray
-          pa.iterator.flatMap { p =>
-            val buf = new ScoredTopK.TopKBuf(kPrime)
-            var cands = 0L
-            var i = 0
-            while (i < ra.length) {
-              val r = ra(i)
-              if (!sharedPrefix(p.prefix, r.prefix)) {
-                buf.offer(r.id, Embedder.dot(p.emb, r.emb)); cands += 1
-              }
-              i += 1
-            }
-            if (cands == 0) Iterator.empty
-            else Iterator((p.id, p.emb, buf.resultIds, buf.resultCos, cands))
+    def cellRow(r: IndexRow) = CellRow(r.band, r.key, 0, r.id, r.emb, r.prefix)
+    val probes = queries.flatMap { case (id, emb) => rowsOf(id, emb, bcG.value).map(cellRow) }
+    val rows = index.map(cellRow)
+    def keys(ds: Dataset[_]) = ds.select($"band", $"key").as[(Int, Long)].rdd
+    val salts = CellJoin.hotCells(keys(probes), keys(index), cellCap)
+    CellJoin.join(probes, rows, salts) { (ps, ra) =>
+      ps.flatMap { p =>
+        val buf = new CellJoin.TopKBuf(kPrime)
+        var cands = 0L
+        var i = 0
+        while (i < ra.length) {
+          val r = ra(i)
+          if (!CellJoin.sharesBand(p.prefix, r.prefix)) {
+            buf.offer(r.id, Embedder.dot(p.emb, r.emb)); cands += 1
           }
+          i += 1
         }
+        if (cands == 0) Iterator.empty
+        else Iterator((p.id, p.emb, buf.resultIds, buf.resultCos, cands))
       }
+    }
       .groupByKey(_._1)
       .reduceGroups { (x, y) =>
         val (ids, cs) = ScoredTopK.merge(x._3, x._4, y._3, y._4, kPrime)

@@ -108,7 +108,7 @@ object DriftMonitor {
       while (i < dKeys.length) {
         var j = 0
         while (j < rKeys.length) {
-          if (BucketIndex.sharesBucket(dKeys(i), rKeys(j))) dHits += 1
+          if (CellJoin.sharesBand(dKeys(i), rKeys(j))) dHits += 1
           j += 1
         }
         i += 1
@@ -118,7 +118,7 @@ object DriftMonitor {
       while (i < rKeys.length) {
         var j = i + 1
         while (j < rKeys.length) {
-          if (BucketIndex.sharesBucket(rKeys(i), rKeys(j))) rHits += 1
+          if (CellJoin.sharesBand(rKeys(i), rKeys(j))) rHits += 1
           rPairs += 1
           j += 1
         }

@@ -1,11 +1,10 @@
 package graft.candidates
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
 import graft.embed.Embedder
-import graft.util.DetHash
+import CellJoin.CellRow
 
 /** IVF-blocked cosine top-k — the inverted-file alternative to
   * [[LshTopK]] for approximate-nearest-neighbor candidate generation
@@ -15,13 +14,13 @@ import graft.util.DetHash
   * bucket-join).
   *
   * Structure: a spherical k-means coarse quantizer (centroids trained on
-  * the driver over a DETERMINISTIC hash-chosen corpus sample reduced in
-  * sorted-id order — bit-identical at any parallelism, same discipline
-  * as LshTopK's bucket geometry) partitions the corpus into nCells
-  * inverted lists; each query probes its nProbe nearest centroids. A
-  * (query, corpus) pair meets in AT MOST ONE cell (a corpus row lives in
-  * exactly one list), so no cross-probe dedup is needed — unlike LSH
-  * banding, where a near pair collides in most bands.
+  * the driver over the deterministic corpus sample of
+  * [[CellJoin.countAndSample]], reduced in sorted-id order — bit-identical
+  * at any parallelism) partitions the corpus into nCells inverted lists;
+  * each query probes its nProbe nearest centroids. A (query, corpus) pair
+  * meets in AT MOST ONE list (a corpus row lives in exactly one), so no
+  * cross-probe dedup is needed — unlike LSH banding, where a near pair
+  * collides in most bands.
   *
   * vs LSH as the scale path: IVF's cells adapt to the data distribution
   * (k-means), so recall per probed row is higher on clustered corpora;
@@ -29,22 +28,15 @@ import graft.util.DetHash
   * Both are exposed; [[graft.Pipeline]] auto-selects LSH by default and
   * either can be forced.
   *
-  * Scale mechanics shared with LshTopK: vectors cross the cogroup
-  * shuffle 16-bit quantized; per-(cell) groups above bucketCap on either
-  * side are 2-D salt-tiled (each side hashes to its own salt, replicates
-  * across the other's), bounding per-task work and working set at
-  * O(cap²); partial top-ks merge in one narrow streaming pass; scores
-  * are RSM z-scores — the same scale as every other candidate path, so
-  * the canonicalization threshold is path-independent.
-  *
-  * Shuffle inventory: one keyed shuffle per side (corpus rows move once,
-  * query rows ≤ nProbe times), one narrow (src, dst, cos) merge shuffle,
-  * one narrow calibration join. Centroid broadcast is nCells × dim
-  * floats; auto nCells is min(√corpus, cellsMax, sample/32) — the
-  * sample coupling keeps the quantizer trained (≥32 samples/centroid,
-  * see [[autoCells]]) and incidentally keeps the broadcast tiny. The
-  * assignment scan is O(nCells × dim) per row — the known IVF tradeoff
-  * vs LSH's O(bands × rows × dim).
+  * Each inverted list is one cell of the shared salted cell join
+  * ([[CellJoin]]: hot-cell count, skew tiling, cogroup); scoring, the
+  * top-k merge and RSM calibration are LSH's ([[LshTopK.scoreCell]],
+  * [[LshTopK.rankAndCalibrate]]), so scores are on the same scale as every
+  * other candidate path. Centroid broadcast is nCells × dim floats; auto
+  * nCells is min(√corpus, cellsMax, sample/32) — the sample coupling
+  * keeps the quantizer trained (≥32 samples/centroid, see [[autoCells]]).
+  * The assignment scan is O(nCells × dim) per row — the known IVF
+  * tradeoff vs LSH's O(bands × rows × dim).
   */
 object IvfTopK {
 
@@ -60,8 +52,7 @@ object IvfTopK {
       /** corpus sample size for centroid training + RSM calibration. */
       sampleSize: Int = 4096,
       /** max rows (either side) of one cell before 2-D salt tiling. */
-      bucketCap: Int = 512,
-      seed: Long = Dims.Seed)
+      bucketCap: Int = 512)
 
   /** Minimum training samples per centroid for the auto cell count:
     * below ~32 the Lloyd pass memorizes individual sample rows instead
@@ -145,8 +136,6 @@ object IvfTopK {
     cents
   }
 
-  private val EmptyKeys = Array.empty[Long]
-
   def topK(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int,
            cfg: IvfConfig = IvfConfig()): Dataset[Candidate] =
     graft.util.JobDesc.withJobDesc(spark, "graft: IVF top-k candidates") {
@@ -158,98 +147,36 @@ object IvfTopK {
     import spark.implicits._
     val qP = queries.persist(StorageLevel.MEMORY_AND_DISK)
     val cP = corpus.persist(StorageLevel.MEMORY_AND_DISK)
-    // count + deterministic smallest-hash sample in ONE corpus pass
-    // (LshTopK.countAndSample — partitioning-independent order statistics)
-    val (nCorpus, sample) = LshTopK.countAndSample(cP, cfg.sampleSize)
+    val (nCorpus, sample) = CellJoin.countAndSample(cP, cfg.sampleSize)
     require(sample.nonEmpty, "IvfTopK: empty corpus")
     val nCells =
       if (cfg.nCells > 0) cfg.nCells // explicit: caller owns sample quality
       else autoCells(nCorpus, sample.length, cfg.cellsMax)
     val centsBc = spark.sparkContext.broadcast(
       trainCentroids(sample, math.min(nCells, sample.length), cfg.lloydIters))
-    val negBc = spark.sparkContext.broadcast(
-      sample.indices.collect { case i if i % 8 == 0 => sample(i).emb }.toArray)
 
-    // corpus rows land in exactly one inverted list; queries probe nProbe
-    val cCells: Dataset[(Int, Long, Array[Short])] = cP.mapPartitions { it =>
+    // corpus rows land in exactly one inverted list; queries probe nProbe.
+    // A pair meets in at most one list, so rows carry no band prefix.
+    val empty = Array.emptyLongArray
+    val cCells = cP.mapPartitions { it =>
       val cents = centsBc.value
-      it.map(e => (nearestCell(e.emb, cents), e.id, LshTopK.quantize(e.emb)))
-    }
-    val qCells: Dataset[(Int, Long, Array[Short])] = qP.mapPartitions { it =>
+      it.map(e => CellRow(0, nearestCell(e.emb, cents).toLong, 0, e.id, LshTopK.quantize(e.emb), empty))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    val qCells = qP.mapPartitions { it =>
       val cents = centsBc.value
       it.flatMap { e =>
         val q16 = LshTopK.quantize(e.emb)
-        probeCells(e.emb, cents, cfg.nProbe).iterator.map(c => (c, e.id, q16))
+        probeCells(e.emb, cents, cfg.nProbe).iterator.map(c => CellRow(0, c.toLong, 0, e.id, q16, empty))
       }
-    }
-    // persist: both feed the fused hot-count job AND the cogroup
-    val qPc = qCells.persist(StorageLevel.MEMORY_AND_DISK)
-    val cPc = cCells.persist(StorageLevel.MEMORY_AND_DISK)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // --- 2-D salt tiling from per-side cell counts (one fused job) ---
-    val hot = qPc.toDF("cell", "id", "emb").select(lit(0).as("side"), col("cell"))
-      .unionByName(cPc.toDF("cell", "id", "emb").select(lit(1).as("side"), col("cell")))
-      .groupBy("side", "cell").count()
-      .filter(col("count") > cfg.bucketCap)
-      .as[(Int, Int, Long)].collect()
-    def saltMap(side: Int): Map[Int, Int] = hot.iterator.filter(_._1 == side)
-      .map { case (_, cell, n) => (cell, math.ceil(n.toDouble / cfg.bucketCap).toInt) }.toMap
-    val saltsQ = saltMap(0)
-    val saltsC = saltMap(1)
-    val saltsQBc = spark.sparkContext.broadcast(saltsQ)
-    val saltsCBc = spark.sparkContext.broadcast(saltsC)
-    // derived, never-aliasing cell-id base (see LshTopK: a constant base
-    // double-scores pairs once a degenerate cell needs more salts)
-    val saltBase = math.max(1, saltsC.valuesIterator.maxOption.getOrElse(1))
-
-    val cbS = cPc.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (cell, id, emb) =>
-        val sc = (DetHash.h1(7, id) % mC.getOrElse(cell, 1)).toInt.abs
-        val sq = mQ.getOrElse(cell, 1)
-        Iterator.tabulate(sq)(q => (cell, q * saltBase + sc, id, emb))
-      }
-    }
-    val qbS = qPc.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (cell, id, emb) =>
-        val sq = (DetHash.h1(11, id) % mQ.getOrElse(cell, 1)).toInt.abs
-        val sc = mC.getOrElse(cell, 1)
-        Iterator.tabulate(sc)(c => (cell, sq * saltBase + c, id, emb))
-      }
-    }
-    val scored = qbS.groupByKey(r => (r._1, r._2))
-      .cogroup(cbS.groupByKey(r => (r._1, r._2))) { case (_, qs, cs) =>
-        val rows = cs.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val cell = new LshTopK.Cell(rows.map(_._3), rows.map(_._4),
-            Array.fill(rows.length)(EmptyKeys))
-          qs.flatMap { case (_, _, src, qe) =>
-            LshTopK.topkCell(k, EmptyKeys, qe, cell).map { case (s, dst) => (src, dst, s) }
-          }
-        }
-      }
-
-    // merge partial top-ks: each (src, dst) pair arrives at most once;
-    // LshTopK.mergeTopK aggregates MAP-SIDE (≤ one k-row partial per
-    // source per map partition crosses the merge shuffle)
-    val ranked = LshTopK.mergeTopK(scored, k)
-
-    val calib = LshTopK.rsmCalib(qP, negBc)
-    val result = ranked.toDF("srcId", "dstId", "cos", "rank")
-      .join(calib.toDF("srcId", "mu", "sigma"), "srcId")
-      .as[(Long, Long, Double, Int, Double, Double)]
-      .map { case (src, dst, cos, r, mu, sigma) =>
-        Candidate(src, dst, graft.align.MoCoTrainer.rsmScore(cos, mu, sigma), r) }
-      // the candidate table (≤ queries × k narrow rows) is the smallest
-      // artifact of this operator and is re-consumed by several
-      // downstream actions — persist IT, then drop the four heavy
-      // intermediates so repeated calls in one session (the 42-query
-      // battery, spec suites) don't accumulate cached blocks (ADVICE r2)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize before releasing what it was built from
-    Seq(qPc, cPc, qP, cP).foreach(_.unpersist(blocking = false))
+    // both cell sets feed the hot-cell count AND the cell join
+    def keys(ds: Dataset[CellRow[Array[Short]]]) =
+      ds.select($"band", $"key").as[(Int, Long)].rdd
+    val salts = CellJoin.hotCells(keys(qCells), keys(cCells), cfg.bucketCap)
+    val scored = CellJoin.join(qCells, cCells, salts)(LshTopK.scoreCell(k))
+    val result = LshTopK.rankAndCalibrate(scored, qP, sample, k)
+    Seq(qCells, cCells, qP, cP).foreach(_.unpersist(blocking = false))
     result
   }
 }

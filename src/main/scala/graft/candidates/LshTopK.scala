@@ -1,86 +1,65 @@
 package graft.candidates
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
 import graft.embed.Embedder
 import graft.util.DetHash
+import CellJoin.CellRow
 
-/** LSH-blocked salted cosine top-k — the 10^12-scale candidate path.
+/** LSH-blocked cosine top-k — the 10^12-scale candidate path.
   *
   * Blocking is bucketed-random-projection LSH (the algorithm of
   * org.apache.spark.ml.feature.BucketedRandomProjectionLSH — bucket id =
   * floor(x·v / w) — computed inline over primitive float arrays: the
   * mllib class routes every row through VectorUDT (de)serialization and
-  * UDF boundaries, measured at ~20× the arithmetic itself). Projections
-  * are seeded DetHash Gaussians → deterministic at any parallelism.
-  *
-  * Pre-hash the vectors are MEAN-CENTERED and the bucket width is
-  * wScale × the measured per-coordinate residual std: text-feature
-  * corpora share a large common direction, and a fixed width put 92% of
-  * brute-force pair work in a handful of buckets. Mean/std come from a
-  * DETERMINISTIC hash-chosen corpus sample reduced in sorted-id order on
-  * the driver, so the bucket geometry is bit-identical at any
-  * parallelism level (N-vs-4N determinism; a distributed float reduction
-  * would sum in partition order). `rowsPerBand` bucket ids compound into
-  * one band key (banding), OR-ed across `bands` bands for recall:
+  * UDF boundaries, measured at ~20× the arithmetic itself). The geometry
+  * is [[IndexGeometry.fit]] over a deterministic corpus sample
+  * ([[CellJoin.countAndSample]]): seeded DetHash unit projections, vectors
+  * mean-centered before hashing, width = the per-coordinate residual std
+  * (text-feature corpora share a large common direction, and a fixed
+  * width put 92% of brute-force pair work in a handful of buckets). The
+  * fit reduces the sample in sorted-id order on the driver, so the
+  * geometry is bit-identical at any parallelism. `RowsPerBand` bucket ids
+  * compound into one band key, OR-ed across `Bands` bands for recall:
   * p_hit = 1 - (1 - p^rows)^bands.
   *
-  * SCORE SEMANTICS match [[ExactTopK]]: candidates carry the RSM
-  * z-score — cosine calibrated against the negative-distribution
-  * estimate (cos - mu)/sigma, with per-source mu/sigma computed against
-  * a deterministic same-corpus negative sample (the paper's relative
-  * similarity metric; SURVEY.md §2.9 note). Per-source ranking is raw
-  * cosine (z-score is monotone in it); the absolute score feeds the
-  * pipeline's canonicalization acceptance threshold, so both candidate
-  * paths must emit the same scale — raw cosine here silently disabled
-  * all merges when the LSH path was selected.
+  * Each band bucket is one cell of the shared salted cell join
+  * ([[CellJoin]], which owns skew tiling and the hot-cell count); a pair
+  * is scored only in the first band it shares. Vectors cross the cell
+  * shuffle 16-bit quantized ([[quantize]], [[dotQ]]).
   *
-  * Skew (north rule: handled explicitly) is 2-D SALT TILING: a
-  * (band, key) group whose corpus side exceeds bucketCap or whose query
-  * side exceeds bucketCap is tiled into ceil(c_b/cap) × ceil(q_b/cap)
-  * cells; each side hashes to its own salt and replicates across the
-  * other side's salts, so every (query, corpus) pair meets in exactly
-  * one cell. Per-task work AND working set are O(cap²) — cells stay
-  * CPU-cache-resident, which measured ~5× faster per pair than scanning
-  * a hot bucket's full row set (a broadcast-hot-bucket variant walked
-  * 14 MB per query and was DRAM-bound). Replication shuffle volume is
-  * O(pair_work / cap) rows; banded inputs are repartitioned first so
-  * the replication serialization spreads across all cores instead of
-  * pinning to the partitions that hold hot rows. Both sides' hot-bucket
-  * counts come from ONE fused job over a key-only projection.
+  * SCORE SEMANTICS match [[ExactTopK]]: candidates carry the RSM z-score
+  * (cos - mu)/sigma against a deterministic same-corpus negative sample
+  * (the paper's relative similarity metric; SURVEY.md §2.9 note).
+  * Per-source ranking is raw cosine (z is monotone in it); the absolute
+  * score feeds the canonicalization acceptance threshold, so every
+  * candidate path must emit the same scale.
   *
   * Shuffle inventory: one keyed shuffle of each side (embedding arrays
-  * move ≤ salts times), then one narrow (src, dst, score) shuffle for
-  * the merge, then one narrow join with the per-source calibration rows.
-  * Pair rows never materialize.
+  * move ≤ salts times), one narrow (src, dst, score) shuffle for the
+  * merge, one narrow join with the per-source calibration rows. Pair rows
+  * never materialize.
   */
 object LshTopK {
 
-  final case class LshConfig(
-      bands: Int = 10,
-      rowsPerBand: Int = 2,
-      /** <= 0 means auto: wScale × measured residual std per coordinate */
-      bucketLength: Double = 0.0,
-      /** bucket width in units of measured projection std (auto mode) */
-      wScale: Double = 1.0,
-      /** max rows (either side) of one (band,key) before 2-D tiling.
-        * 512 → ≤0.26M pairs per cell: enough cells that the cogroup's
-        * hash partitioning spreads them evenly (cap 1000 left single
-        * 13-21 s straggler tasks pacing the whole stage at 32 cores). */
-      bucketCap: Int = 512,
-      /** corpus sample size for mean/std + RSM calibration */
-      sampleSize: Int = 4096,
-      seed: Long = Dims.Seed)
+  final val Bands = 10
+  final val RowsPerBand = 2
+  /** Max rows (either side) of one band bucket before tiling. 512 →
+    * ≤0.26M pairs per cell: enough cells that the cogroup's hash
+    * partitioning spreads them evenly (cap 1000 left single 13-21 s
+    * straggler tasks pacing the whole stage at 32 cores). */
+  final val BucketCap = 512
+  /** corpus sample size for the geometry fit and RSM calibration */
+  final val SampleSize = 4096
 
   /** Deterministic UNIT projection matrix (bands×rows, dim). */
-  def projections(cfg: LshConfig, dim: Int): Array[Array[Float]] =
-    Array.tabulate(cfg.bands * cfg.rowsPerBand) { p =>
+  def projections(bands: Int, rows: Int, seed: Long, dim: Int): Array[Array[Float]] =
+    Array.tabulate(bands * rows) { p =>
       val v = Array.tabulate(dim) { i =>
         var s = 0.0
         var k = 0
-        while (k < 4) { s += DetHash.toUnit(DetHash.h3(cfg.seed, p.toLong, i.toLong, k.toLong)); k += 1 }
+        while (k < 4) { s += DetHash.toUnit(DetHash.h3(seed, p.toLong, i.toLong, k.toLong)); k += 1 }
         ((s - 2.0) * math.sqrt(3.0)).toFloat
       }
       Embedder.l2normalize(v)
@@ -103,24 +82,6 @@ object LshTopK {
       j += 1
     }
     out
-  }
-
-  @inline private def packKey(band: Int, key: Long): Long =
-    (band.toLong << 48) ^ (key & 0xffffffffffffL)
-
-  /** true iff the pair already met (and was scored) in an earlier band:
-    * both sides carry their band-key PREFIX up to the current band, so a
-    * handful of long compares replaces a duplicate dim-length dot — a
-    * strongly-similar pair collides in most of the 10 bands and was
-    * scored 10× before this dedup. */
-  @inline private def scoredEarlier(qk: Array[Long], ck: Array[Long]): Boolean = {
-    val n = math.min(qk.length, ck.length)
-    var j = 0
-    while (j < n) {
-      if (qk(j) == ck(j)) return true
-      j += 1
-    }
-    false
   }
 
   /** Scoring vectors travel the cogroup shuffle QUANTIZED to 16 bits:
@@ -175,40 +136,29 @@ object LshTopK {
     s.toDouble / (QScale.toDouble * QScale)
   }
 
-  /** Corpus side of one scoring cell as parallel primitive arrays — no
-    * per-element tuple boxing in the inner loop. Shared with [[IvfTopK]]
-    * (which passes empty key prefixes — no cross-band dedup needed). */
-  private[candidates] final class Cell(val ids: Array[Long], val embs: Array[Array[Short]],
-                                       val keys: Array[Array[Long]]) {
-    def size: Int = ids.length
-  }
-
-  /** Sorted primitive top-k insertion buffer (descending score, ties to
-    * the smaller id — mirrors ExactTopK so results are independent of
-    * encounter order). k ≤ 10: linear insert into parallel primitive
-    * arrays; boxed PriorityQueue/sortBy comparators in these loops
-    * dominated jstack samples and anti-scaled at 32 threads. */
-  private[graft] final class TopKBuf(k: Int) {
-    val ss = new Array[Double](k)
-    val ids = new Array[Long](k)
-    var n = 0
-    def offer(s: Double, cid: Long): Unit = {
-      if (n < k || s > ss(n - 1) || (s == ss(n - 1) && cid < ids(n - 1))) {
-        var p = if (n < k) n else n - 1
-        while (p > 0 && (ss(p - 1) < s || (ss(p - 1) == s && ids(p - 1) > cid))) {
-          ss(p) = ss(p - 1); ids(p) = ids(p - 1); p -= 1
-        }
-        ss(p) = s; ids(p) = cid
-        if (n < k) n += 1
+  /** Scores one cell of quantized rows: each query's top-k over the
+    * corpus rows it has not met in an earlier band (IVF rows carry empty
+    * prefixes, so every pair scores). Primitive arrays, no per-element
+    * tuple boxing in the inner loop. */
+  private[candidates] def scoreCell(k: Int)(qs: Iterator[CellRow[Array[Short]]],
+      cell: Array[CellRow[Array[Short]]]): Iterator[(Long, Long, Double)] = {
+    val ids = cell.map(_.id); val embs = cell.map(_.emb); val keys = cell.map(_.prefix)
+    qs.flatMap { q =>
+      val buf = new CellJoin.TopKBuf(k)
+      var i = 0
+      while (i < ids.length) {
+        if (!CellJoin.sharesBand(q.prefix, keys(i))) buf.offer(ids(i), dotQ(q.emb, embs(i)))
+        i += 1
       }
+      Iterator.tabulate(buf.n)(j => (q.id, buf.ids(j), buf.cs(j)))
     }
   }
 
   /** Map-side partial top-k merge over scored (src, dst, score) rows —
     * each map partition reduces its rows to ≤ one k-row partial per
-    * source via a per-partition hash of [[TopKBuf]]s, so the merge
-    * shuffle carries partials (≤ k rows per (source, partition)), NOT
-    * every surviving candidate row (44.5M rows / 0.68 GB at E=50k —
+    * source via a per-partition hash of [[CellJoin.TopKBuf]]s, so the
+    * merge shuffle carries partials (≤ k rows per (source, partition)),
+    * NOT every surviving candidate row (44.5M rows / 0.68 GB at E=50k —
     * measured the second-largest shuffle write of the whole pipeline).
     * Hand-rolled mapPartitions instead of a typed Aggregator on
     * purpose: ObjectHashAggregateExec falls back to SORT-based
@@ -216,280 +166,131 @@ object LshTopK {
     * (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
     * with thousands of sources per partition a typed-Aggregator
     * version sorted the full scored stream inside the scoring stage
-    * (measured ~4× that stage's task-time). Exactness: the buffer law
-    * (descending score, ties to the smaller id) makes insertion order
-    * irrelevant, so partial/merge composition equals the single-pass
-    * result — property-gated in OperatorSpec at 1/3/16 partitions.
+    * (measured ~4× that stage's task-time). Exactness: the buffer's
+    * total order makes insertion order irrelevant, so partial/merge
+    * composition equals the single-pass result — property-gated in
+    * OperatorSpec at 1/3/16 partitions.
     * Memory: |sources-per-partition| × O(k) primitive arrays. */
   private[graft] def mergeTopK(scored: Dataset[(Long, Long, Double)], k: Int): Dataset[(Long, Long, Double, Int)] = {
     val spark = scored.sparkSession
     import spark.implicits._
     scored.mapPartitions { it =>
-      val m = new java.util.HashMap[Long, TopKBuf]()
+      val m = new java.util.HashMap[Long, CellJoin.TopKBuf]()
       it.foreach { r =>
         var buf = m.get(r._1)
-        if (buf == null) { buf = new TopKBuf(k); m.put(r._1, buf) }
-        buf.offer(r._3, r._2)
+        if (buf == null) { buf = new CellJoin.TopKBuf(k); m.put(r._1, buf) }
+        buf.offer(r._2, r._3)
       }
       val em = m.entrySet().iterator()
       new Iterator[(Long, Array[Long], Array[Double])] {
         def hasNext: Boolean = em.hasNext
         def next(): (Long, Array[Long], Array[Double]) = {
           val e = em.next(); val b = e.getValue
-          (e.getKey, java.util.Arrays.copyOf(b.ids, b.n), java.util.Arrays.copyOf(b.ss, b.n))
+          (e.getKey, b.resultIds, b.resultCos)
         }
       }
     }
     .groupByKey(_._1)
     .flatMapGroups { (src, it) =>
-      val buf = new TopKBuf(k)
+      val buf = new CellJoin.TopKBuf(k)
       it.foreach { case (_, ids, ss) =>
         var j = 0
-        while (j < ids.length) { buf.offer(ss(j), ids(j)); j += 1 }
+        while (j < ids.length) { buf.offer(ids(j), ss(j)); j += 1 }
       }
-      Iterator.tabulate(buf.n)(j => (src, buf.ids(j), buf.ss(j), j + 1))
+      Iterator.tabulate(buf.n)(j => (src, buf.ids(j), buf.cs(j), j + 1))
     }
   }
 
-  /** Top-k of one query against a cell: allocation-free inner loop. */
-  private[candidates] def topkCell(k: Int, qKeys: Array[Long], qe: Array[Short],
-                                   cell: Cell): Iterator[(Double, Long)] = {
-    val buf = new TopKBuf(k)
-    var i = 0
-    val m = cell.size
-    while (i < m) {
-      if (!scoredEarlier(qKeys, cell.keys(i))) {
-        buf.offer(dotQ(qe, cell.embs(i)), cell.ids(i))
-      }
-      i += 1
+  /** The tail shared with [[IvfTopK]]: merge the scored cells to each
+    * source's top-k ([[mergeTopK]]) and z-score them against per-source
+    * RSM moments over every 8th sample row (~512). The calibration rows
+    * are queries-scale, so they are joined, not broadcast. The returned
+    * candidate table (≤ queries × k narrow rows) is persisted and
+    * materialized, so callers can release the inputs it was built from. */
+  private[candidates] def rankAndCalibrate(scored: Dataset[(Long, Long, Double)],
+      queries: Dataset[Emb], sample: Array[Emb], k: Int): Dataset[Candidate] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val negBc = spark.sparkContext.broadcast(
+      sample.indices.collect { case i if i % 8 == 0 => sample(i) }.toArray)
+    val calib = queries.map { q =>
+      val (mu, sigma) = CellJoin.calib(q.emb, negBc.value)
+      (q.id, mu, sigma)
     }
-    Iterator.tabulate(buf.n)(j => (buf.ss(j), buf.ids(j)))
+    val result = mergeTopK(scored, k).toDF("srcId", "dstId", "cos", "rank")
+      .join(calib.toDF("srcId", "mu", "sigma"), "srcId")
+      .as[(Long, Long, Double, Int, Double, Double)]
+      .map { case (src, dst, cos, r, mu, sigma) =>
+        Candidate(src, dst, graft.align.MoCoTrainer.rsmScore(cos, mu, sigma), r) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    result.count()
+    result
   }
 
-  /** Per-source RSM calibration rows (id, mu, sigma): Welford moments of
-    * each query's cosine against the broadcast negative sample — the
-    * relative-similarity-metric denominator shared by every candidate
-    * path (LSH, IVF; the exact path fuses it into its scan). */
-  private[candidates] def rsmCalib(
-      queries: Dataset[Emb],
-      negBc: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]): Dataset[(Long, Double, Double)] = {
-    import queries.sparkSession.implicits._
-    queries.mapPartitions { it =>
-      val negs = negBc.value
-      it.map { q =>
-        var mu = 0.0; var m2 = 0.0; var n = 0L
-        var i = 0
-        while (i < negs.length) {
-          val s = Embedder.dot(q.emb, negs(i))
-          n += 1; val d = s - mu; mu += d / n; m2 += d * (s - mu)
-          i += 1
-        }
-        val sigma = if (n > 1) math.sqrt(m2 / (n - 1)) else 1.0
-        (q.id, mu, sigma)
-      }
-    }
-  }
-
-  /** One pass over `ds` returning (row count, deterministic sample):
-    * the sample is the `sampleSize` rows with the SMALLEST
-    * (hash(id), id) — order statistics under a total order, so
-    * membership is independent of partitioning AND of the corpus size
-    * (a rate-filter needs the count first, forcing a second full scan;
-    * at the design point one scan of a billion-row corpus is the
-    * difference). treeAggregate merges the bounded partials
-    * executor-side, so the driver receives one ≤sampleSize buffer, not
-    * partitions × sampleSize. Returned rows are sorted by id (the
-    * driver-deterministic reduction order downstream code relies on). */
-  private[candidates] def countAndSample(ds: Dataset[Emb], sampleSize: Int): (Long, Array[Emb]) = {
-    type Acc = (Long, scala.collection.mutable.ArrayBuffer[(Long, Emb)])
-    def compact(v: scala.collection.mutable.ArrayBuffer[(Long, Emb)]) = {
-      val a = v.sortBy(t => (t._1, t._2.id)); a.takeInPlace(sampleSize); a
-    }
-    val (n, top) = ds.rdd.treeAggregate[Acc]((0L, scala.collection.mutable.ArrayBuffer.empty))(
-      seqOp = { case ((n, v), e) =>
-        v += ((DetHash.nonNeg(DetHash.h1(13L, e.id)), e))
-        (n + 1, if (v.length >= 2 * sampleSize) compact(v) else v)
-      },
-      combOp = { case ((n1, v1), (n2, v2)) => (n1 + n2, compact(v1 ++= v2)) })
-    (n, compact(top).map(_._2).toArray.sortBy(_.id))
-  }
-
-  def topK(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int,
-           cfg: LshConfig = LshConfig()): Dataset[Candidate] =
+  def topK(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int): Dataset[Candidate] =
     graft.util.JobDesc.withJobDesc(spark, "graft: LSH top-k candidates") {
-      topKImpl(spark, queries, corpus, k, cfg)
+      topKImpl(spark, queries, corpus, k)
     }
 
-  private def topKImpl(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb], k: Int,
-           cfg: LshConfig): Dataset[Candidate] = {
+  private def topKImpl(spark: SparkSession, queries: Dataset[Emb], corpus: Dataset[Emb],
+                       k: Int): Dataset[Candidate] = {
     import spark.implicits._
     // this operator drives several actions over its inputs — persist
     // them so upstream stages (extraction, GAT encode) run exactly once
     val qP = queries.persist(StorageLevel.MEMORY_AND_DISK)
     val cP = corpus.persist(StorageLevel.MEMORY_AND_DISK)
-    // count + deterministic sample in ONE corpus pass (see countAndSample)
-    val (nCorpus, sample) = countAndSample(cP, cfg.sampleSize)
+    val (nCorpus, sample) = CellJoin.countAndSample(cP, SampleSize)
     require(sample.nonEmpty, "LshTopK: empty corpus")
     val dim = sample(0).emb.length
-    val projsBc = spark.sparkContext.broadcast(projections(cfg, dim))
-    val (bands, rows) = (cfg.bands, cfg.rowsPerBand)
+    val geomBc = spark.sparkContext.broadcast(IndexGeometry.fit(sample, Bands, RowsPerBand))
 
-    val mean = new Array[Float](dim)
-    val w = {
-      val acc = new Array[Double](dim); var sq = 0.0
-      sample.foreach { e =>
-        var i = 0
-        while (i < dim) { acc(i) += e.emb(i); sq += e.emb(i).toDouble * e.emb(i); i += 1 }
-      }
-      val n = sample.length
-      var i = 0
-      while (i < dim) { mean(i) = (acc(i) / n).toFloat; i += 1 }
-      val residVar = math.max(1e-12, sq / n - mean.map(x => x.toDouble * x).sum)
-      if (cfg.bucketLength > 0) cfg.bucketLength else cfg.wScale * math.sqrt(residVar / dim)
-    }
-    val meanBc = spark.sparkContext.broadcast(mean)
-    // negative-distribution sample for RSM calibration (every 8th → ~512)
-    val negBc = spark.sparkContext.broadcast(
-      sample.indices.collect { case i if i % 8 == 0 => sample(i).emb }.toArray)
-
-    // each occurrence carries its band-key PREFIX keys[0..j): the scoring
-    // cell uses it to skip pairs already scored in an earlier band
+    // each occurrence carries its band-key PREFIX keys[0..j): the cell
+    // scorer uses it to skip pairs already scored in an earlier band
     // (avg bands/2 longs per row — small next to the embedding itself)
-    def banded(ds: Dataset[Emb]): Dataset[(Int, Long, Long, Array[Short], Array[Long])] =
+    def banded(ds: Dataset[Emb]): Dataset[CellRow[Array[Short]]] =
       ds.mapPartitions { it =>
-        val ps = projsBc.value
-        val mn = meanBc.value
+        val g = geomBc.value
         it.flatMap { e =>
-          val centered = new Array[Float](dim)
-          var i = 0
-          while (i < dim) { centered(i) = e.emb(i) - mn(i); i += 1 }
-          val keys = bandKeysOf(centered, ps, w, bands, rows)
+          val keys = g.keysOf(e.emb)
           val q16 = quantize(e.emb)
-          Iterator.tabulate(bands)(j =>
-            (j, keys(j), e.id, q16, java.util.Arrays.copyOf(keys, j)))
+          Iterator.tabulate(Bands)(j =>
+            CellRow(j, keys(j), 0, e.id, q16, java.util.Arrays.copyOf(keys, j)))
         }
       }
 
-    // spread the salting/replication serialization across all cores —
+    // Spread the salting/replication serialization across all cores —
     // without this the map work pins to the partitions holding hot rows.
     // The spread shuffle moves the RAW Emb rows (1× the vectors), not the
     // banded rows (bands× the vectors): banding fans out uniformly, so
     // repartitioning before it buys the same balance at ~1/bands the
-    // shuffle bytes (the banded repartition was one of two full banded
-    // shuffles — ~1 GB/side at 100k×256 — and shuffle IO is what
-    // saturates memory bandwidth at 32 threads).
-    // The banded sets are NOT persisted (round 6): their only consumer
-    // is the salted cogroup below — the bucket-count job now reads a
-    // KEYS-ONLY banding pass over the raw persisted inputs instead
-    // (20 projection dots per row, no quantize/prefix materialization),
-    // so the in-memory columnar cache build of the ~bands×-expanded
-    // banded frames (~45 CPU-s of ColumnBuilder work at E=50k,
-    // tools/CpuProfile, plus its GC pressure) buys nothing.
+    // shuffle bytes. The banded sets are NOT persisted: their only
+    // consumer is the cell join; the hot-cell count reads a KEYS-ONLY
+    // banding pass over the persisted inputs (20 projection dots per row,
+    // no quantize/prefix materialization), so a columnar cache build of
+    // the ~bands×-expanded frames (~45 CPU-s at E=50k, tools/CpuProfile)
+    // buys nothing.
     // The partition count is DATA-derived (~64 MB of banded rows per
     // partition), floored by the session parallelism — NOT a multiple of
     // core count: the shuffle-write path carries a real per-output-
     // partition cost (round-3 stack profile: 93% of map-task samples in
     // BypassMergeSortShuffleWriter's LZ4-flush/write chain; 4× the
-    // partitions measured 2.3× the task-seconds for identical rows), so
-    // over-partitioning small data wastes exactly the resource this
-    // operator is bound by, while at the 100-TB design point the byte
-    // target keeps partitions bounded and spill-free regardless of
-    // cluster width.
-    val bandedBytes = nCorpus * cfg.bands * (dim * 2L + 8L * cfg.bands / 2 + 48)
+    // partitions measured 2.3× the task-seconds for identical rows).
+    val bandedBytes = nCorpus * Bands * (dim * 2L + 8L * Bands / 2 + 48)
     val spread = math.max(spark.sparkContext.defaultParallelism,
       (bandedBytes / (64L << 20)).toInt + 1)
-    val qb = banded(qP.repartition(spread))
-    val cb = banded(cP.repartition(spread))
 
-    // --- 2-D salt tiling from per-side bucket counts (ONE fused job) ---
-    // RDD reduceByKey, not a DataFrame groupBy: the key-only count is a
-    // fixed per-run action, and with AQE on, the groupBy form ran as 3
-    // driver-scheduled query-stage jobs plus a codegen compile — pure
-    // serial floor at small rungs. This form is one job (map-side
-    // combine + one narrow count shuffle), identical result set —
-    // band-key counts are a pure function of the rows, independent of
-    // which side/partitioning computes them.
-    def bandKeyRows(ds: Dataset[Emb], side: Int) = ds.rdd.mapPartitions { it =>
-      val ps = projsBc.value
-      val mn = meanBc.value
-      it.flatMap { e =>
-        val centered = new Array[Float](dim)
-        var i = 0
-        while (i < dim) { centered(i) = e.emb(i) - mn(i); i += 1 }
-        val keys = bandKeysOf(centered, ps, w, bands, rows)
-        Iterator.tabulate(bands)(j => ((side, j, keys(j)), 1L))
-      }
+    def bandKeys(ds: Dataset[Emb]) = ds.rdd.mapPartitions { it =>
+      val g = geomBc.value
+      it.flatMap { e => val keys = g.keysOf(e.emb); Iterator.tabulate(Bands)(j => (j, keys(j))) }
     }
-    val hot = bandKeyRows(qP, 0)
-      .union(bandKeyRows(cP, 1))
-      .reduceByKey(_ + _, spark.sparkContext.defaultParallelism)
-      .filter(_._2 > cfg.bucketCap)
-      .map { case ((s, b, key), n) => (s, b, key, n) }
-      .collect()
-    def saltMap(side: Int): Map[Long, Int] = hot.iterator.filter(_._1 == side)
-      .map { case (_, b, key, n) =>
-        (packKey(b, key), math.ceil(n.toDouble / cfg.bucketCap).toInt) }.toMap
-    val saltsQ = saltMap(0)
-    val saltsC = saltMap(1)
-    val saltsQBc = spark.sparkContext.broadcast(saltsQ)
-    val saltsCBc = spark.sparkContext.broadcast(saltsC)
-    // cell id = qSalt * saltBase + cSalt. The base must exceed every
-    // corpus-side salt count — a CONSTANT base would alias neighboring
-    // q-slots once one degenerate bucket needs more salts than it
-    // (> base × cap rows), silently double-scoring those pairs; derived
-    // from the actual counts it can never overflow.
-    val saltBase = math.max(1, saltsC.valuesIterator.maxOption.getOrElse(1))
+    val salts = CellJoin.hotCells(bandKeys(qP), bandKeys(cP), BucketCap)
+    // cross-band dedup guarantees each (src, dst) is scored at most once
+    val scored = CellJoin.join(banded(qP.repartition(spread)), banded(cP.repartition(spread)),
+      salts)(scoreCell(k))
 
-    // each side hashes to its own salt and replicates across the other
-    // side's salts: every (q, c) pair meets in exactly one (sq, sc) cell
-    val cbS = cb.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (b, key, id, emb, keys) =>
-        val sc = (DetHash.h1(7, id) % mC.getOrElse(packKey(b, key), 1)).toInt.abs
-        val sq = mQ.getOrElse(packKey(b, key), 1)
-        Iterator.tabulate(sq)(q => (b, key, q * saltBase + sc, id, emb, keys))
-      }
-    }
-    val qbS = qb.mapPartitions { it =>
-      val mC = saltsCBc.value; val mQ = saltsQBc.value
-      it.flatMap { case (b, key, id, emb, keys) =>
-        val sq = (DetHash.h1(11, id) % mQ.getOrElse(packKey(b, key), 1)).toInt.abs
-        val sc = mC.getOrElse(packKey(b, key), 1)
-        Iterator.tabulate(sc)(c => (b, key, sq * saltBase + c, id, emb, keys))
-      }
-    }
-    val scored = qbS.groupByKey(r => (r._1, r._2, r._3))
-      .cogroup(cbS.groupByKey(r => (r._1, r._2, r._3))) { case (_, qs, cs) =>
-        val rows = cs.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val cell = new Cell(rows.map(_._4), rows.map(_._5), rows.map(_._6))
-          qs.flatMap { case (_, _, _, src, qe, qKeys) =>
-            topkCell(k, qKeys, qe, cell).map { case (s, dst) => (src, dst, s) }
-          }
-        }
-      }
-
-    // --- merge partial top-ks map-side ([[mergeTopK]]); narrow rows
-    // only. Cross-band dedup already guarantees each (src, dst) arrives
-    // at most once (a per-source sortBy here once ran TimSort over
-    // boxed tuples and anti-scaled 45× at 32 threads) ---
-    val ranked = mergeTopK(scored, k)
-
-    // --- RSM calibration: per-source mu/sigma vs the negative sample
-    // (queries-scale rows — joined, NOT broadcast: at the design point
-    // the query side is billions of rows) ---
-    val calib = rsmCalib(qP, negBc)
-    val result = ranked.toDF("srcId", "dstId", "cos", "rank")
-      .join(calib.toDF("srcId", "mu", "sigma"), "srcId")
-      .as[(Long, Long, Double, Int, Double, Double)]
-      .map { case (src, dst, cos, r, mu, sigma) =>
-        Candidate(src, dst, graft.align.MoCoTrainer.rsmScore(cos, mu, sigma), r) }
-      // persist the (≤ queries × k narrow-row) candidate table and drop
-      // the heavy banded/input caches: repeated topK calls in one
-      // session must not accumulate cached blocks (ADVICE r2)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    result.count() // materialize before releasing what it was built from
+    val result = rankAndCalibrate(scored, qP, sample, k)
+    // repeated topK calls in one session must not accumulate cached
+    // blocks (ADVICE r2)
     Seq(qP, cP).foreach(_.unpersist(blocking = false))
     result
   }

@@ -18,12 +18,13 @@ import graft.util.DetHash
   *    exactly to the top-k of the union ([[merge]] law, property-gated);
   *  - RSM calibration reads a DETERMINISTIC ORDER-STATISTIC sample of
   *    the corpus (the `s` ids with smallest (hash(id), id), the same
-  *    discipline as LshTopK.countAndSample): sample membership is a pure
+  *    discipline as CellJoin.countAndSample): sample membership is a pure
   *    set function of the corpus id set, so a committed sample merges
   *    with a delta batch's ids into EXACTLY the union's sample
   *    ([[mergeSampleIds]]), and the per-query moments are recomputed
-  *    sequentially over the sample in ascending-id order — bit-identical
-  *    between an incremental run and a from-scratch run of the union.
+  *    sequentially over the sample in ascending-id order
+  *    ([[CellJoin.calib]]) — bit-identical between an incremental run and
+  *    a from-scratch run of the union.
   *
   * All kernels are pure and driver/executor-agnostic; tests gate the
   * merge and calibration laws directly.
@@ -55,29 +56,9 @@ object ScoredTopK {
   @inline def better(c1: Double, id1: Long, c2: Double, id2: Long): Boolean =
     c1 > c2 || (c1 == c2 && id1 < id2)
 
-  /** Bounded insertion buffer over the total order; k ≤ ~10 so linear
-    * insertion beats a heap (primitive arrays, no boxing). */
-  final class TopKBuf(k: Int) {
-    val ids = new Array[Long](k)
-    val cs = new Array[Double](k)
-    var n = 0
-    def offer(id: Long, c: Double): Unit = {
-      if (n < k || better(c, id, cs(n - 1), ids(n - 1))) {
-        var i = math.min(n, k - 1)
-        while (i > 0 && better(c, id, cs(i - 1), ids(i - 1))) {
-          ids(i) = ids(i - 1); cs(i) = cs(i - 1); i -= 1
-        }
-        ids(i) = id; cs(i) = c
-        if (n < k) n += 1
-      }
-    }
-    def resultIds: Array[Long] = java.util.Arrays.copyOf(ids, n)
-    def resultCos: Array[Double] = java.util.Arrays.copyOf(cs, n)
-  }
-
   /** Exact top-k of one query against a corpus slice. */
   def scoreAll(q: Array[Float], corpus: Array[Emb], k: Int): (Array[Long], Array[Double]) = {
-    val buf = new TopKBuf(k)
+    val buf = new CellJoin.TopKBuf(k)
     var i = 0
     while (i < corpus.length) {
       buf.offer(corpus(i).id, Embedder.dot(q, corpus(i).emb))
@@ -160,24 +141,8 @@ object ScoredTopK {
     }
   }
 
-  /** Per-query RSM moments over the calibration sample, SEQUENTIAL
-    * Welford in the array's order — callers pass the sample sorted
-    * ascending by id, making the result a pure function of (query,
-    * sample set) regardless of partitioning or merge history. */
-  def calib(q: Array[Float], sample: Array[Emb]): (Double, Double) = {
-    var mu = 0.0; var m2 = 0.0; var n = 0L
-    var i = 0
-    while (i < sample.length) {
-      val s = Embedder.dot(q, sample(i).emb)
-      n += 1; val d = s - mu; mu += d / n; m2 += d * (s - mu)
-      i += 1
-    }
-    val sigma = if (n > 1) math.sqrt(m2 / (n - 1)) else 1.0
-    (mu, sigma)
-  }
-
-  /** sample-membership key — same hash discipline as LshTopK's
-    * countAndSample so both candidate stacks sample identically */
+  /** sample-membership key — CellJoin.countAndSample uses it too, so both
+    * candidate stacks sample identically */
   @inline def sampleKey(id: Long): Long = DetHash.nonNeg(DetHash.h1(13L, id))
 
   /** The `s` ids with smallest (sampleKey, id) from `ids` — returned
@@ -196,7 +161,7 @@ object ScoredTopK {
     * `tau` (z = (cos - mu) / sigma, MoCoTrainer.rsmScore). */
   def finish(srcId: Long, emb: Array[Float], ids: Array[Long], cs: Array[Double],
              sample: Array[Emb], tau: Double, complete: Boolean): ScoredQuery = {
-    val (mu, sigma) = calib(emb, sample)
+    val (mu, sigma) = CellJoin.calib(emb, sample)
     val accepted =
       if (ids.nonEmpty && graft.align.MoCoTrainer.rsmScore(cs(0), mu, sigma) >= tau) ids(0)
       else -1L

@@ -11,16 +11,15 @@ import graft.embed.Embedder
   * (model/layers_LaBSE_neighbor.py:313-315). Vectors are L2-normalized,
   * so L2 rank ≡ cosine rank (SURVEY.md §7.5 item 6); we rank by cosine.
   *
-  * Two physical paths:
+  * Physical paths:
   *  - [[ExactTopK]]: broadcast corpus + per-partition heap. The parity
   *    oracle, and the right plan whenever the corpus fits an executor
   *    (≲10^6 × dim floats). No shuffle at all on the query side.
-  *  - [[LshTopK]]: BucketedRandomProjectionLSH blocking + SALTED
-  *    within-bucket cosine top-k — the 10^12-scale path (north rule:
-  *    skew handled explicitly). Hot buckets are split into
-  *    ceil(size/cap) salts: queries hash into one salt, corpus rows
-  *    replicate into all salts — identical candidates, bounded partition
-  *    size.
+  *  - [[LshTopK]] and [[IvfTopK]]: blocked top-k for the 10^12-scale
+  *    path. Both assign rows to cells (LSH band buckets, IVF inverted
+  *    lists) and score within cells through the shared salted cell join
+  *    ([[CellJoin]]), which splits hot cells so skew stays bounded while
+  *    the candidates stay identical.
   */
 object ExactTopK {
 

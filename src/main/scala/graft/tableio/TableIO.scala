@@ -288,13 +288,13 @@ object TableIO {
     * Returns (matching file paths, total file count). */
   def prunedFiles(base: String, column: String, lo: BigDecimal, hi: BigDecimal)
       : (Seq[String], Int) = {
-    val (keep, total, _) = prunedFilesWithRoot(base, column, lo, hi)
+    val (keep, total, _) = prunedFilesWithManifest(base, column, lo, hi)
     (keep, total)
   }
 
-  private def prunedFilesWithRoot(base: String, column: String,
-                                  lo: BigDecimal, hi: BigDecimal)
-      : (Seq[String], Int, String) = {
+  private def prunedFilesWithManifest(base: String, column: String,
+                                      lo: BigDecimal, hi: BigDecimal)
+      : (Seq[String], Int, JsonNode) = {
     val id = latestSnapshotId(base).getOrElse(
       throw new IllegalStateException(s"no snapshot at $base"))
     val root = manifest(base, id)
@@ -318,7 +318,7 @@ object TableIO {
         file.startsWith("s3:") || file.startsWith("/")) file else s"$dataPath/$file"
       files += ((path, keep))
     }
-    (files.collect { case (p, true) => p }.toSeq, files.size, dataPath)
+    (files.collect { case (p, true) => p }.toSeq, files.size, root)
   }
 
   /** Range read with manifest data skipping: rows of the latest
@@ -330,7 +330,7 @@ object TableIO {
   def readRange(spark: SparkSession, base: String, column: String,
                 lo: BigDecimal, hi: BigDecimal): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (keep, _, dataRoot) = prunedFilesWithRoot(base, column, lo, hi)
+    val (keep, _, m) = prunedFilesWithManifest(base, column, lo, hi)
     // decimal literals keep the row-level predicate exact for long
     // columns beyond double precision
     val pred = col(column) >= lit(lo.underlying()) && col(column) <= lit(hi.underlying())
@@ -338,8 +338,9 @@ object TableIO {
     else
       // basePath makes Spark reconstruct partition-directory columns
       // (e.g. bucket=3/) from the kept leaf files, so a partitioned
-      // table returns the SAME schema as read()/the empty branch
-      spark.read.option("basePath", dataRoot).parquet(keep: _*).filter(pred)
+      // table returns the SAME schema as read()/the empty branch; the
+      // manifest schema spares the schema-inference job
+      reader(spark, m).option("basePath", m.get("data").asText()).parquet(keep: _*).filter(pred)
   }
 
   /** Retention: expire all but the newest `keepLast` snapshots (Iceberg

@@ -43,7 +43,7 @@ object DotBench {
     }
     println(s"[dotbench] exactness OK over ${sample.length * sample.length} pairs (incl. +-spikes)")
     // monomorphic direct-call loops — the production call site
-    // (topkCell) is a static call, and a shared lambda-typed bench loop
+    // (LshTopK.scoreCell) is a static call, and a shared lambda-typed bench loop
     // goes megamorphic and blocks the inlining the SIMD match needs
     def benchShipped(): Unit = {
       var sink = 0.0

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.candidates.{BucketIndex, DriftMonitor, IndexGeometry, ScoredTopK}
+import graft.candidates.{CellJoin, DriftMonitor, IndexGeometry, ScoredTopK}
 import graft.embed.Embedder
 import graft.kg.Emb
 import graft.util.DetHash
@@ -22,7 +22,7 @@ import graft.util.DetHash
   * (the silent failure mode: the index looks cheap AND is wrong).
   *
   * Construction (all deterministic, real kernels — IndexGeometry.fit,
-  * keysOf, sharesBucket, the same sampling law as the bootstrap):
+  * keysOf, CellJoin.sharesBand, the same sampling law as the bootstrap):
   * population A = unit vectors clustered around pole uA with spread
   * sA (the bootstrap corpus), population B = around a near-orthogonal
   * pole uB with a LARGER spread sB (the drifted ingest — a broader
@@ -72,7 +72,7 @@ object DriftProbe {
     var hit = 0L; var mass = 0L; var want = 0L
     queries.foreach { case (_, qEmb, exact) =>
       val qk = g.keysOf(qEmb)
-      val cands = cKeys.iterator.filter(c => BucketIndex.sharesBucket(qk, c._2))
+      val cands = cKeys.iterator.filter(c => CellJoin.sharesBand(qk, c._2))
         .map(_._1).toSet
       mass += cands.size
       want += exact.length

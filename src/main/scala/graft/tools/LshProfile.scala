@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.kg._
-import graft.candidates.LshTopK
+import graft.candidates.{IndexGeometry, LshTopK}
 
 /** Bucket/cell work-distribution + timing diagnostics for LshTopK. */
 object LshProfile {
@@ -49,33 +49,20 @@ object LshProfile {
       println(f"[lsh] $name%-20s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
     }
 
-    // replicate LshTopK's hashing exactly to measure cell work
-    val cfg = LshTopK.LshConfig()
-    val projs = spark.sparkContext.broadcast(LshTopK.projections(cfg, dim))
-    val all = c.collect()
-    val (mean, w) = {
-      val m = new Array[Float](dim)
-      all.foreach(e => (0 until dim).foreach(i => m(i) += e.emb(i) / all.length))
-      val meanSq = all.map(e => e.emb.map(x => x.toDouble * x).sum).sum / all.length
-      val residVar = math.max(1e-12, meanSq - m.map(x => x.toDouble * x).sum)
-      (spark.sparkContext.broadcast(m), cfg.wScale * math.sqrt(residVar / dim))
-    }
-    println(f"[lsh] auto_w=$w%.5f")
-    def keysOf(ds: org.apache.spark.sql.Dataset[Emb], wv: Double) = ds.mapPartitions { it =>
-      val ps = projs.value; val mn = mean.value
-      it.flatMap { emb =>
-        val cent = Array.tabulate(dim)(i => emb.emb(i) - mn(i))
-        val ks = LshTopK.bandKeysOf(cent, ps, wv, cfg.bands, cfg.rowsPerBand)
-        Iterator.tabulate(cfg.bands)(j => (j, ks(j), emb.id))
-      }
+    // LshTopK's geometry, fitted on the whole corpus instead of a sample
+    val g0 = IndexGeometry.fit(c.collect().sortBy(_.id), LshTopK.Bands, LshTopK.RowsPerBand)
+    println(f"[lsh] auto_w=${g0.width}%.5f")
+    def keysOf(ds: org.apache.spark.sql.Dataset[Emb], g: IndexGeometry) = ds.flatMap { e =>
+      val ks = g.keysOf(e.emb)
+      Iterator.tabulate(g.bands)(j => (j, ks(j), e.id))
     }.toDF("band", "key", "id")
     // gold aligned pairs: blocking recall = share meeting in >=1 band
     val gold = graft.ingest.DocSynthesizer.goldLinks(spark, synth).cache()
     val nGold = gold.count()
     for (h <- 0 to 5) {
-      val wv = w / (1 << h)
-      val qk0 = keysOf(q, wv).cache()
-      val ck0 = keysOf(c, wv).cache()
+      val g = g0.copy(width = g0.width / (1 << h))
+      val qk0 = keysOf(q, g).cache()
+      val ck0 = keysOf(c, g).cache()
       val qk = qk0.groupBy("band", "key").count().withColumnRenamed("count", "qn")
       val ck = ck0.groupBy("band", "key").count().withColumnRenamed("count", "cn")
       val stats = qk.join(ck, Seq("band", "key")).agg(
@@ -86,7 +73,7 @@ object LshProfile {
         .join(qk0.toDF("band", "key", "e1"), Seq("e1"))
         .join(ck0.toDF("band", "key", "e2"), Seq("band", "key", "e2"))
         .select("e1").distinct().count()
-      println(s"[lsh] h=$h w=$wv buckets=${stats.getLong(0)} pair_work=${stats.getLong(1)} " +
+      println(s"[lsh] h=$h w=${g.width} buckets=${stats.getLong(0)} pair_work=${stats.getLong(1)} " +
         s"max_c=${stats.getLong(2)} max_q=${stats.getLong(3)} block_recall=${hits.toDouble / nGold}")
       qk0.unpersist(); ck0.unpersist()
     }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Dataset
-import graft.candidates.ScoredTopK
+import graft.candidates.{CellJoin, ScoredTopK}
 import graft.embed.{Embedder, EmbedderConfig}
 import graft.ingest.{DocSynthesizer, SynthConfig}
 import graft.kg._
@@ -53,8 +53,8 @@ class IncrementalSpec extends SparkTestBase {
     val dim = 16
     val q = randEmb(5L, dim)
     val sample = Array.tabulate(50)(i => Emb(i.toLong, randEmb(100L + i, dim)))
-    val (mu1, s1) = ScoredTopK.calib(q, sample)
-    val (mu2, s2) = ScoredTopK.calib(q, sample.clone())
+    val (mu1, s1) = CellJoin.calib(q, sample)
+    val (mu2, s2) = CellJoin.calib(q, sample.clone())
     assert(mu1 == mu2 && s1 == s2)
     // and matches a direct Welford loop
     var mu = 0.0; var m2 = 0.0; var n = 0L
@@ -513,7 +513,6 @@ class IncrementalSpec extends SparkTestBase {
     assert(inc.index.get.count() == g.bands * kg2)
     // the geometry genuinely PRUNES: total candidate mass across queries
     // is strictly below the all-pairs brute force
-    import graft.candidates.BucketIndex
     val corpus = inc.encoded.filter("kg = 2").select("id", "emb")
       .as[(Long, Array[Float])].collect()
     val cKeys = corpus.map(c => g.keysOf(c._2))
@@ -521,7 +520,7 @@ class IncrementalSpec extends SparkTestBase {
       .as[(Long, Array[Float])].collect()
     val candMass = queries.map { q =>
       val qk = g.keysOf(q._2)
-      cKeys.count(BucketIndex.sharesBucket(qk, _)).toLong
+      cKeys.count(CellJoin.sharesBand(qk, _)).toLong
     }.sum
     assert(candMass < queries.length.toLong * corpus.length,
       s"no pruning: candMass=$candMass of ${queries.length * corpus.length}")

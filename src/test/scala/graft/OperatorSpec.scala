@@ -4,7 +4,7 @@ import graft.kg._
 import graft.graph.{Edge, OrderedDedupAgg, NeighborAgg}
 import graft.embed.{Embedder, EmbedderConfig}
 import graft.align.{GatKernel, MoCoTrainer, MoCoConfig}
-import graft.candidates.{ExactTopK, IvfTopK, LshTopK}
+import graft.candidates.{CellJoin, ExactTopK, IvfTopK, LshTopK}
 import graft.canon.ConnectedComponents
 import org.scalatest.prop.TableDrivenPropertyChecks
 
@@ -50,9 +50,9 @@ class OperatorSpec extends SparkTestBase {
     }
     val k = 7
     def expected(src: Long): Seq[(Long, Double)] = {
-      val buf = new LshTopK.TopKBuf(k)
-      rows.filter(_._1 == src).foreach { case (_, dst, s) => buf.offer(s, dst) }
-      Seq.tabulate(buf.n)(j => (buf.ids(j), buf.ss(j)))
+      val buf = new CellJoin.TopKBuf(k)
+      rows.filter(_._1 == src).foreach { case (_, dst, s) => buf.offer(dst, s) }
+      Seq.tabulate(buf.n)(j => (buf.ids(j), buf.cs(j)))
     }
     for (parts <- Seq(1, 3, 16)) {
       val got = LshTopK.mergeTopK(rows.toDS().repartition(parts), k).collect()
@@ -427,14 +427,10 @@ class OperatorSpec extends SparkTestBase {
     assert(got.filter(org.apache.spark.sql.functions.col("component") =!= 1L).count() == 0L)
   }
 
-  test("BucketIndex cogroup tiling: hot-cell fixture stays bit-exact under a tiny cap") {
-    // near-identical vectors put (almost) everything in shared buckets —
-    // the hot-cell shape; cellCap=7 forces tiling on both sides, and the
-    // result (exact top-k OF the candidate set + candidate counts) must
-    // be bit-identical to the untiled run (every pair meets exactly once)
-    import spark.implicits._
+  /** Bootstrap rows of the indexed mode on the hot-cell fixture:
+    * near-identical vectors put (almost) everything in shared buckets. */
+  private def hotCellTopK(cap: Int): Array[(Long, Array[Float], Array[Long], Array[Double], Long)] = {
     import graft.candidates.{BucketIndex, IndexGeometry}
-    import graft.kg.Emb
     val dim = 16
     def vec(i: Long): Array[Float] = {
       val a = Array.tabulate(dim)(d => 1.0f + 0.001f * ((i * 31 + d * 7) % 13))
@@ -444,13 +440,45 @@ class OperatorSpec extends SparkTestBase {
     val queries = spark.createDataset((0L until 40L).map(i => (i, vec(i))))
     val geom = IndexGeometry.fit(corpus.toArray, bands = 4, rows = 2)
     val index = spark.createDataset(corpus).flatMap(e => BucketIndex.rowsOf(e.id, e.emb, geom))
+    BucketIndex.cogroupTopK(queries, index, geom, kPrime = 6, cellCap = cap).collect()
+  }
+
+  test("BucketIndex cogroup tiling: hot-cell fixture stays bit-exact under a tiny cap") {
+    // cellCap=7 forces tiling on both sides, and the result (exact top-k
+    // OF the candidate set + candidate counts) must be bit-identical to
+    // the untiled run (every pair meets exactly once)
     def run(cap: Int): Map[Long, (Seq[Long], Seq[Double], Long)] =
-      BucketIndex.cogroupTopK(queries, index, geom, kPrime = 6, cellCap = cap)
-        .collect().map(t => t._1 -> ((t._3.toSeq, t._4.toSeq, t._5))).toMap
+      hotCellTopK(cap).map(t => t._1 -> ((t._3.toSeq, t._4.toSeq, t._5))).toMap
     val base = run(1000000)
     val tiled = run(7)
     assert(base.nonEmpty, "fixture produced no shared buckets")
     assert(tiled == base)
+  }
+
+  /** SHA-256 over the sorted text rows; doubles enter as raw bits. */
+  private def digest(rows: Iterable[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.toSeq.sorted.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  private def candidateDigest(ds: org.apache.spark.sql.Dataset[Candidate]): String =
+    digest(ds.collect().map(c =>
+      s"${c.srcId},${c.dstId},${java.lang.Double.doubleToRawLongBits(c.score)},${c.rank}"))
+
+  test("candidate rows are bit-identical to the pinned digests (LSH, IVF, indexed bootstrap)") {
+    // pinned from the three candidate paths before they moved onto the
+    // shared cell-join core; any change to band keys, cell membership,
+    // scoring or the merge order shows here
+    val (q, c) = ivfFixture(0.05)
+    val lsh = candidateDigest(LshTopK.topK(spark, q, c, 5))
+    val ivf = candidateDigest(IvfTopK.topK(spark, q, c, 5))
+    val boot = digest(hotCellTopK(7).map { case (id, _, ids, cs, n) =>
+      s"$id,${ids.mkString(":")},${cs.map(java.lang.Double.doubleToRawLongBits).mkString(":")},$n"
+    })
+    assert(lsh == "2fe971a4924f2bb2f342dadfd267c19f87fcf5e37803f7dbc3380cececfd8cd5")
+    assert(ivf == "fe0e7fedc1239c4eded372af678e2268c97722b30c42d0292b0c3f4768c9125a")
+    assert(boot == "62f5a5696966b6da702795aac8b5682b7af5339b6705c3239def0383b5a2d95d")
   }
 
   test("dotQ (SIMD or scalar) == long-accumulated reference, bit for bit") {

@@ -139,6 +139,24 @@ class TableIOSpec extends SparkTestBase {
     assert(none.count() == 0)
   }
 
+  test("readRange builds its DataFrame without a Spark job, plain and partitioned") {
+    import org.apache.spark.sql.types.IntegerType
+    val plain = tmp()
+    TableIO.commit(spark, (0L until 400L).map(i => (i, s"v$i")).toDF("id", "v"), plain, "s")
+    val parted = tmp()
+    TableIO.commit(spark, (0L until 400L).map(i => (i, i % 4)).toDF("id", "bucket"),
+      parted, "s", partitionCols = Seq("bucket"))
+    val ((p, q), jobs) = countJobs(
+      (TableIO.readRange(spark, plain, "id", BigDecimal(10), BigDecimal(20)),
+       TableIO.readRange(spark, parted, "id", BigDecimal(10), BigDecimal(20))))
+    assert(jobs == 0, s"building the range reads submitted $jobs jobs")
+    assert(p.schema == TableIO.read(spark, plain).schema)
+    assert(q.schema == TableIO.read(spark, parted).schema)
+    assert(q.schema("bucket").dataType == IntegerType)
+    assert(p.count() == 11 && q.select("id", "bucket").collect()
+      .map(r => (r.getLong(0), r.getInt(1).toLong)).toSet == (10L to 20L).map(i => (i, i % 4)).toSet)
+  }
+
   test("rangeClusterBy commit makes skipping effective on shuffled input") {
     val base = tmp()
     // hash-scrambled row order: without clustering every file would
