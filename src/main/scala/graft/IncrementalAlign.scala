@@ -28,13 +28,16 @@ import graft.tableio.TableIO
   * canon(n) = n), and identical canonical triples. Requires the natural
   * ingest closure: committed docs mention only committed entity names
   * (new dictionary entries apply prospectively — a delta name never
-  * re-links an already-committed document).
+  * re-links an already-committed document). A CDC batch of tombstones
+  * and adds is ONE maintenance pass, [[apply]], with the law
+  * `apply(st, a, e, t) == delta(retract(st, t), a, e)`.
   *
   * How each stage stays delta-sized (or one narrow pass):
   *  - extraction runs on the delta docs only, against the union
   *    dictionary (broadcast join, same as the batch path);
-  *  - TOUCHED = delta entities ∪ endpoints of delta triples. Only
-  *    touched entities re-enter neighbor aggregation + GAT encoding —
+  *  - TOUCHED = delta entities ∪ endpoints of added and retracted
+  *    triples. Only touched entities re-enter neighbor aggregation + GAT
+  *    encoding —
   *    their full incident edge set is fetched from the committed triple
   *    table with one broadcast-membership scan;
   *  - candidate maintenance over the committed per-query state
@@ -141,9 +144,9 @@ final case class AlignState(
       * partitioned by a key bucket and probes prune partitions) */
     index: Option[Dataset[IndexRow]] = None,
     /** indexed mode only, DIAGNOSTIC (not persisted, not part of the
-      * exactness laws): the drift score of the last delta/retract batch
-      * against the frozen geometry — when `rebootstrapAdvised`, run
-      * [[IncrementalAlign.rebootstrap]] (see
+      * exactness laws): the drift score against the frozen geometry of the
+      * last batch's whole delta corpus (new and re-encoded KG2 rows) —
+      * when `rebootstrapAdvised`, run [[IncrementalAlign.rebootstrap]] (see
       * [[graft.candidates.DriftMonitor]] for the statistics and
       * thresholds; the decay it flags is silent by cost metrics). */
     drift: Option[graft.candidates.DriftMonitor.DriftStats] = None)
@@ -360,18 +363,19 @@ object IncrementalAlign {
     val bcSample = spark.sparkContext.broadcast(sample)
     val ix = cut(corpusDs.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, bcG.value)))
     ix.count()
+    // ONE left join of the queries to the scored lists, so the cell
+    // join evaluates once; a query with no candidate gets an empty
+    // COMPLETE list
     val scored = BucketIndex.cogroupTopK(queries, ix, g, kPrime, cfg.indexCellCap)
-    val hit = scored.map { case (id, emb, ids, cs, cands) =>
-      ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands <= kPrime)
-    }
-    val miss = queries.toDF("id", "emb")
-      .join(scored.map(_._1).toDF("id"), Seq("id"), "left_anti")
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        ScoredTopK.finish(id, emb, Array.emptyLongArray, Array.emptyDoubleArray,
-          bcSample.value, tau, complete = true)
-      }
-    val tk = cut(hit.unionByName(miss))
+      .map { case (id, _, ids, cs, cands) => (id, ids, cs, cands) }
+      .toDF("id", "ids", "cs", "cands")
+    val tk = cut(queries.toDF("id", "emb").join(scored, Seq("id"), "left")
+      .as[(Long, Array[Float], Array[Long], Array[Double], Option[Long])]
+      .map { case (id, emb, ids, cs, cands) =>
+        if (ids == null) ScoredTopK.finish(id, emb, Array.emptyLongArray,
+          Array.emptyDoubleArray, bcSample.value, tau, complete = true)
+        else ScoredTopK.finish(id, emb, ids, cs, bcSample.value, tau, cands.get <= kPrime)
+      })
     tk.count()
     (tk, sample.map(_.id), g, ix)
   }
@@ -427,110 +431,94 @@ object IncrementalAlign {
   }
 
   /** One delta batch: new docs + new dictionary entries → the next
-    * committed state, with delta-sized update work (see class doc). */
+    * committed state — [[apply]] with no tombstones. */
   def delta(spark: SparkSession, state: AlignState, docs2: Dataset[Doc],
-            ents2: Dataset[Entity], cfg: IncrementalConfig): AlignState = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val tStart = System.nanoTime()
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-delta ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
-
-    // ---- delta extraction against the union dictionary ----
-    // append-mostly tables: cut only the DELTA piece and union lazily —
-    // re-checkpointing the union would copy the whole committed cache
-    // every batch (3 × O(corpus) writes measured as a large share of the
-    // delta wall). After B batches the plan is a width-B union of
-    // LogicalRDDs — shallow; a real deployment compacts into TableIO
-    // snapshots periodically.
-    val ents2C = cut(ents2.as[Entity])
-    val entsU = state.ents.unionByName(ents2C)
-    // one bounded probe per batch over the UPDATED dictionary
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(entsU.toDF(), cfg.dimBroadcastMaxRows)
-    val rawE2 = cut(Embedder.embedEntities(spark, ents2C, cfg.embed))
-    val rawU = state.rawEmbs.unionByName(rawE2)
-    val deltaT = cut(Extraction.idTriplesP(spark, Extraction.rawTriples(spark, docs2), entsU,
-      dimsBounded))
-    val triplesU = state.idTriples.unionByName(deltaT)
-
-    // ---- touched set: delta entities + delta-triple endpoints ----
-    // (deltaT is delta-sized by contract: one collect, endpoints derived
-    // driver-side — every driver job costs whole seconds in this VM's
-    // degraded page-allocation windows, so delta() minimizes job count)
-    val deltaEnts = ents2.collect()
-    val newIds = deltaEnts.map(e => e.id -> e.kg).toMap
-    val deltaTArr = deltaT.collect()
-    val endpointIds = deltaTArr.iterator.flatMap(t => Iterator(t.head, t.tail)).toSet
-    val bcEndp = sc.broadcast(endpointIds -- newIds.keySet)
-    val endpKg = state.ents.filter(e => bcEndp.value.contains(e.id))
-      .map(e => (e.id, e.kg)).collect().toMap
-    val touched: Map[Long, Int] = newIds ++ endpKg
-    diag(s"touched=${touched.size} (new=${newIds.size}, committed endpoints=${endpKg.size})")
-
-    refresh(spark, state, entsU, rawU, triplesU, touched,
-      newKg1 = newIds.collect { case (id, 1) => id }.toSet,
-      deltaKg2Ids = deltaEnts.filter(_.kg == 2).map(_.id),
-      newDocIds = deltaTArr.iterator.map(_.docId).toSet,
-      droppedDocIds = Set.empty, cfg, tStart, dimsBounded)
-  }
+            ents2: Dataset[Entity], cfg: IncrementalConfig): AlignState =
+    apply(spark, state, docs2, ents2, Set.empty, cfg)
 
   /** Retract committed documents (takedown/GDPR path): drop their triples
     * by the per-row docId lineage, re-encode the orphaned endpoints over
     * their shrunken neighborhoods, and repair candidate lists /
-    * canonicalization / canonical triples — the SAME delta-sized
-    * maintenance as [[delta]] with an empty additions set. The entity
-    * DICTIONARY is not retracted (entries apply prospectively), so
-    * `retract(delta(initial(d1, e1), d2, e2), docIds(d2)) ==
-    * initial(d1, e1 ∪ e2)` bit-exactly (gated by IncrementalSpec). */
+    * canonicalization / canonical triples — [[apply]] with no additions.
+    * The entity DICTIONARY is not retracted (entries apply
+    * prospectively), so `retract(delta(initial(d1, e1), d2, e2),
+    * docIds(d2)) == initial(d1, e1 ∪ e2)` bit-exactly (gated by
+    * IncrementalSpec). */
   def retract(spark: SparkSession, state: AlignState, docIds: Set[String],
               cfg: IncrementalConfig): AlignState = {
+    import spark.implicits._
+    apply(spark, state, spark.emptyDataset[Doc], spark.emptyDataset[Entity], docIds, cfg)
+  }
+
+  /** true when `ds` plans to a static empty relation — decided from the
+    * optimized plan, no job */
+  private def staticallyEmpty(ds: Dataset[_]): Boolean =
+    ds.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.isEmpty
+      case _ => false
+    }
+
+  /** One CDC micro-batch in ONE maintenance pass: retract the committed
+    * docs named by `tombstones`, then add `adds` with their dictionary
+    * entries `ents2` — a doc id both tombstoned and re-added lands as
+    * its new version. LAW (IncrementalSpec):
+    * `apply(st, a, e, t) == delta(retract(st, t), a, e)` bit-exactly.
+    * Before maintenance it runs at most three jobs: the dictionary
+    * probe, the extraction's dictionary broadcast and one collect of the
+    * delta-sized rows. An argument planned as a static empty relation
+    * (`spark.emptyDataset`) costs nothing: no extraction without adds,
+    * no dropped-triple scan without tombstones, and a batch with
+    * neither returns `state` unchanged. */
+  def apply(spark: SparkSession, state: AlignState, adds: Dataset[Doc],
+            ents2: Dataset[Entity], tombstones: Set[String],
+            cfg: IncrementalConfig): AlignState = {
     import spark.implicits._
     val sc = spark.sparkContext
     val tStart = System.nanoTime()
     def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-retract ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
+      System.err.println(f"[inc-apply ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
+    val newEnts = if (staticallyEmpty(ents2)) None else Some(cut(ents2))
+    val newDocs = if (staticallyEmpty(adds)) None else Some(adds)
+    if (newEnts.isEmpty && newDocs.isEmpty && tombstones.isEmpty) return state
 
-    val bcDocs = sc.broadcast(docIds)
-    // the retracted rows are delta-sized; the survivor table is one
-    // narrow map-only scan over the committed triples
-    val goneArr = state.idTriples.filter(t => bcDocs.value.contains(t.docId)).collect()
-    val remaining = cut(state.idTriples.filter(t => !bcDocs.value.contains(t.docId)))
-    val endpointIds = goneArr.iterator.flatMap(t => Iterator(t.head, t.tail)).toSet
-    val bcEndp = sc.broadcast(endpointIds)
-    val touched = state.ents.filter(e => bcEndp.value.contains(e.id))
-      .map(e => (e.id, e.kg)).collect().toMap
-    diag(s"retract docs=${docIds.size}: gone triples=${goneArr.length}, touched=${touched.size}")
+    // append-mostly tables: cut only the DELTA piece and union lazily —
+    // re-checkpointing the union would copy the whole committed cache
+    // every batch. After B batches the plan is a width-B union of
+    // LogicalRDDs — shallow; StreamingKg's commits compact it.
+    val entsU = newEnts.fold(state.ents)(state.ents.unionByName(_))
+    // one bounded probe per batch over the UPDATED dictionary
+    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
+      graft.util.BoundedProbe.atMost(entsU.toDF(), cfg.dimBroadcastMaxRows)
+    val rawU = newEnts.fold(state.rawEmbs)(e =>
+      state.rawEmbs.unionByName(cut(Embedder.embedEntities(spark, e, cfg.embed))))
+    val deltaT = newDocs.map(d => cut(Extraction.idTriplesP(spark,
+      Extraction.rawTriples(spark, d), entsU, dimsBounded)))
+    val bcDrop = sc.broadcast(tombstones)
+    val kept =
+      if (tombstones.isEmpty) state.idTriples
+      else cut(state.idTriples.filter(t => !bcDrop.value.contains(t.docId)))
+    val triplesU = deltaT.fold(kept)(kept.unionByName(_))
 
-    refresh(spark, state, state.ents, state.rawEmbs, remaining, touched,
-      newKg1 = Set.empty, deltaKg2Ids = Array.empty,
-      newDocIds = Set.empty, droppedDocIds = docIds, cfg, tStart,
-      dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-        graft.util.BoundedProbe.atMost(state.ents.toDF(), cfg.dimBroadcastMaxRows))
-  }
+    // ---- ONE collect of the delta-sized rows: new entries (id, kg),
+    //      added triples and dropped triples (docId, head, tail) ----
+    val rows = (newEnts.map(_.map(e => (0, null: String, e.id, e.kg.toLong))) ++
+      deltaT.map(_.map(t => (1, t.docId, t.head, t.tail))) ++
+      Option.when(tombstones.nonEmpty)(state.idTriples
+        .filter(t => bcDrop.value.contains(t.docId)).map(t => (2, t.docId, t.head, t.tail))))
+      .reduceOption(_ union _).fold(Array.empty[(Int, String, Long, Long)])(_.collect())
+    val newIds = rows.collect { case (0, _, id, kg) => id -> kg.toInt }.toMap
+    // both endpoints of a triple carry its document's kg: extraction
+    // resolves names through a dictionary join ON kg (idTriplesP)
+    val endpoints = rows.iterator.filter(_._1 != 0).flatMap { case (_, docId, h, t) =>
+      val kg = Extraction.kgOf(docId); Iterator(h -> kg, t -> kg)
+    }.toMap
+    val touched: Map[Long, Int] = endpoints ++ newIds
+    diag(s"touched=${touched.size} (new=${newIds.size}, tombstones=${tombstones.size})")
 
-  /** Shared maintenance core: given the UPDATED committed tables
-    * (dictionary, raw embeddings, triples) and the touched entity set,
-    * refresh encodings, per-query candidate state, canonicalization and
-    * the canonical table with delta-sized work. `newDocIds` marks triples
-    * that must materialize regardless of component changes (delta
-    * ingest); `droppedDocIds` marks committed canonical rows to drop
-    * (retraction). */
-  private def refresh(spark: SparkSession, state: AlignState,
-                      entsU: Dataset[Entity], rawU: Dataset[Emb],
-                      triplesU: Dataset[DocTriple],
-                      touched: Map[Long, Int], newKg1: Set[Long],
-                      deltaKg2Ids: Array[Long],
-                      newDocIds: Set[String], droppedDocIds: Set[String],
-                      cfg: IncrementalConfig, tStart: Long,
-                      dimsBounded: Boolean): AlignState = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val dim = cfg.embed.dim; val k = cfg.topK; val kPrime = 2 * cfg.topK
-    val tau = cfg.rsmThreshold
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-refresh ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
-
+    val deltaKg2Ids = newIds.collect { case (id, 2) => id }.toArray
+    // rows of these docs materialize regardless of component changes
+    val newDocIds = rows.iterator.collect { case (1, docId, _, _) => docId }.toSet
+    val dim = cfg.embed.dim; val k = cfg.topK; val kPrime = 2 * k; val tau = cfg.rsmThreshold
     val touchedSet = touched.keySet
     val bcTouched = sc.broadcast(touchedSet)
 
@@ -541,25 +529,27 @@ object IncrementalAlign {
     val encodedT = encodeIds(spark, touchedSet, touched, incident, entsU, rawU,
       state.weights, dim, dimsBounded)
     diag("re-encode: encodeIds plan built")
-    val encodedU0 = state.encoded.as[(Long, Int, Array[Float])]
+    val encodedUC = cut(state.encoded.as[(Long, Int, Array[Float])]
       .filter(r => !bcTouched.value.contains(r._1)).toDF("id", "kg", "emb")
-      .unionByName(encodedT)
-    val encodedUC = cut(encodedU0)
+      .unionByName(encodedT))
     encodedUC.count()
     diag("re-encode done")
 
-    // ---- calibration sample (exact order-statistics merge) + delta
-    //      corpus, fetched in ONE corpus pass ----
+    // ---- calibration sample (exact order-statistics merge), delta
+    //      corpus and re-encoded queries, fetched in ONE pass ----
     val sampleIdsU = ScoredTopK.mergeSampleIds(state.sampleIds, deltaKg2Ids, cfg.sampleSize)
     // delta corpus = KG2 rows whose score against ANY query may change:
     // new entities + re-encoded (touched) committed ones
     val changedKg2 = touched.collect { case (id, kg) if kg == 2 => id }.toSet
     val bcChangedKg2 = sc.broadcast(changedKg2)
     val bcSampleIds = sc.broadcast(sampleIdsU.toSet)
+    val touchedKg1 = touched.collect { case (id, kg) if kg == 1 => id }.toSet
+    val bcTouchedKg1 = sc.broadcast(touchedKg1)
     val fetched = encodedUC.select(col("id"), col("kg"), col("emb"))
       .as[(Long, Int, Array[Float])]
       .filter(r => bcSampleIds.value.contains(r._1) ||
-        (r._2 == 2 && bcChangedKg2.value.contains(r._1)))
+        (r._2 == 2 && bcChangedKg2.value.contains(r._1)) ||
+        (r._2 == 1 && bcTouchedKg1.value.contains(r._1)))
       .collect()
     val bcSample = sc.broadcast(
       fetched.filter(r => bcSampleIds.value.contains(r._1))
@@ -567,8 +557,6 @@ object IncrementalAlign {
     val bcDeltaCorpus = sc.broadcast(
       fetched.filter(r => r._2 == 2 && bcChangedKg2.value.contains(r._1))
         .map { case (i, _, e) => Emb(i, e) }.sortBy(_.id))
-    val touchedKg1 = touched.collect { case (id, kg) if kg == 1 => id }.toSet
-    val bcTouchedKg1 = sc.broadcast(touchedKg1)
     diag(s"delta corpus=${bcDeltaCorpus.value.length} (changed kg2=${changedKg2.size}), touched kg1=${touchedKg1.size}")
 
     // ---- drift monitor (indexed mode): score this batch's fresh
@@ -631,13 +619,14 @@ object IncrementalAlign {
     // phase B — full re-score of the stale + brand-new queries in ONE
     // broadcast-queries pass over the corpus (partial top-k per
     // partition; disjoint-slice merge is exact)
-    val oldAccepted: Map[Long, Long] =
-      phaseA.filter(_.rescore).map(m => (m.q.srcId, m.oldAccepted)).collect().toMap
-    val rescoreIds = oldAccepted.keySet ++ newKg1
-    diag(s"phase A done; rescore queries=${rescoreIds.size} (stale lists=${oldAccepted.size - oldAccepted.keySet.count(touchedKg1)}, stale encodings=${oldAccepted.keySet.count(touchedKg1)}, new=${newKg1.size})")
-    val bcRescoreIds = sc.broadcast(rescoreIds)
-    val rescoreQs = encodedUC.filter(col("kg") === 1).select(col("id"), col("emb"))
-      .as[(Long, Array[Float])].filter(r => bcRescoreIds.value.contains(r._1)).collect()
+    val stale = phaseA.filter(_.rescore).map(m => (m.q.srcId, m.oldAccepted, m.q.emb)).collect()
+    val oldAccepted: Map[Long, Long] = stale.map(m => m._1 -> m._2).toMap
+    // every query re-scores with its CURRENT encoding: the touched ones
+    // (re-encoded or new) from the fetch above, the rest from their
+    // committed row — untouched, so encoded and topk agree on it
+    val rescoreQs = fetched.collect { case (i, 1, e) if touchedKg1(i) => (i, e) } ++
+      stale.collect { case (i, _, e) if !touchedKg1(i) => (i, e) }
+    diag(s"phase A done; rescore queries=${rescoreQs.length} (stale lists=${oldAccepted.size - oldAccepted.keySet.count(touchedKg1)}, stale encodings=${oldAccepted.keySet.count(touchedKg1)}, new=${rescoreQs.length - oldAccepted.size})")
     val bcQs = sc.broadcast(rescoreQs)
     val bcOld = sc.broadcast(oldAccepted)
     // scored-pair mass of the rescore pass — the deterministic evidence
@@ -737,11 +726,8 @@ object IncrementalAlign {
     // neither endpoint changed (and the doc survives) → the committed
     // row passes through untouched
     val keep0 =
-      if (droppedDocIds.isEmpty) state.canonical
-      else {
-        val bcDrop = sc.broadcast(droppedDocIds)
-        state.canonical.filter(r => !bcDrop.value.contains(r.getAs[String]("docId")))
-      }
+      if (tombstones.isEmpty) state.canonical
+      else state.canonical.filter(r => !bcDrop.value.contains(r.getAs[String]("docId")))
     // same shared-exchange discipline: both anti-joins reference the
     // bare chDf plan so its broadcast builds once
     val keep = keep0.as("k")
@@ -766,13 +752,10 @@ object IncrementalAlign {
   }
 
   // ---------- durable state: TableIO commit / resume ----------
-  // The continuous mode must survive sessions (north rule: resumable from
-  // checkpoint with per-partition lineage): every state component commits
-  // as a TableIO snapshot table — atomic manifests, per-partition row
-  // lineage, append-only metrics, time travel — and a later session
-  // resumes with load() and keeps ingesting deltas. Floats/doubles
-  // round-trip parquet bit-exactly, so a resumed state is
-  // indistinguishable from the in-memory one (gated in IncrementalSpec).
+  // Every state component commits as a TableIO snapshot table and a
+  // later session resumes with load(); floats and doubles round-trip
+  // bit-exactly, so a resumed state equals the in-memory one (gated in
+  // IncrementalSpec).
 
   /** Commit every state component under `dir` (one TableIO table each;
     * canonical partitioned by subjId bucket like the batch pipeline).
@@ -785,34 +768,14 @@ object IncrementalAlign {
     * therefore leaves the previous epoch fully intact — no torn state
     * mixing one table's new snapshot with another's old one. Orphaned
     * component snapshots from a crashed save are reclaimed by [[expire]]
-    * once every retained epoch references a higher id.
-    *
-    * The components commit concurrently, one Spark job each, in the
-    * caller's job group, and the marker is written only after all of
-    * them succeeded; a failing component cancels and awaits the others
-    * and leaves no marker (see [[graft.tableio.StateStore.save]]). */
+    * once every retained epoch references a higher id. The components
+    * commit concurrently, one Spark job each (see
+    * [[graft.tableio.StateStore.save]]); the GAT weights, the frozen
+    * geometry and the sample ids are one driver-written file of the
+    * epoch ([[encodeMeta]]), so neither save nor [[load]] runs a job for
+    * them. */
   def save(spark: SparkSession, state: AlignState, dir: String,
            extras: Seq[(String, org.apache.spark.sql.DataFrame)] = Nil): Unit = {
-    import spark.implicits._
-    val w = state.weights
-    val meta =
-      w.attnSrc.iterator.zipWithIndex.map { case (v, i) => ("attnSrc", i.toLong, v.toDouble) } ++
-      w.attnDst.iterator.zipWithIndex.map { case (v, i) => ("attnDst", i.toLong, v.toDouble) } ++
-      Option(w.combine).iterator.flatMap(_.iterator.zipWithIndex
-        .map { case (v, i) => ("combine", i.toLong, v.toDouble) }) ++
-      Iterator(("alpha", 0L, w.alpha.toDouble),
-        ("centerNorm", 0L, if (w.centerNorm) 1.0 else 0.0),
-        ("neighborNorm", 0L, if (w.neighborNorm) 1.0 else 0.0)) ++
-      // indexed mode: the frozen geometry rides in meta (seed stored via
-      // longBitsToDouble — bit-exact round trip for any 64-bit value)
-      state.geometry.iterator.flatMap { g =>
-        Iterator(("geomBands", 0L, g.bands.toDouble),
-          ("geomRows", 0L, g.rows.toDouble),
-          ("geomWidth", 0L, g.width),
-          ("geomWScale", 0L, g.wScale),
-          ("geomSeed", 0L, java.lang.Double.longBitsToDouble(g.seed))) ++
-          g.center.iterator.zipWithIndex.map { case (v, i) => ("geomCenter", i.toLong, v.toDouble) }
-      }
     // caller-supplied components (e.g. the stream writers' progress
     // marker) commit inside the SAME epoch — one atomic marker covers
     // state + extras; load() reads components by name and ignores these
@@ -824,23 +787,53 @@ object IncrementalAlign {
       "topk" -> state.topk.toDF(),
       "accepted" -> state.accepted,
       "assignment" -> state.assignment,
-      "canonical" -> state.canonical.withColumn("bucket", pmod(col("subjId"), lit(16))),
-      "meta" -> meta.toSeq.toDF("kind", "idx", "value")) ++
-      state.index.map(ix => "index" -> ix.toDF()) ++ Seq(
-      "sample" -> state.sampleIds.zipWithIndex.map { case (id, i) => (i.toLong, id) }.toSeq
-        .toDF("idx", "id"))
+      "canonical" -> state.canonical.withColumn("bucket", pmod(col("subjId"), lit(16)))) ++
+      state.index.map(ix => "index" -> ix.toDF())
     graft.tableio.StateStore.save(spark, dir, components, Map(
       "canonical" -> graft.tableio.StateStore.CommitOpts(
         partitionCols = Seq("bucket"),
-        inputs = Seq(s"$dir/id_triples", s"$dir/assignment"))))
+        inputs = Seq(s"$dir/id_triples", s"$dir/assignment"))),
+      files = Seq(MetaFile -> encodeMeta(metaRows(state), state.sampleIds)))
     ()
+  }
+
+  private val MetaFile = "align"
+
+  /** (kind, idx, value) rows of the GAT weights and, in indexed mode,
+    * the frozen geometry — the layout of the `meta` table that states
+    * saved before the driver-written file carry */
+  private[graft] def metaRows(state: AlignState): Seq[(String, Long, Double)] = {
+    val w = state.weights
+    def arr(kind: String, a: Array[Float]) = Option(a).iterator.flatMap(
+      _.iterator.zipWithIndex.map { case (v, i) => (kind, i.toLong, v.toDouble) })
+    def one(kind: String, v: Double) = Iterator((kind, 0L, v))
+    (arr("attnSrc", w.attnSrc) ++ arr("attnDst", w.attnDst) ++ arr("combine", w.combine) ++
+      one("alpha", w.alpha) ++ one("centerNorm", if (w.centerNorm) 1.0 else 0.0) ++
+      one("neighborNorm", if (w.neighborNorm) 1.0 else 0.0) ++
+      // the seed rides via longBitsToDouble — bit-exact for any 64-bit value
+      state.geometry.iterator.flatMap(g => one("geomBands", g.bands) ++ one("geomRows", g.rows) ++
+        one("geomWidth", g.width) ++ one("geomWScale", g.wScale) ++
+        one("geomSeed", java.lang.Double.longBitsToDouble(g.seed)) ++ arr("geomCenter", g.center))
+      ).toSeq
+  }
+
+  /** The driver-written meta file: one `m <kind> <idx> <bits>` line per
+    * meta row, the value as the hex of its raw double bits (a bit-exact
+    * round trip), then one `s <id>` line per sample id in order. */
+  private def encodeMeta(meta: Seq[(String, Long, Double)], sampleIds: Array[Long]): String =
+    (meta.iterator.map { case (kind, i, v) =>
+      s"m $kind $i ${java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(v))}"
+    } ++ sampleIds.iterator.map(id => s"s $id")).mkString("\n")
+
+  private def decodeMeta(text: String): (Array[(String, Long, Double)], Array[Long]) = {
+    val lines = text.split('\n').iterator.filter(_.nonEmpty).map(_.split(' ')).toArray
+    (lines.collect { case Array("m", kind, i, bits) =>
+      (kind, i.toLong, java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(bits, 16)))
+    }, lines.collect { case Array("s", id) => id.toLong })
   }
 
   /** Committed state epochs of `dir`, ascending (one per completed save). */
   def stateEpochs(dir: String): Seq[Long] = graft.tableio.StateStore.epochs(dir)
-
-  private def readEpoch(dir: String, k: Long): Map[String, Long] =
-    graft.tableio.StateStore.readEpoch(dir, k)
 
   /** Retention for the multi-table state — see
     * [[graft.tableio.StateStore.expire]] (shared machinery): keeps the
@@ -858,14 +851,17 @@ object IncrementalAlign {
     * snapshot. Pass `epoch` to time-travel to an older retained save. */
   def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): AlignState = {
     import spark.implicits._
-    val epochIds: Option[Map[String, Long]] =
-      epoch.orElse(stateEpochs(dir).lastOption).map(readEpoch(dir, _))
+    val epochK = epoch.orElse(stateEpochs(dir).lastOption)
+    val epochIds: Option[Map[String, Long]] = epochK.map(graft.tableio.StateStore.readEpoch(dir, _))
     def rd(name: String): DataFrame = epochIds.flatMap(_.get(name)) match {
       case Some(id) => TableIO.readAt(spark, s"$dir/$name", id)
       case None     => TableIO.read(spark, s"$dir/$name")
     }
-    val meta = rd("meta")
-      .as[(String, Long, Double)].collect()
+    // states saved before the driver-written meta file carry `meta` and
+    // `sample` tables instead (two collect jobs)
+    val (meta, sampleIds) = epochK.flatMap(graft.tableio.StateStore.readFile(dir, _, MetaFile))
+      .map(decodeMeta).getOrElse((rd("meta").as[(String, Long, Double)].collect(),
+        rd("sample").as[(Long, Long)].collect().sortBy(_._1).map(_._2)))
     def arr(kind: String): Array[Float] = {
       val a = meta.filter(_._1 == kind).sortBy(_._2).map(_._3.toFloat)
       if (a.isEmpty) null else a
@@ -874,8 +870,6 @@ object IncrementalAlign {
     val weights = GatWeights(arr("attnSrc"), arr("attnDst"), scalar("alpha").toFloat,
       combine = arr("combine"),
       centerNorm = scalar("centerNorm") != 0.0, neighborNorm = scalar("neighborNorm") != 0.0)
-    val sampleIds = rd("sample")
-      .as[(Long, Long)].collect().sortBy(_._1).map(_._2)
     val geometry = meta.find(_._1 == "geomBands").map { _ =>
       IndexGeometry(scalar("geomBands").toInt, scalar("geomRows").toInt,
         scalar("geomWidth"),

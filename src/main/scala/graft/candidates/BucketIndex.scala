@@ -113,6 +113,10 @@ object BucketIndex {
       IndexRow(j, keys(j), id, emb, java.util.Arrays.copyOf(keys, j)))
   }
 
+  /** Name of the accumulator [[cogroupTopK]] counts its scored tiles
+    * in — one per evaluation of the cell join. */
+  val ScoredTiles = "BucketIndex.scoredTiles"
+
   /** Distributed bootstrap scorer — the indexed twin of the exact
     * bootstrap's broadcast scorer, with NEITHER side collected: query
     * probe rows (bands per query, same shape as [[IndexRow]]) meet the
@@ -137,7 +141,9 @@ object BucketIndex {
     val rows = index.map(cellRow)
     def keys(ds: Dataset[_]) = ds.select($"band", $"key").as[(Int, Long)].rdd
     val salts = CellJoin.hotCells(keys(probes), keys(index), cellCap)
+    val tiles = spark.sparkContext.longAccumulator(ScoredTiles)
     CellJoin.join(probes, rows, salts) { (ps, ra) =>
+      tiles.add(1)
       ps.flatMap { p =>
         val buf = new CellJoin.TopKBuf(kPrime)
         var cands = 0L

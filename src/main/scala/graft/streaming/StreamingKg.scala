@@ -136,11 +136,14 @@ object StreamingKg {
   }
 
   /** Wire a CDC-shaped event stream (adds + retraction tombstones) to
-    * the state. Per micro-batch: retractions apply FIRST (takedown of
-    * already-committed docs), then additions run as one delta — so a
+    * the state. Each micro-batch is ONE [[IncrementalAlign.apply]]:
+    * one maintenance pass whose result equals retracting the tombstoned
+    * docs first and then adding the batch's docs as one delta — so a
     * batch that retracts doc X and re-adds it lands the new version.
     * Tombstones for never-committed docs are no-ops by construction
-    * (the docId filter matches nothing). */
+    * (the docId filter matches nothing). Before maintenance a batch runs
+    * three jobs: the emptiness check, the staging write and one collect
+    * of its (op, doc_id) pairs. */
   def writerCdc(events: Dataset[DocEvent],
                 entsFor: Dataset[Doc] => Dataset[Entity],
                 state0: AlignState,
@@ -173,14 +176,18 @@ object StreamingKg {
         val spark: SparkSession = batch.sparkSession
         import spark.implicits._
         val evs = stage.pinDs(batch, batchId)
-        // tombstone ids are the ONE driver-side set here — that is the
-        // retract API's own contract (a takedown batch is delta-sized);
+        // ONE collect of (op, doc_id) yields the tombstone set — the ONE
+        // driver-side set here, the retract contract's own (a takedown
+        // batch is delta-sized) — and whether the batch adds anything;
         // the add rows stay distributed
-        val tombstones = evs.filter(_.op == "retract").map(_.doc_id).collect().toSet
-        val adds = evs.filter(_.op == "add").map(_.doc)
-        var st = handle.state
-        if (tombstones.nonEmpty) st = IncrementalAlign.retract(spark, st, tombstones, cfg)
-        if (!adds.isEmpty) st = IncrementalAlign.delta(spark, st, adds, entsFor(adds), cfg)
+        val ops = evs.map(e => (e.op, e.doc_id)).collect()
+        val tombstones = ops.collect { case ("retract", id) => id }.toSet
+        val (adds, ents2) =
+          if (ops.exists(_._1 == "add")) {
+            val a = evs.filter(_.op == "add").map(_.doc)
+            (a, entsFor(a))
+          } else (spark.emptyDataset[Doc], spark.emptyDataset[Entity])
+        val st = IncrementalAlign.apply(spark, handle.state, adds, ents2, tombstones, cfg)
         batches += 1
         rebootstrapOnDrift.foreach(p => driftPending ||= p(st))
         handle.set(commitMaybe(spark, st, stateDir, batches, batchId, commitEvery,

@@ -37,30 +37,48 @@ object StateStore {
   private val MaxParallelCommits = 4
 
   /** Commit `components` (concurrently) then the epoch marker; returns
-    * the new epoch. `opts` gives commit options by component name. */
+    * the new epoch. `opts` gives commit options by component name.
+    * `files` are small driver-written components (name → text), stored
+    * as `_state/<name>-<k>.txt` of the same epoch k and written before
+    * its marker — no Spark job; read back with [[readFile]]. */
   def save(spark: SparkSession, dir: String,
            components: Seq[(String, DataFrame)],
-           opts: Map[String, CommitOpts] = Map.empty): Long = {
+           opts: Map[String, CommitOpts] = Map.empty,
+           files: Seq[(String, String)] = Nil): Long = {
     val commits = components.map { case (name, df) => () => {
       val o = opts.getOrElse(name, CommitOpts())
       name -> TableIO.commit(spark, df, s"$dir/$name", "state",
         inputs = o.inputs, partitionCols = o.partitionCols).id
     } }
-    writeMarker(dir, graft.util.ParJobs.run(spark, MaxParallelCommits)(commits))
-  }
-
-  /** Write the epoch marker LAST — this call is the commit point of a
-    * multi-table save. `ids` are component → committed snapshot id. */
-  private def writeMarker(dir: String, ids: Seq[(String, Long)]): Long = {
+    val ids = graft.util.ParJobs.run(spark, MaxParallelCommits)(commits)
     val k = epochs(dir).lastOption.getOrElse(-1L) + 1
     java.nio.file.Files.createDirectories(epochDir(dir))
-    val tmp = epochDir(dir).resolve(s".epoch-$k.txt.tmp")
-    java.nio.file.Files.writeString(tmp,
+    files.foreach { case (name, text) => writeAtomic(dir, s"$name-$k.txt", text) }
+    // the marker LAST — this write is the commit point of the save
+    writeAtomic(dir, s"epoch-$k.txt",
       ids.iterator.map { case (n, i) => s"$n $i" }.mkString("\n"))
-    java.nio.file.Files.move(tmp, epochDir(dir).resolve(s"epoch-$k.txt"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     k
   }
+
+  /** write `_state/<file>` through a temp file and an atomic rename (a
+    * leftover from a save that crashed before its marker is replaced) */
+  private def writeAtomic(dir: String, file: String, text: String): Unit = {
+    val tmp = epochDir(dir).resolve(s".$file.tmp")
+    java.nio.file.Files.writeString(tmp, text)
+    java.nio.file.Files.move(tmp, epochDir(dir).resolve(file),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The driver-written file `name` of epoch `k` (see [[save]]); None
+    * when that epoch has none. */
+  def readFile(dir: String, k: Long, name: String): Option[String] = {
+    val f = epochDir(dir).resolve(s"$name-$k.txt")
+    if (java.nio.file.Files.exists(f)) Some(java.nio.file.Files.readString(f)) else None
+  }
+
+  /** `_state/<name>-<k>.txt`: epoch k's marker (`epoch`) or a file of it */
+  private val EpochFile = """.+-(\d+)\.txt""".r
 
   private def epochDir(dir: String): java.nio.file.Path =
     java.nio.file.Paths.get(dir, "_state")
@@ -111,6 +129,7 @@ object StateStore {
     * snapshots: retention only reclaims what a retained epoch
     * supersedes. */
   def expire(dir: String, keepEpochs: Int): Unit = {
+    import scala.jdk.CollectionConverters._
     require(keepEpochs >= 1, "must keep at least the latest epoch")
     val eps = epochs(dir)
     if (eps.nonEmpty) {
@@ -118,8 +137,14 @@ object StateStore {
       val floor = retained.map(readEpoch(dir, _)).flatMap(_.toSeq)
         .groupMapReduce(_._1)(_._2)(math.min)
       floor.foreach { case (name, id) => TableIO.expireBefore(s"$dir/$name", id) }
-      eps.dropRight(keepEpochs).foreach(k =>
-        java.nio.file.Files.deleteIfExists(epochDir(dir).resolve(s"epoch-$k.txt")))
+      // every marker and driver-written file below the oldest retained
+      // epoch, leftovers of an interrupted expire included
+      val s = java.nio.file.Files.list(epochDir(dir))
+      try s.iterator().asScala.filter(_.getFileName.toString match {
+          case EpochFile(k) => k.toLong < retained.head
+          case _ => false
+        }).toList.foreach(java.nio.file.Files.deleteIfExists)
+      finally s.close()
     }
   }
 }

@@ -249,12 +249,50 @@ class IncrementalSpec extends SparkTestBase {
       graft.streaming.StreamProgress.of(spark, 0L))
     val (_, saveJobs) = countJobs(IncrementalAlign.save(spark, s1, dir, extras))
     val n = graft.tableio.StateStore.readEpoch(dir, 0L).size
-    assert(n == 12, s"expected 12 components (10 + index + progress), saw $n")
-    // no metrics-row job, no schema-inference job: exactly the data writes
+    assert(n == 10, s"expected 10 components (8 + index + progress), saw $n")
+    // no metrics-row job, no schema-inference job, no job for the
+    // driver-written meta file: exactly the data writes
     assert(saveJobs == n, s"save of $n components ran $saveJobs jobs")
     val (loaded, loadJobs) = countJobs(IncrementalAlign.load(spark, dir))
-    assert(loadJobs == 2, s"load ran $loadJobs jobs") // the meta and sample collects
+    assert(loadJobs == 0, s"load ran $loadJobs jobs") // meta and sample come from the file
     assert(topkMap(loaded) == topkMap(s1))
+  }
+
+  /** weights, geometry and calibration sample as raw bits */
+  private def metaBits(s: AlignState): (Seq[(String, Long, Long)], Seq[Long]) =
+    (IncrementalAlign.metaRows(s).map { case (k, i, v) =>
+      (k, i, java.lang.Double.doubleToRawLongBits(v)) }, s.sampleIds.toSeq)
+
+  test("an epoch saved with meta and sample tables instead of the meta file loads bit-exactly") {
+    val ((d1, e1), _) = splitFixture(20, 30)
+    val s1 = IncrementalAlign.initial(spark, d1, e1, icfgIdx)
+    val dir = java.nio.file.Files.createTempDirectory("align-legacy").toString
+    IncrementalAlign.save(spark, s1, dir)
+    assert(metaBits(IncrementalAlign.load(spark, dir)) == metaBits(s1))
+    // rewrite epoch 0 in the earlier layout: `meta` and `sample` tables
+    // named by the marker, no driver-written file
+    val tio = graft.tableio.TableIO
+    val metaId = tio.commit(spark, IncrementalAlign.metaRows(s1).toDF("kind", "idx", "value"),
+      s"$dir/meta", "state").id
+    val sampleId = tio.commit(spark, s1.sampleIds.zipWithIndex
+      .map { case (id, i) => (i.toLong, id) }.toSeq.toDF("idx", "id"), s"$dir/sample", "state").id
+    val state = java.nio.file.Paths.get(dir, "_state")
+    val marker = state.resolve("epoch-0.txt")
+    java.nio.file.Files.writeString(marker,
+      java.nio.file.Files.readString(marker) + s"\nmeta $metaId\nsample $sampleId")
+    java.nio.file.Files.delete(state.resolve("align-0.txt"))
+    val (legacy, jobs) = countJobs(IncrementalAlign.load(spark, dir))
+    assert(jobs == 2, s"legacy load ran $jobs jobs") // the meta and sample collects
+    assert(metaBits(legacy) == metaBits(s1))
+    assert(legacy.geometry.get.center.toSeq == s1.geometry.get.center.toSeq)
+    assert(topkMap(legacy) == topkMap(s1))
+    // the next save writes the file again; expiring the legacy epoch
+    // leaves only the newest epoch's marker and file
+    IncrementalAlign.save(spark, legacy, dir)
+    IncrementalAlign.expire(dir, keepEpochs = 1)
+    assert(state.toFile.list().filterNot(_.startsWith(".")).sorted.toSeq ==
+      Seq("align-1.txt", "epoch-1.txt"))
+    assert(metaBits(IncrementalAlign.load(spark, dir)) == metaBits(s1))
   }
 
   test("a failing component aborts the save: siblings cancelled, no marker, previous epoch intact") {
@@ -531,6 +569,65 @@ class IncrementalSpec extends SparkTestBase {
     assert(accEx.nonEmpty)
     val recall = accIx.intersect(accEx).size.toDouble / accEx.size
     assert(recall >= 0.9, s"indexed accepted-edge recall $recall (${accIx.size} vs ${accEx.size})")
+  }
+
+  /** The fused-pass law `apply(st, a, e, t) == delta(retract(st, t), a,
+    * e)` over fixed CDC batches against ONE bootstrap; returns the jobs
+    * of the first batch's fused pass, run on the fresh state. */
+  private def applyLaw(cfg: IncrementalConfig): Int = {
+    val ((d1, e1), (d2, e2)) = splitFixture(25, 40)
+    val st = IncrementalAlign.initial(spark, d1, e1, cfg)
+    val Array(x, y, w) = d1.collect().filter(_.doc_id.startsWith("kg1")).sortBy(_.doc_id).take(3)
+    val never = "kg1_doc_9999"
+    // doc x is tombstoned and re-added with new content (w's spans)
+    val xNew = Doc(x.doc_id, w.spans)
+    val cases = Seq(
+      ("overlapping tombstone and add ids", d2.unionByName(Seq(xNew).toDS()), e2,
+        Set(x.doc_id, y.doc_id, never)),
+      ("tombstone for a never-committed doc", d2, e2, Set(never)),
+      ("empty adds", spark.emptyDataset[Doc], spark.emptyDataset[Entity], Set(x.doc_id, y.doc_id)),
+      ("empty tombstones", d2, e2, Set.empty[String]))
+    val jobs = cases.map { case (label, a, e, t) =>
+      val (fused, n) = countJobs(IncrementalAlign.apply(spark, st, a, e, t, cfg))
+      val twoPass = IncrementalAlign.delta(spark,
+        IncrementalAlign.retract(spark, st, t, cfg), a, e, cfg)
+      assert(fused.sampleIds.toSeq == twoPass.sampleIds.toSeq, label)
+      assert(topkMap(fused) == topkMap(twoPass), label)
+      assert(acceptedSet(fused) == acceptedSet(twoPass), label)
+      assert(effectiveAssign(fused) == effectiveAssign(twoPass), label)
+      assert(canonBag(fused) == canonBag(twoPass), label)
+      if (label == cases.head._1) {
+        // the re-added doc landed as its new version
+        def content(s: AlignState, doc: String) =
+          s.idTriples.filter(_.docId == doc).map(t => (t.head, t.rel, t.tail)).collect().sorted.toSeq
+        assert(content(fused, x.doc_id) == content(st, w.doc_id))
+      }
+      n
+    }
+    jobs.head
+  }
+
+  test("apply equals retract then delta in one pass (exact mode)") {
+    applyLaw(icfg)
+  }
+
+  test("apply equals retract then delta in one pass (indexed mode) within half the jobs") {
+    val jobs = applyLaw(icfgIdx)
+    // retract then delta ran 28 + 31 = 59 jobs on this batch before the
+    // two passes were fused
+    assert(jobs <= 29, s"the fused pass ran $jobs jobs")
+  }
+
+  test("indexed bootstrap scores each cell tile once") {
+    val ((d1, e1), _) = splitFixture(40, 60)
+    val (st, bootTiles) = sumAccumulator(graft.candidates.BucketIndex.ScoredTiles)(
+      IncrementalAlign.initial(spark, d1, e1, icfgIdx))
+    val queries = st.encoded.filter("kg = 1").select("id", "emb").as[(Long, Array[Float])]
+    val (_, oneEval) = sumAccumulator(graft.candidates.BucketIndex.ScoredTiles)(
+      graft.candidates.BucketIndex.cogroupTopK(queries, st.index.get, st.geometry.get,
+        2 * icfgIdx.topK, icfgIdx.indexCellCap).count())
+    assert(oneEval > 0)
+    assert(bootTiles == oneEval, s"bootstrap scored $bootTiles tiles, one evaluation $oneEval")
   }
 
   test("indexed mode: retract equals from-scratch under the frozen geometry") {

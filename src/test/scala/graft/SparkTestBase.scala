@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 
 trait SparkTestBase extends AnyFunSuite {
@@ -24,6 +24,25 @@ trait SparkTestBase extends AnyFunSuite {
     try {
       sc.setJobGroup(group, "countJobs")
       val out = try f finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `f`; returns its result and the sum of the task updates that
+    * named long accumulators called `name` received while it ran. */
+  def sumAccumulator[T](name: String)(f: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.iterator.filter(_.name.contains(name))
+          .foreach(_.update.foreach(u => n.addAndGet(u.asInstanceOf[Long])))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = f
       org.apache.spark.ListenerBusDrain(sc)
       (out, n.get)
     } finally sc.removeSparkListener(listener)
