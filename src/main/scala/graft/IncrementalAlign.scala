@@ -767,8 +767,9 @@ object IncrementalAlign {
     * the newest marker. A save killed between component commits
     * therefore leaves the previous epoch fully intact — no torn state
     * mixing one table's new snapshot with another's old one. Orphaned
-    * component snapshots from a crashed save are reclaimed by [[expire]]
-    * once every retained epoch references a higher id. The components
+    * component snapshots from a crashed save are reclaimed by
+    * [[graft.tableio.StateStore.expire]] once every retained epoch
+    * references a higher id. The components
     * commit concurrently, one Spark job each (see
     * [[graft.tableio.StateStore.save]]); the GAT weights, the frozen
     * geometry and the sample ids are one driver-written file of the
@@ -834,16 +835,6 @@ object IncrementalAlign {
 
   /** Committed state epochs of `dir`, ascending (one per completed save). */
   def stateEpochs(dir: String): Seq[Long] = graft.tableio.StateStore.epochs(dir)
-
-  /** Retention for the multi-table state — see
-    * [[graft.tableio.StateStore.expire]] (shared machinery): keeps the
-    * newest `keepEpochs` epochs, reclaims markers and component
-    * snapshots below the retained floor (sweeping up orphans from
-    * crashed saves); a component referenced by no retained epoch (e.g.
-    * `index` after switching the indexed mode off mid-stream) keeps its
-    * last snapshots. */
-  def expire(dir: String, keepEpochs: Int): Unit =
-    graft.tableio.StateStore.expire(dir, keepEpochs)
 
   /** Resume the committed state from `dir`: components resolve through
     * the newest epoch marker (see [[save]] — a torn save is invisible);

@@ -83,10 +83,13 @@ object IncrementalDedup {
     * mid-commit is invisible; epochs time-travel; retention via
     * `StateStore.expire`). A later session resumes with [[load]] and
     * keeps folding deltas — gated in PairBlockingSpec: a delta over the
-    * resumed state equals the delta over the live one. */
-  def save(spark: SparkSession, state: DedupState, dir: String): Long =
+    * resumed state equals the delta over the live one. `extras` (a
+    * stream writer's progress marker) commit in the same epoch; [[load]]
+    * ignores them. */
+  def save(spark: SparkSession, state: DedupState, dir: String,
+           extras: Seq[(String, DataFrame)] = Nil): Long =
     graft.tableio.StateStore.save(spark, dir,
-      Seq("bands" -> state.bands, "pairs" -> state.pairs))
+      extras ++ Seq("bands" -> state.bands, "pairs" -> state.pairs))
 
   def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): DedupState = {
     val m = graft.tableio.StateStore.load(spark, dir, epoch)

@@ -109,10 +109,12 @@ object IncrementalSimhash {
 
   /** Durable state via [[graft.tableio.StateStore]] — atomic two-table
     * epochs, time travel, retention; resume with [[load]] and keep
-    * folding (gated in PairBlockingSpec). */
-  def save(spark: SparkSession, state: SimhashState, dir: String): Long =
+    * folding (gated in PairBlockingSpec). `extras` commit in the same
+    * epoch, as in [[IncrementalDedup.save]]. */
+  def save(spark: SparkSession, state: SimhashState, dir: String,
+           extras: Seq[(String, DataFrame)] = Nil): Long =
     graft.tableio.StateStore.save(spark, dir,
-      Seq("bands" -> state.bands, "pairs" -> state.pairs))
+      extras ++ Seq("bands" -> state.bands, "pairs" -> state.pairs))
 
   def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): SimhashState = {
     val m = graft.tableio.StateStore.load(spark, dir, epoch)

@@ -214,11 +214,10 @@ object NeighborAgg {
     (kgIds, kgVals)
   }
 
-  /** Default byte budget for the [[blocks]] broadcast fast path:
-    * override with spark.graft.blocksBroadcastMaxBytes (≤ 0 disables
-    * the fast path outright). 256 MB is a sane executor broadcast on
-    * any modern box; the 10^12-row design point exceeds it and takes
-    * the shuffle-join path below. */
+  /** Default byte budget for the [[blocks]] broadcast fast path (a
+    * budget ≤ 0 disables the fast path outright). 256 MB is a sane
+    * executor broadcast on any modern box; the 10^12-row design point
+    * exceeds it and takes the shuffle-join path below. */
   val BlocksBroadcastMaxBytes: Long = 256L << 20
 
   /** Assemble NeighborBlocks from the ordered neighbor lists.
@@ -229,7 +228,7 @@ object NeighborAgg {
     * per center across two exchanges (measured ~2 GB and the single
     * largest stage of the bench pipeline at E=50k, dim 256 — vs ~100 MB
     * for the embedding table itself). When one bounded probe proves the
-    * embedding table fits `spark.graft.blocksBroadcastMaxBytes`
+    * embedding table fits the byte budget [[BlocksBroadcastMaxBytes]]
     * (rows ≤ bytes / 4·dim), the table is collected once and broadcast,
     * and block assembly is MAP-ONLY over the ordered lists — zero
     * exchanges, identical rows (inner-join semantics preserved: centers
@@ -243,11 +242,15 @@ object NeighborAgg {
     * restored from pos, then prepend center row and zero-pad. */
   def blocks(spark: SparkSession, ordered: Dataset[(Long, Seq[(String, Long)])],
              embs: Dataset[Emb], ents: Dataset[Entity], dim: Int,
-             boundedDims: Boolean = true): Dataset[NeighborBlock] = {
+             boundedDims: Boolean = true): Dataset[NeighborBlock] =
+    blocks(spark, ordered, embs, ents, dim, boundedDims, BlocksBroadcastMaxBytes)
+
+  /** [[blocks]] under an explicit broadcast byte budget. */
+  private[graft] def blocks(spark: SparkSession, ordered: Dataset[(Long, Seq[(String, Long)])],
+                            embs: Dataset[Emb], ents: Dataset[Entity], dim: Int,
+                            boundedDims: Boolean, maxBroadcastBytes: Long): Dataset[NeighborBlock] = {
     import spark.implicits._
-    val bcMaxBytes = spark.conf.getOption("spark.graft.blocksBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(BlocksBroadcastMaxBytes)
-    val bcMaxRows = bcMaxBytes / (4L * math.max(1, dim))
+    val bcMaxRows = maxBroadcastBytes / (4L * math.max(1, dim))
     // the dictionary gate (boundedDims) bounds the kg lookup side; the
     // byte probe bounds the embedding payload itself
     if (boundedDims && bcMaxRows > 0 &&

@@ -22,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * reference to its rows. The LIVE state's references die exactly when
   * a commit-compaction swaps the handle to a freshly loaded snapshot
   * (every state table becomes a parquet-backed scan of the state dir —
-  * the StreamingKg COMPACTION note), so writers call [[release]] right
-  * after each snapshot reload. Release retains ONE extra commit
+  * the [[StateFold]] COMPACTION note), so the fold loop calls
+  * [[release]] right after each snapshot reload. Release retains ONE extra commit
   * generation: it deletes the dirs staged before the PREVIOUS release,
   * not the current cycle's — a state object read off the live Handle
   * by another thread just before a commit still resolves (its staged

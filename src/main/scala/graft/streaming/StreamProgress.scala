@@ -23,12 +23,11 @@ import graft.tableio.{StateStore, TableIO}
   * stream identity (the hash of the checkpointLocation the writer was
   * given), and [[resumePosition]] DISABLES the skip when the persisted
   * identity does not match the current one: re-pointing an existing
-  * stateDir at a new stream degrades to at-least-once (the documented
-  * commitEvery>1 posture) instead of silently losing data. Writers
+  * stateDir at a new stream degrades to at-least-once instead of
+  * silently losing data. Writers
   * that are not given a checkpointLocation record no identity and keep
   * the previous scaladoc-contract behavior (the caller guarantees one
-  * lineage); `skipReplayed = false` remains the explicit opt-out for
-  * intentional same-checkpoint-path reuse with new data. */
+  * lineage). */
 object StreamProgress {
 
   val Component = "progress"
@@ -81,9 +80,4 @@ object StreamProgress {
       }
       .nextOption()
       .getOrElse(-1L)
-
-  /** Last batch id in the newest progress-bearing epoch, identity
-    * unchecked — kept for callers that manage lineage themselves. */
-  def last(spark: SparkSession, dir: String): Long =
-    resumePosition(spark, dir, None)
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
+import graft.dedup.{IncrementalDedup, IncrementalSimhash}
 
 /** Streaming exact deduplication — the continuous-ingest twin of the
   * batch hash-groupBy dedup (TextQueries.qDedupExact): documents
@@ -48,196 +50,74 @@ object StreamingDedup {
       .select(col("doc_id"), col("ts"), col("text"))
   }
 
-  /** Live handle on the maintained LSH dedup state (safe to read
-    * between micro-batches). */
-  final class LshHandle private[StreamingDedup] (
-      ref: java.util.concurrent.atomic.AtomicReference[graft.dedup.IncrementalDedup.DedupState]) {
-    def state: graft.dedup.IncrementalDedup.DedupState = ref.get()
-    private[StreamingDedup] def set(s: graft.dedup.IncrementalDedup.DedupState): Unit = ref.set(s)
-  }
-
   /** NEAR-dup streaming composition: a stream of banded signature rows
-    * (doc_id, band, key) drives [[graft.dedup.IncrementalDedup.delta]]
-    * once per micro-batch — the maintained index + accumulated pair set
-    * equal the one-shot batch operator after any batch prefix (the
-    * IncrementalDedup fold law, re-gated through the stream in
-    * StreamingSpec). Start from [[graft.dedup.IncrementalDedup.emptyState]]:
-    * a delta over the empty state IS the bootstrap. The foreachBatch
-    * body runs on the driver between micro-batches; the work inside
-    * `delta` is distributed exactly as in batch mode.
-    *
-    * With `stateDir` set, the state commits durably every `commitEvery`
-    * batches (StateStore epochs; commit doubles as plan compaction via
-    * snapshot reload; `retainEpochs` bounds storage) with the folded
-    * batch id riding in the same epoch — resume skips replayed
-    * batchIds, exactly-once at commitEvery=1 (see [[StreamProgress]]).
-    * Pass `checkpointLocation` HERE, not as a raw option on the
-    * returned writer: the writer sets the option itself AND binds the
-    * committed position to that lineage — setting the option directly
-    * (or overriding this one) records no/the wrong identity and
-    * re-opens the silent-skip hole the binding closes. */
+    * (doc_id, band, key) drives [[IncrementalDedup.delta]] once per
+    * micro-batch through the durable fold loop ([[StateFold]]) — the
+    * maintained index + accumulated pair set equal the one-shot batch
+    * operator after any batch prefix (the IncrementalDedup fold law,
+    * re-gated through the stream in PairBlockingSpec). Start from
+    * [[IncrementalDedup.emptyState]]: a delta over the empty state IS
+    * the bootstrap. */
   def lshWriter(bands: DataFrame,
-                state0: graft.dedup.IncrementalDedup.DedupState,
+                state0: IncrementalDedup.DedupState,
                 cap: Int = 4096,
                 stateDir: Option[String] = None,
                 commitEvery: Int = 1,
                 retainEpochs: Option[Int] = None,
-                skipReplayed: Boolean = true,
                 checkpointLocation: Option[String] = None)
-      : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], LshHandle) = {
-    require(commitEvery >= 1, "commitEvery must be >= 1")
-    val handle = new LshHandle(
-      new java.util.concurrent.atomic.AtomicReference(state0))
-    val sid = checkpointLocation.map(StreamProgress.streamId)
-    val resumeAfter =
-      if (skipReplayed)
-        stateDir.map(StreamProgress.resumePosition(bands.sparkSession, _, sid)).getOrElse(-1L)
-      else -1L
-    val stage = new BatchStage(stateDir, checkpointLocation)
-    var batches = 0L
-    val w = bands.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > resumeAfter && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          // pin the micro-batch DISTRIBUTED (staging write + read-back,
-          // no driver rows) — delta's actions must replay a stable
-          // copy, not the consumed source epoch (StreamingKg discipline)
-          val rows = stage.pin(batch, batchId)
-          val (next, _) = graft.dedup.IncrementalDedup.delta(spark, handle.state, rows, cap)
-          batches += 1
-          handle.set(stateDir match {
-            case Some(dir) if batches % commitEvery == 0 =>
-              graft.tableio.StateStore.save(spark, dir, Seq(
-                "bands" -> next.bands, "pairs" -> next.pairs,
-                StreamProgress.Component -> StreamProgress.of(spark, batchId, sid)))
-              val loaded = graft.dedup.IncrementalDedup.load(spark, dir)
-              retainEpochs.foreach(graft.tableio.StateStore.expire(dir, _))
-              stage.release()
-              loaded
-            case _ => next
-          })
-        }
+      : (DataStreamWriter[Row], Handle[IncrementalDedup.DedupState]) =
+    StateFold.writer(bands, state0)(IncrementalDedup.save(_, _, _, _), IncrementalDedup.load(_, _),
+        stateDir, commitEvery, retainEpochs, checkpointLocation) { (spark, st, rows) =>
+      IncrementalDedup.delta(spark, st, rows, cap)._1
     }
-    (checkpointLocation.fold(w)(loc => w.option("checkpointLocation", loc)), handle)
-  }
-
-  /** Live handle on the maintained SimHash dedup state. */
-  final class SimhashHandle private[StreamingDedup] (
-      ref: java.util.concurrent.atomic.AtomicReference[graft.dedup.IncrementalSimhash.SimhashState]) {
-    def state: graft.dedup.IncrementalSimhash.SimhashState = ref.get()
-    private[StreamingDedup] def set(s: graft.dedup.IncrementalSimhash.SimhashState): Unit = ref.set(s)
-  }
 
   /** SimHash streaming composition: a stream of signature rows
-    * (doc_id, simhash) drives [[graft.dedup.IncrementalSimhash.delta]]
-    * once per micro-batch. Same contract as [[lshWriter]] — the
-    * maintained banded index + accumulated Hamming-≤2 pair set equal
-    * the one-shot batch operator after any batch prefix (pigeonhole
-    * banding is lossless across micro-batch boundaries too). Durable
-    * commits + exactly-once resume as in [[lshWriter]]. */
+    * (doc_id, simhash) drives [[IncrementalSimhash.delta]] once per
+    * micro-batch — the maintained banded index + accumulated Hamming-≤2
+    * pair set equal the one-shot batch operator after any batch prefix
+    * (pigeonhole banding is lossless across micro-batch boundaries too). */
   def simhashWriter(sigs: DataFrame,
-                    state0: graft.dedup.IncrementalSimhash.SimhashState,
+                    state0: IncrementalSimhash.SimhashState,
                     cap: Int = 4096,
                     stateDir: Option[String] = None,
                     commitEvery: Int = 1,
                     retainEpochs: Option[Int] = None,
-                    skipReplayed: Boolean = true,
                     checkpointLocation: Option[String] = None)
-      : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], SimhashHandle) = {
-    require(commitEvery >= 1, "commitEvery must be >= 1")
-    val handle = new SimhashHandle(
-      new java.util.concurrent.atomic.AtomicReference(state0))
-    val sid = checkpointLocation.map(StreamProgress.streamId)
-    val resumeAfter =
-      if (skipReplayed)
-        stateDir.map(StreamProgress.resumePosition(sigs.sparkSession, _, sid)).getOrElse(-1L)
-      else -1L
-    val stage = new BatchStage(stateDir, checkpointLocation)
-    var batches = 0L
-    val w = sigs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > resumeAfter && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val rows = stage.pin(batch, batchId)
-          val (next, _) = graft.dedup.IncrementalSimhash.delta(spark, handle.state, rows, cap)
-          batches += 1
-          handle.set(stateDir match {
-            case Some(dir) if batches % commitEvery == 0 =>
-              graft.tableio.StateStore.save(spark, dir, Seq(
-                "bands" -> next.bands, "pairs" -> next.pairs,
-                StreamProgress.Component -> StreamProgress.of(spark, batchId, sid)))
-              val loaded = graft.dedup.IncrementalSimhash.load(spark, dir)
-              retainEpochs.foreach(graft.tableio.StateStore.expire(dir, _))
-              stage.release()
-              loaded
-            case _ => next
-          })
-        }
+      : (DataStreamWriter[Row], Handle[IncrementalSimhash.SimhashState]) =
+    StateFold.writer(sigs, state0)(IncrementalSimhash.save(_, _, _, _), IncrementalSimhash.load(_, _),
+        stateDir, commitEvery, retainEpochs, checkpointLocation) { (spark, st, rows) =>
+      IncrementalSimhash.delta(spark, st, rows, cap)._1
     }
-    (checkpointLocation.fold(w)(loc => w.option("checkpointLocation", loc)), handle)
-  }
 
   /** CDC composition for the LSH dedup index: one stream carries adds
     * AND retraction tombstones — rows (op, doc_id, band, key) where
     * op="add" rows are banded index rows and op="retract" rows carry
     * only the doc_id (band/key ignored). Per micro-batch, retractions
-    * apply FIRST then additions run as one delta (the StreamingKg
-    * writerCdc discipline: a batch may retract and re-add a doc), so a
-    * takedown arriving mid-stream drops the doc's index rows and every
-    * accumulated pair touching it at delta-sized cost. Tombstones for
-    * never-committed docs are no-ops. Durable commits + exactly-once
-    * resume as in [[lshWriter]]. */
+    * apply FIRST then additions run as one delta (a batch may retract
+    * and re-add a doc), so a takedown arriving mid-stream drops the
+    * doc's index rows and every accumulated pair touching it at
+    * delta-sized cost. Tombstones for never-committed docs are no-ops. */
   def lshWriterCdc(events: DataFrame,
-                   state0: graft.dedup.IncrementalDedup.DedupState,
+                   state0: IncrementalDedup.DedupState,
                    cap: Int = 4096,
                    stateDir: Option[String] = None,
                    commitEvery: Int = 1,
                    retainEpochs: Option[Int] = None,
-                   skipReplayed: Boolean = true,
                    checkpointLocation: Option[String] = None)
-      : (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], LshHandle) = {
-    require(commitEvery >= 1, "commitEvery must be >= 1")
-    val handle = new LshHandle(
-      new java.util.concurrent.atomic.AtomicReference(state0))
-    val sid = checkpointLocation.map(StreamProgress.streamId)
-    val resumeAfter =
-      if (skipReplayed)
-        stateDir.map(StreamProgress.resumePosition(events.sparkSession, _, sid)).getOrElse(-1L)
-      else -1L
-    val stage = new BatchStage(stateDir, checkpointLocation)
-    var batches = 0L
-    val w = events.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > resumeAfter && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val evs = stage.pin(batch, batchId)
-          // tombstone ids are the one driver-side set (the retract
-          // API's own delta-sized contract); add rows stay distributed
-          val tombstones = evs.filter(col("op") === "retract")
-            .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-          val adds = evs.filter(col("op") === "add")
-            .select(col("doc_id"), col("band"), col("key"))
-          var st = handle.state
-          if (tombstones.nonEmpty)
-            st = graft.dedup.IncrementalDedup.retract(spark, st, tombstones)
-          if (!adds.isEmpty)
-            st = graft.dedup.IncrementalDedup.delta(spark, st, adds, cap)._1
-          batches += 1
-          handle.set(stateDir match {
-            case Some(dir) if batches % commitEvery == 0 =>
-              graft.tableio.StateStore.save(spark, dir, Seq(
-                "bands" -> st.bands, "pairs" -> st.pairs,
-                StreamProgress.Component -> StreamProgress.of(spark, batchId, sid)))
-              val loaded = graft.dedup.IncrementalDedup.load(spark, dir)
-              retainEpochs.foreach(graft.tableio.StateStore.expire(dir, _))
-              stage.release()
-              loaded
-            case _ => st
-          })
-        }
+      : (DataStreamWriter[Row], Handle[IncrementalDedup.DedupState]) =
+    StateFold.writer(events, state0)(IncrementalDedup.save(_, _, _, _), IncrementalDedup.load(_, _),
+        stateDir, commitEvery, retainEpochs, checkpointLocation) { (spark, st0, evs) =>
+      // tombstone ids are the one driver-side set (the retract
+      // API's own delta-sized contract); add rows stay distributed
+      val tombstones = evs.filter(col("op") === "retract")
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+      val adds = evs.filter(col("op") === "add")
+        .select(col("doc_id"), col("band"), col("key"))
+      var st = st0
+      if (tombstones.nonEmpty) st = IncrementalDedup.retract(spark, st, tombstones)
+      if (!adds.isEmpty) st = IncrementalDedup.delta(spark, st, adds, cap)._1
+      st
     }
-    (checkpointLocation.fold(w)(loc => w.option("checkpointLocation", loc)), handle)
-  }
 
   /** Batch twin over the same files — one row per distinct text (the
     * first by event time, doc_id tie-break), for parity tests and for

@@ -6,72 +6,25 @@ import graft.text.IncrementalVocab
 
 /** Structured-stream driver for the continuous vocabulary maintainer:
   * each micro-batch of (doc_id, text) documents folds into the live
-  * (tok, df, tf) state via [[IncrementalVocab.delta]] — the same
-  * foreachBatch + live-handle discipline as [[StreamingDedup]]'s LSH
-  * and SimHash writers, so a stream prefix leaves exactly the state
-  * the batch operator computes over the same docs (gated in
-  * StreamingSpec). Micro-batches are pinned by a DISTRIBUTED staging
-  * write ([[BatchStage]] — foreachBatch frames are only valid during
-  * the call and the state's lazy lineage must not reference them, but
-  * the rows never land on the driver) — delta-sized by construction,
-  * the corpus-sized side stays distributed in the state.
-  */
+  * (tok, df, tf) state through the durable fold loop ([[StateFold]]),
+  * so a stream prefix leaves exactly the state the batch operator
+  * computes over the same docs (gated in VocabSpec). */
 object StreamingVocab {
 
-  final class VocabHandle(
-      ref: java.util.concurrent.atomic.AtomicReference[IncrementalVocab.VocabState]) {
-    def state: IncrementalVocab.VocabState = ref.get()
-    private[StreamingVocab] def set(s: IncrementalVocab.VocabState): Unit = ref.set(s)
-  }
-
-  /** Fold a streaming (doc_id, text) frame into a live vocab state;
-    * start with [[IncrementalVocab.emptyState]] for a fresh build — a
-    * delta over the empty state IS the bootstrap. With `stateDir` set,
-    * the state commits durably every `commitEvery` batches through
-    * [[graft.tableio.StateStore]] and the live handle swaps to the
-    * freshly loaded snapshot — the StreamingKg discipline: the commit
-    * doubles as plan compaction (the B-batches-deep lazy-union lineage
-    * resets to one parquet-backed scan, O(commitEvery) plan width on an
-    * unbounded stream), `retainEpochs` bounds state storage, and the
-    * just-folded batch id rides in the same epoch as a
-    * [[StreamProgress]] component. On resume the writer skips every
-    * replayed batchId at or below the committed position, so a replay
-    * after our commit but before the engine's offset write cannot
-    * double-fold — exactly-once at commitEvery=1 (see StreamProgress
-    * for the commitEvery>1 trade-off). Pass `checkpointLocation` HERE,
-    * not as a raw option on the returned writer (the StreamingDedup
-    * lshWriter note: the writer sets the option itself and binds the
-    * committed position to that lineage). */
+  /** Fold a streaming (doc_id, text) frame into a live vocab state via
+    * [[IncrementalVocab.delta]]; start with
+    * [[IncrementalVocab.emptyState]] for a fresh build — a delta over
+    * the empty state IS the bootstrap. */
   def vocabWriter(docs: DataFrame, state0: IncrementalVocab.VocabState,
                   stateDir: Option[String] = None,
                   commitEvery: Int = 1,
                   retainEpochs: Option[Int] = None,
-                  skipReplayed: Boolean = true,
                   checkpointLocation: Option[String] = None)
-      : (DataStreamWriter[Row], VocabHandle) = {
-    require(commitEvery >= 1, "commitEvery must be >= 1")
-    val handle = new VocabHandle(
-      new java.util.concurrent.atomic.AtomicReference(state0))
-    val sid = checkpointLocation.map(StreamProgress.streamId)
-    val resumeAfter =
-      if (skipReplayed)
-        stateDir.map(StreamProgress.resumePosition(docs.sparkSession, _, sid)).getOrElse(-1L)
-      else -1L
-    val stage = new BatchStage(stateDir, checkpointLocation)
-    var batches = 0L
-    val w = docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        if (batchId > resumeAfter && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val rows = stage.pin(batch, batchId)
-          val next = IncrementalVocab.delta(handle.state, rows)
-          batches += 1
-          handle.set(commitMaybe(spark, next, stateDir, batches, batchId,
-            commitEvery, retainEpochs, sid, stage))
-        }
+      : (DataStreamWriter[Row], Handle[IncrementalVocab.VocabState]) =
+    StateFold.writer(docs, state0)(IncrementalVocab.save(_, _, _, _), IncrementalVocab.load(_, _),
+        stateDir, commitEvery, retainEpochs, checkpointLocation) { (_, st, rows) =>
+      IncrementalVocab.delta(st, rows)
     }
-    (checkpointLocation.fold(w)(loc => w.option("checkpointLocation", loc)), handle)
-  }
 
   /** CDC composition: one stream carries adds AND retraction tombstones
     * — rows (op, doc_id, text) where a "retract" row re-supplies the
@@ -79,8 +32,7 @@ object StreamingVocab {
     * needs the contribution, keeping the state O(vocabulary) instead of
     * carrying a per-doc contribution table). Per micro-batch
     * retractions apply FIRST then additions fold as one delta (a batch
-    * may retract and re-add a doc). Durable commits + exactly-once
-    * resume as in [[vocabWriter]].
+    * may retract and re-add a doc).
     *
     * TOMBSTONE CONTRACT — DIVERGES from the dedup CDC writers (ADVICE
     * r3): in lshWriterCdc a tombstone for a never-added doc matches no
@@ -98,53 +50,15 @@ object StreamingVocab {
                      stateDir: Option[String] = None,
                      commitEvery: Int = 1,
                      retainEpochs: Option[Int] = None,
-                     skipReplayed: Boolean = true,
                      checkpointLocation: Option[String] = None)
-      : (DataStreamWriter[Row], VocabHandle) = {
-    require(commitEvery >= 1, "commitEvery must be >= 1")
-    val handle = new VocabHandle(
-      new java.util.concurrent.atomic.AtomicReference(state0))
-    val sid = checkpointLocation.map(StreamProgress.streamId)
-    val resumeAfter =
-      if (skipReplayed)
-        stateDir.map(StreamProgress.resumePosition(events.sparkSession, _, sid)).getOrElse(-1L)
-      else -1L
-    val stage = new BatchStage(stateDir, checkpointLocation)
-    var batches = 0L
-    val w = events.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        if (batchId > resumeAfter && !batch.isEmpty) {
-          val spark = batch.sparkSession
-          val rows = stage.pin(batch, batchId)
-          val retracts = rows.filter(rows("op") === "retract").select("doc_id", "text")
-          val adds = rows.filter(rows("op") === "add").select("doc_id", "text")
-          var st = handle.state
-          if (!retracts.isEmpty) st = IncrementalVocab.retract(st, retracts)
-          if (!adds.isEmpty) st = IncrementalVocab.delta(st, adds)
-          batches += 1
-          handle.set(commitMaybe(spark, st, stateDir, batches, batchId,
-            commitEvery, retainEpochs, sid, stage))
-        }
-    }
-    (checkpointLocation.fold(w)(loc => w.option("checkpointLocation", loc)), handle)
-  }
-
-  private def commitMaybe(spark: org.apache.spark.sql.SparkSession,
-                          st: IncrementalVocab.VocabState,
-                          stateDir: Option[String], batches: Long, batchId: Long,
-                          commitEvery: Int,
-                          retainEpochs: Option[Int],
-                          sid: Option[Long],
-                          stage: BatchStage): IncrementalVocab.VocabState =
-    stateDir match {
-      case Some(dir) if batches % commitEvery == 0 =>
-        graft.tableio.StateStore.save(spark, dir, Seq(
-          "counts" -> st.counts,
-          StreamProgress.Component -> StreamProgress.of(spark, batchId, sid)))
-        val loaded = IncrementalVocab.load(spark, dir)
-        retainEpochs.foreach(graft.tableio.StateStore.expire(dir, _))
-        stage.release()
-        loaded
-      case _ => st
+      : (DataStreamWriter[Row], Handle[IncrementalVocab.VocabState]) =
+    StateFold.writer(events, state0)(IncrementalVocab.save(_, _, _, _), IncrementalVocab.load(_, _),
+        stateDir, commitEvery, retainEpochs, checkpointLocation) { (_, st0, rows) =>
+      val retracts = rows.filter(rows("op") === "retract").select("doc_id", "text")
+      val adds = rows.filter(rows("op") === "add").select("doc_id", "text")
+      var st = st0
+      if (!retracts.isEmpty) st = IncrementalVocab.retract(st, retracts)
+      if (!adds.isEmpty) st = IncrementalVocab.delta(st, adds)
+      st
     }
 }

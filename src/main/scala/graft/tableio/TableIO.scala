@@ -360,7 +360,7 @@ object TableIO {
   }
 
   /** Expire every snapshot with id < `minKeepId` (retention keyed by an
-    * externally retained id set — see IncrementalAlign.expire, which
+    * externally retained id set — see StateStore.expire, which
     * derives the floor from its multi-table epoch markers). */
   def expireBefore(base: String, minKeepId: Long): Seq[Long] = {
     val drop = snapshotIds(base).filter(_ < minKeepId)

@@ -101,9 +101,11 @@ object IncrementalVocab {
 
   /** Durable state via [[graft.tableio.StateStore]] — atomic epochs,
     * time travel, retention; resume with [[load]] and keep folding
-    * (gated in VocabSpec). */
-  def save(spark: SparkSession, state: VocabState, dir: String): Long =
-    graft.tableio.StateStore.save(spark, dir, Seq("counts" -> state.counts))
+    * (gated in VocabSpec). `extras` commit in the same epoch, as in
+    * [[graft.dedup.IncrementalDedup.save]]. */
+  def save(spark: SparkSession, state: VocabState, dir: String,
+           extras: Seq[(String, DataFrame)] = Nil): Long =
+    graft.tableio.StateStore.save(spark, dir, extras ++ Seq("counts" -> state.counts))
 
   def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): VocabState =
     VocabState(cut(graft.tableio.StateStore.load(spark, dir, epoch)("counts")))

@@ -230,7 +230,7 @@ class IncrementalSpec extends SparkTestBase {
     // the retained floor are reclaimed (the torn orphan sits ABOVE the
     // floor and stays until a later epoch supersedes it; it is never
     // load-visible either way)
-    IncrementalAlign.expire(dir, keepEpochs = 1)
+    graft.tableio.StateStore.expire(dir, keepEpochs = 1)
     assert(IncrementalAlign.stateEpochs(dir) == Seq(1L))
     intercept[Exception](IncrementalAlign.load(spark, dir, epoch = Some(0L)))
     // epoch 1 still loads bit-exact after expiry and keeps ingesting
@@ -289,7 +289,7 @@ class IncrementalSpec extends SparkTestBase {
     // the next save writes the file again; expiring the legacy epoch
     // leaves only the newest epoch's marker and file
     IncrementalAlign.save(spark, legacy, dir)
-    IncrementalAlign.expire(dir, keepEpochs = 1)
+    graft.tableio.StateStore.expire(dir, keepEpochs = 1)
     assert(state.toFile.list().filterNot(_.startsWith(".")).sorted.toSeq ==
       Seq("align-1.txt", "epoch-1.txt"))
     assert(metaBits(IncrementalAlign.load(spark, dir)) == metaBits(s1))
@@ -458,6 +458,49 @@ class IncrementalSpec extends SparkTestBase {
     assert(canonBag(quiet) == canonBag(plain))
   }
 
+  test("streaming drift policy is sticky: an advisory after batch 1 re-fits at the commit after batch 2") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ((d1, e1), (d2, e2)) = splitFixture(25, 40)
+    val ((_, _), (d3, e3)) = splitFixture(40, 55)
+    val idxCfg = icfg.copy(useIndex = true)
+    val s0 = IncrementalAlign.initial(spark, d1, e1, idxCfg)
+    val cfg55 = SynthConfig(entitiesPerKg = 55)
+    def entsFor(docs: Dataset[Doc]): Dataset[Entity] = {
+      val idxs = docs.collect().map(d =>
+        d.doc_id.substring(d.doc_id.lastIndexOf('_') + 1).toLong).toSet
+      DocSynthesizer.entities(spark, cfg55)
+        .filter(en => idxs.contains(en.id % DocSynthesizer.Kg2Base))
+    }
+    // the predicate advises on the first post-fold state only (batch
+    // 1's); batch 2, the one the commit follows, is quiet
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stateDir = java.nio.file.Files.createTempDirectory("drift-sticky").toString
+    val source = MemoryStream[Doc]
+    val (writer, handle) = graft.streaming.StreamingKg.writer(
+      source.toDS(), entsFor, s0, idxCfg, stateDir = Some(stateDir),
+      commitEvery = 2, rebootstrapOnDrift = Some(_ => seen.incrementAndGet() == 1))
+    val q = writer.start()
+    try {
+      source.addData(d2.collect().toSeq: _*); q.processAllAvailable()
+      assert(IncrementalAlign.stateEpochs(stateDir).isEmpty)
+      source.addData(d3.collect().toSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+    val fresh = IncrementalAlign.initial(spark,
+      d1.unionByName(d2).unionByName(d3),
+      e1.unionByName(e2).unionByName(e3), idxCfg)
+    // the re-fit geometry differs from the frozen bootstrap one
+    assert(fresh.geometry.get.center.toSeq != s0.geometry.get.center.toSeq)
+    for (st <- Seq(handle.state, IncrementalAlign.load(spark, stateDir))) {
+      assert(java.lang.Double.doubleToRawLongBits(st.geometry.get.width) ==
+        java.lang.Double.doubleToRawLongBits(fresh.geometry.get.width))
+      assert(st.geometry.get.center.toSeq == fresh.geometry.get.center.toSeq)
+      assert(topkMap(st) == topkMap(fresh))
+      assert(acceptedSet(st) == acceptedSet(fresh))
+      assert(canonBag(st) == canonBag(fresh))
+    }
+  }
+
   test("retract undoes a committed batch bit-exactly (takedown path)") {
     val ((d1, e1), (d2, e2)) = splitFixture(40, 60)
     val s1 = IncrementalAlign.initial(spark, d1, e1, icfg)
@@ -616,6 +659,36 @@ class IncrementalSpec extends SparkTestBase {
     // retract then delta ran 28 + 31 = 59 jobs on this batch before the
     // two passes were fused
     assert(jobs <= 29, s"the fused pass ran $jobs jobs")
+  }
+
+  test("one durable writerCdc micro-batch stays within its job budget") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ((d1, e1), (d2, e2)) = splitFixture(25, 40)
+    val ((_, _), (d3, e3)) = splitFixture(40, 55)
+    val s0 = IncrementalAlign.initial(spark, d1, e1, icfgIdx)
+    // the batch's dictionary is set before each batch, so entsFor itself
+    // runs no job
+    @volatile var ents = e2
+    val tmp = java.nio.file.Files.createTempDirectory("cdc-jobs").toString
+    val source = MemoryStream[DocEvent]
+    val (writer, _) = graft.streaming.StreamingKg.writerCdc(
+      source.toDS(), _ => ents, s0, icfgIdx, stateDir = Some(s"$tmp/state"),
+      commitEvery = 1, checkpointLocation = Some(s"$tmp/checkpoint"))
+    val q = writer.start()
+    try {
+      source.addData(d2.collect().toSeq.map(DocEvent.add): _*)
+      q.processAllAvailable()
+      ents = e3
+      // the batch runs on the stream thread, outside any job group of
+      // this one: count every job submitted while it runs
+      val evs = d2.collect().toSeq.sortBy(_.doc_id).take(3).map(d => DocEvent.retract(d.doc_id)) ++
+        d3.collect().toSeq.map(DocEvent.add)
+      val (_, jobs) = countAllJobs { source.addData(evs: _*); q.processAllAvailable() }
+      // measured before the writers shared one fold loop: 41 jobs, the
+      // same count in each of three runs
+      assert(jobs <= 41, s"the micro-batch ran $jobs jobs")
+    } finally q.stop()
   }
 
   test("indexed bootstrap scores each cell tile once") {

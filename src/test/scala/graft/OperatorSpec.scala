@@ -506,7 +506,7 @@ class OperatorSpec extends SparkTestBase {
 
   test("blocks broadcast fast path == shuffle-join path, row for row") {
     // round-6 gate: NeighborAgg.blocks' size-gated broadcast assembly
-    // (spark.graft.blocksBroadcastMaxBytes) must be bit-identical to the
+    // (its broadcast byte budget) must be bit-identical to the
     // explode→join→re-collect plan — including the inner-join semantics
     // for ids with no embedding row (dropped, gap closed) and centers
     // whose neighbors all drop (absent from the output)
@@ -521,14 +521,12 @@ class OperatorSpec extends SparkTestBase {
     // drop a few embedding rows to exercise the missing-id semantics
     val embs = Embedder.embedEntities(spark, ents, EmbedderConfig(dim = dim))
       .filter(e => e.id % 7 != 3)
-    def collectBlocks(maxBytes: String): Map[Long, (Int, Int, Seq[Float])] = {
-      spark.conf.set("spark.graft.blocksBroadcastMaxBytes", maxBytes)
-      try NeighborAgg.blocks(spark, ordered, embs, ents, dim).collect()
+    def collectBlocks(maxBytes: Long): Map[Long, (Int, Int, Seq[Float])] =
+      NeighborAgg.blocks(spark, ordered, embs, ents, dim, boundedDims = true,
+          maxBroadcastBytes = maxBytes).collect()
         .map(b => b.id -> ((b.kg, b.validLen, b.emb.toSeq))).toMap
-      finally spark.conf.unset("spark.graft.blocksBroadcastMaxBytes")
-    }
-    val fast = collectBlocks((256L << 20).toString)
-    val shuffle = collectBlocks("0")
+    val fast = collectBlocks(NeighborAgg.BlocksBroadcastMaxBytes)
+    val shuffle = collectBlocks(0L)
     assert(fast.keySet == shuffle.keySet)
     assert(fast == shuffle)
     assert(fast.nonEmpty)

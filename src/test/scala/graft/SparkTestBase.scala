@@ -13,17 +13,28 @@ trait SparkTestBase extends AnyFunSuite {
   def countJobs[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"count-jobs-${java.util.UUID.randomUUID()}"
+    countJobsWhere(e => Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+      sc.setJobGroup(group, "countJobs")
+      try f finally sc.clearJobGroup()
+    }
+  }
+
+  /** Runs `f`; returns its result and the number of Spark jobs submitted
+    * on ANY thread while it ran (no job-group filter): for work that runs
+    * on threads `f` does not start, such as a stream's micro-batch. */
+  def countAllJobs[T](f: => T): (T, Int) = countJobsWhere(_ => true)(f)
+
+  private def countJobsWhere[T](keep: SparkListenerJobStart => Boolean)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
+        if (keep(e)) n.incrementAndGet()
     }
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "countJobs")
-      val out = try f finally sc.clearJobGroup()
+      val out = f
       org.apache.spark.ListenerBusDrain(sc)
       (out, n.get)
     } finally sc.removeSparkListener(listener)

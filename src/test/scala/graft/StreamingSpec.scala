@@ -320,6 +320,6 @@ class StreamingSpec extends SparkTestBase {
     StateStore.save(spark, dir, Seq("data" -> dummy,
       StreamProgress.Component -> StreamProgress.of(spark, 9L, sidA)))
     assert(StreamProgress.resumePosition(spark, dir, sidA) == 9L)
-    assert(StreamProgress.last(spark, dir) == 9L)
+    assert(StreamProgress.resumePosition(spark, dir, None) == 9L)
   }
 }
