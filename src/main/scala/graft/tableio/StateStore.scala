@@ -1,6 +1,7 @@
 package graft.tableio
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 /** Atomic MULTI-TABLE state commits: the generic core of the durable
   * continuous-state discipline (factored out of
@@ -25,6 +26,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fails, the other component jobs are cancelled and awaited, no
   * marker is written, and the failure is rethrown — the previous epoch
   * stays the loadable one (see [[graft.util.ParJobs]]).
+  *
+  * FILE SIZING: a component is written with as many files as its bytes
+  * need, not one per upstream partition (the maintained states are
+  * unions of per-batch pieces, so their partition count grows with the
+  * pieces, not with the data). The size estimate is the component's
+  * previous committed snapshot ([[TableIO.snapshotBytes]], no Spark
+  * job); the split follows Spark's own file-scan rule
+  * (`FilePartition.maxSplitBytes`: `min(maxPartitionBytes,
+  * max(openCostInBytes, (bytes + openCostInBytes) / minPartitionNum))`,
+  * the confs read from the session, never set), and the component is
+  * written through `coalesce(ceil(bytes / split))`. A small component is
+  * one file (a `partitionCols` table: at most one per partition dir); a
+  * large one keeps its parallelism; `coalesce` never raises the
+  * partition count (but Catalyst merges a coalesce over a coalesce into
+  * the outer one, so a component that is itself a coalesce would be
+  * re-widened — no state component is). A component with no previous
+  * snapshot keeps its input partitioning. `coalesce` is narrow: it
+  * pulls the component's upstream plan into those tasks, which is cheap
+  * because every state component is a union or filter over
+  * materialized pieces.
   */
 object StateStore {
 
@@ -44,10 +65,22 @@ object StateStore {
   def save(spark: SparkSession, dir: String,
            components: Seq[(String, DataFrame)],
            opts: Map[String, CommitOpts] = Map.empty,
-           files: Seq[(String, String)] = Nil): Long = {
+           files: Seq[(String, String)] = Nil): Long =
+    save(spark, dir, components, opts, files, splitBytes(spark, _))
+
+  /** [[save]] with the split rule given: `split(bytes)` is the file size
+    * for a component whose previous snapshot holds `bytes`. */
+  private[graft] def save(spark: SparkSession, dir: String,
+                          components: Seq[(String, DataFrame)],
+                          opts: Map[String, CommitOpts],
+                          files: Seq[(String, String)],
+                          split: Long => Long): Long = {
     val commits = components.map { case (name, df) => () => {
       val o = opts.getOrElse(name, CommitOpts())
-      name -> TableIO.commit(spark, df, s"$dir/$name", "state",
+      val base = s"$dir/$name"
+      val sized = TableIO.snapshotBytes(spark, base)
+        .fold(df)(bytes => df.coalesce(fileCount(bytes, split(bytes))))
+      name -> TableIO.commit(spark, sized, base, "state",
         inputs = o.inputs, partitionCols = o.partitionCols).id
     } }
     val ids = graft.util.ParJobs.run(spark, MaxParallelCommits)(commits)
@@ -59,6 +92,18 @@ object StateStore {
       ids.iterator.map { case (n, i) => s"$n $i" }.mkString("\n"))
     k
   }
+
+  /** Spark's file-scan split for `bytes` of data in one file (see the
+    * sizing note above). */
+  private[graft] def splitBytes(spark: SparkSession, bytes: Long): Long = {
+    val openCost = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.filesOpenCostInBytes
+    FilePartition.maxSplitBytes(spark, bytes + openCost)
+  }
+
+  /** `ceil(bytes / split)`, at least one file */
+  private def fileCount(bytes: Long, split: Long): Int =
+    math.min(Int.MaxValue.toLong, math.max(1L, (bytes - 1) / split + 1)).toInt
 
   /** write `_state/<file>` through a temp file and an atomic rename (a
     * leftover from a save that crashed before its marker is replaced) */

@@ -3,7 +3,7 @@ package graft.tableio
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -28,6 +28,12 @@ import scala.jdk.CollectionConverters._
   * parquet source, so building a snapshot's DataFrame runs no
   * schema-inference job; a manifest without it (committed by an older
   * build) falls back to inference.
+  *
+  * The manifest's `bytes` field is the summed length of the snapshot's
+  * data files, taken from the same listing that reads their footers; it
+  * sizes the next write of the table ([[snapshotBytes]],
+  * [[StateStore.save]]). A manifest without it falls back to listing
+  * the snapshot's data dir.
   *
   * Gives exactly the properties the north rule exercises: atomic
   * snapshot commit (manifest-last-write of a complete JSON), checkpointed
@@ -130,60 +136,79 @@ object TableIO {
     * columns whose every row group carries non-null min/max statistics;
     * they feed the manifest's `col_stats` for metadata-driven file
     * skipping ([[prunedFiles]]/[[readRange]]). Also returns the Spark
-    * schema JSON stored in the first footer (null when no file has one). */
+    * schema JSON stored in the first footer (null when no file has one)
+    * and the summed length of the data files. */
   private def footerCounts(spark: SparkSession, dataPath: String)
-      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]], String) = {
+      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]], String, Long) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(dataPath)
-    val fs = root.getFileSystem(conf)
     val out = scala.collection.mutable.LinkedHashMap[String, Long]()
     val stats = scala.collection.mutable.LinkedHashMap[String, Map[String, (BigDecimal, BigDecimal)]]()
     var schema: String = null
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val rel = root.toUri.relativize(f.getPath.toUri).toString
-          out(rel) = rd.getRecordCount
-          if (schema == null)
-            schema = rd.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-          val perCol = scala.collection.mutable.LinkedHashMap[String, (BigDecimal, BigDecimal)]()
-          val disabled = scala.collection.mutable.Set.empty[String]
-          rd.getFooter.getBlocks.asScala.foreach { block =>
-            block.getColumns.asScala.foreach { c =>
-              val name = c.getPath.toDotString
-              val tn = c.getPrimitiveType.getPrimitiveTypeName
-              val s = c.getStatistics
-              val ok = (tn == INT32 || tn == INT64 || tn == FLOAT || tn == DOUBLE) &&
-                s != null && !s.isEmpty && s.hasNonNullValue
-              // NaN/Infinity float stats don't parse as BigDecimal —
-              // treat the column as statless (no pruning) instead of
-              // failing the commit after the data is already written
-              val parsed =
-                if (!ok) None
-                else try Some((BigDecimal(s.genericGetMin.toString),
-                  BigDecimal(s.genericGetMax.toString)))
-                catch { case _: NumberFormatException => None }
-              parsed match {
-                case Some((lo, hi)) =>
-                  perCol.get(name) match {
-                    case Some((l0, h0)) => perCol(name) = (l0.min(lo), h0.max(hi))
-                    case None           => perCol(name) = (lo, hi)
-                  }
-                case None => disabled += name // statless/unsupported/non-finite group disables the column
-              }
+    var bytes = 0L
+    dataFiles(spark, root).foreach { f =>
+      bytes += f.getLen
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+      try {
+        val rel = root.toUri.relativize(f.getPath.toUri).toString
+        out(rel) = rd.getRecordCount
+        if (schema == null)
+          schema = rd.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+        val perCol = scala.collection.mutable.LinkedHashMap[String, (BigDecimal, BigDecimal)]()
+        val disabled = scala.collection.mutable.Set.empty[String]
+        rd.getFooter.getBlocks.asScala.foreach { block =>
+          block.getColumns.asScala.foreach { c =>
+            val name = c.getPath.toDotString
+            val tn = c.getPrimitiveType.getPrimitiveTypeName
+            val s = c.getStatistics
+            val ok = (tn == INT32 || tn == INT64 || tn == FLOAT || tn == DOUBLE) &&
+              s != null && !s.isEmpty && s.hasNonNullValue
+            // NaN/Infinity float stats don't parse as BigDecimal —
+            // treat the column as statless (no pruning) instead of
+            // failing the commit after the data is already written
+            val parsed =
+              if (!ok) None
+              else try Some((BigDecimal(s.genericGetMin.toString),
+                BigDecimal(s.genericGetMax.toString)))
+              catch { case _: NumberFormatException => None }
+            parsed match {
+              case Some((lo, hi)) =>
+                perCol.get(name) match {
+                  case Some((l0, h0)) => perCol(name) = (l0.min(lo), h0.max(hi))
+                  case None           => perCol(name) = (lo, hi)
+                }
+              case None => disabled += name // statless/unsupported/non-finite group disables the column
             }
           }
-          // a range is sound only if EVERY row group contributed to it
-          stats(rel) = perCol.filterNot { case (k, _) => disabled.contains(k) }.toMap
-        } finally rd.close()
-      }
+        }
+        // a range is sound only if EVERY row group contributed to it
+        stats(rel) = perCol.filterNot { case (k, _) => disabled.contains(k) }.toMap
+      } finally rd.close()
     }
-    (out.toMap, stats.toMap, schema)
+    (out.toMap, stats.toMap, schema, bytes)
   }
+
+  /** The parquet data files under `root`, recursively (partition dirs
+    * included). */
+  private def dataFiles(spark: SparkSession, root: HPath): Seq[FileStatus] = {
+    val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(root, true)
+    val out = Seq.newBuilder[FileStatus]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f
+    }
+    out.result()
+  }
+
+  /** Data bytes of `base`'s latest snapshot (None when it has none): the
+    * manifest's `bytes`, or for a manifest without it (older build) the
+    * summed length of the snapshot's data files. Runs no Spark job. */
+  def snapshotBytes(spark: SparkSession, base: String): Option[Long] =
+    latestSnapshotId(base).map { id =>
+      Option(manifest(base, id).get("bytes")).map(_.asLong).getOrElse(
+        dataFiles(spark, new HPath(s"$base/data/snap-$id")).map(_.getLen).sum)
+    }
 
   /** Commit df as the next snapshot of `base`. Returns the snapshot.
     * Data lands fully before the manifest is moved into place (atomic
@@ -215,7 +240,7 @@ object TableIO {
     val writer = clustered.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(dataPath) // the ONLY action that computes df
-    val (counts, colStats, schema) = footerCounts(spark, dataPath)
+    val (counts, colStats, schema, bytes) = footerCounts(spark, dataPath)
     val rows = counts.values.sum
     val wallMs = (System.nanoTime() - t0) / 1000000
     // S8 metric sink: one append-only row per commit, written from the
@@ -243,7 +268,7 @@ object TableIO {
       s"\"$p\":$body"
     }.mkString("{", ",", "}")
     val json =
-      s"""{"snapshot":$next,"stage":"${stage}","data":"${dataPath}","rows":$rows,
+      s"""{"snapshot":$next,"stage":"${stage}","data":"${dataPath}","rows":$rows,"bytes":$bytes,
          |"inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],
          |"partition_rows":$lineage,
          |"col_stats":$statsJson,

@@ -13,22 +13,13 @@ import org.apache.spark.sql.Dataset
   * (0.1 s warm, whole seconds in this VM's degraded windows), which is
   * exactly the serial floor the driver fast paths exist to avoid.
   *
-  * Pinning `spark.sql.limit.initialNumPartitions` to cover every
-  * partition makes round 1 scan the whole frame: one job, identical
-  * result, and the per-task early-exit still bounds work when the limit
-  * IS hit. The previous session value is restored on exit.
+  * Instead every partition takes at most `n` rows in the same job (the
+  * per-task early exit of [[BoundedProbe.atMost]]) and the driver keeps
+  * the first `n` in partition order — the rows CollectLimit returns, in
+  * the same order, with no session conf touched.
   */
 object BoundedCollect {
-  private val Key = "spark.sql.limit.initialNumPartitions"
 
-  def limitCollect[T](ds: Dataset[T], n: Int): Array[T] = {
-    val spark = ds.sparkSession
-    val prev = spark.conf.getOption(Key)
-    spark.conf.set(Key, 10000000)
-    try ds.limit(n).collect()
-    finally prev match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None    => spark.conf.unset(Key)
-    }
-  }
+  def limitCollect[T](ds: Dataset[T], n: Int): Array[T] =
+    ds.mapPartitions(_.take(n))(ds.encoder).collect().take(n)
 }

@@ -691,6 +691,52 @@ class IncrementalSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("a durable writerCdc commits each component as one file once it has a snapshot") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ((d1, e1), (d2, e2)) = splitFixture(25, 40)
+    val ((_, _), (d3, e3)) = splitFixture(40, 55)
+    val s0 = IncrementalAlign.initial(spark, d1, e1, icfgIdx)
+    @volatile var ents = e2
+    val stateDir = java.nio.file.Files.createTempDirectory("cdc-layout").toString
+    val source = MemoryStream[DocEvent]
+    val (writer, handle) = graft.streaming.StreamingKg.writerCdc(
+      source.toDS(), _ => ents, s0, icfgIdx, stateDir = Some(stateDir), commitEvery = 1)
+    val q = writer.start()
+    try {
+      source.addData(d2.collect().toSeq.map(DocEvent.add): _*)
+      q.processAllAvailable()
+      ents = e3
+      source.addData(d2.collect().toSeq.sortBy(_.doc_id).take(3).map(d => DocEvent.retract(d.doc_id)) ++
+        d3.collect().toSeq.map(DocEvent.add): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(graft.tableio.StateStore.epochs(stateDir) == Seq(0L, 1L))
+    val second = graft.tableio.StateStore.readEpoch(stateDir, 1L)
+    assert(second.size == 10, s"components: ${second.keys}")
+    second.foreach { case (name, id) =>
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(stateDir, name, "data", s"snap-$id"))
+      val files = try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+        finally st.close()
+      if (name == "canonical") {
+        assert(files.nonEmpty)
+        assert(files.groupBy(_.getParent).values.forall(_.size == 1), s"canonical: $files")
+      } else assert(files.size == 1, s"$name: ${files.size} files")
+    }
+    val reloaded = IncrementalAlign.load(spark, stateDir)
+    val live = handle.state
+    assert(reloaded.sampleIds.toSeq == live.sampleIds.toSeq)
+    assert(topkMap(reloaded) == topkMap(live))
+    assert(acceptedSet(reloaded) == acceptedSet(live))
+    assert(effectiveAssign(reloaded) == effectiveAssign(live))
+    assert(canonBag(reloaded) == canonBag(live))
+    assert(reloaded.idTriples.collect().toSet == live.idTriples.collect().toSet)
+    def indexRows(s: AlignState) = s.index.get.collect().map(r => (r.band, r.key, r.id,
+      r.emb.map(java.lang.Float.floatToRawIntBits).toSeq, r.prefix.toSeq)).toSet
+    assert(indexRows(reloaded) == indexRows(live))
+  }
+
   test("indexed bootstrap scores each cell tile once") {
     val ((d1, e1), _) = splitFixture(40, 60)
     val (st, bootTiles) = sumAccumulator(graft.candidates.BucketIndex.ScoredTiles)(

@@ -589,6 +589,33 @@ class OperatorSpec extends SparkTestBase {
     }
     assert(graft.util.BoundedProbe.atMost(spark.emptyDataFrame, 0))
   }
+
+  test("BoundedCollect.limitCollect: limit(n).collect() rows in one job, no session conf write") {
+    val key = "spark.sql.limit.initialNumPartitions"
+    val before = spark.conf.getOption(key)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val changed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val watcher = new Thread(() => while (!stop.get) {
+      if (spark.conf.getOption(key) != before) changed.set(true)
+      reads.incrementAndGet()
+    })
+    watcher.start()
+    try {
+      for (parts <- Seq(1, 3, 16)) {
+        val ds = spark.range(0, 40, 1, parts).as[Long].filter(_ % 3 != 1)
+        val all = ds.collect().length
+        for (n <- Seq(1, 5, all - 1, all, all + 1, 1000)) {
+          val (got, jobs) = countJobs(graft.util.BoundedCollect.limitCollect(ds, n))
+          assert(got.toSeq == ds.limit(n).collect().toSeq, s"parts=$parts n=$n")
+          assert(got.length == math.min(n, all))
+          assert(jobs == 1, s"parts=$parts n=$n ran $jobs jobs")
+        }
+      }
+    } finally { stop.set(true); watcher.join() }
+    assert(reads.get > 0)
+    assert(!changed.get, "another thread saw the limit conf change")
+  }
 }
 
 object OperatorSpec {

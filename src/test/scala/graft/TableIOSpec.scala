@@ -1,6 +1,6 @@
 package graft
 
-import graft.tableio.TableIO
+import graft.tableio.{StateStore, TableIO}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
@@ -270,6 +270,88 @@ class TableIOSpec extends SparkTestBase {
     assert(snap.id == 1L && snap.rows == 1)
     assert(TableIO.read(spark, base).collect().map(_.getLong(0)).sameElements(Array(4L)))
     assert(TableIO.readAt(spark, base, 0).count() == 1) // time travel unaffected
+  }
+
+  /** the parquet data files under `dir`, recursively */
+  private def parquetFiles(dir: String): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val st = Files.walk(Path.of(dir))
+    try st.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally st.close()
+  }
+
+  test("the manifest records the data bytes; a manifest without them sizes by listing") {
+    val base = tmp()
+    assert(TableIO.snapshotBytes(spark, base).isEmpty)
+    val df = (0L until 300L).map(i => (i, s"v$i", i % 4)).toDF("id", "v", "bucket").repartition(3)
+    TableIO.commit(spark, df, base, "s", partitionCols = Seq("bucket"))
+    val onDisk = parquetFiles(s"$base/data/snap-0").map(Files.size).sum
+    assert(onDisk > 0)
+    val mf = Path.of(base, "_meta", "snapshot-0.json")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readString(mf))
+    assert(root.get("bytes").asLong == onDisk)
+    assert(TableIO.snapshotBytes(spark, base).contains(onDisk))
+    // the manifest as an older build wrote it: no bytes field
+    Files.writeString(mf, Files.readString(mf).replaceFirst("\"bytes\":\\d+,", ""))
+    assert(!Files.readString(mf).contains("bytes"))
+    val (listed, jobs) = countJobs(TableIO.snapshotBytes(spark, base))
+    assert(listed.contains(onDisk) && jobs == 0)
+    // and the next state commit sizes from the listed bytes
+    val dir = tmp()
+    val sdf = (0L until 300L).map(i => (i, s"v$i")).toDF("id", "v").repartition(6)
+    StateStore.save(spark, dir, Seq("t" -> sdf), Map.empty, Nil, _ => Long.MaxValue)
+    val tmf = Path.of(dir, "t", "_meta", "snapshot-0.json")
+    Files.writeString(tmf, Files.readString(tmf).replaceFirst("\"bytes\":\\d+,", ""))
+    val prev = parquetFiles(s"$dir/t/data/snap-0").map(Files.size).sum
+    StateStore.save(spark, dir, Seq("t" -> sdf), Map.empty, Nil, b => { assert(b == prev); (b + 1) / 2 })
+    assert(parquetFiles(s"$dir/t/data/snap-1").size == 2)
+  }
+
+  test("state commits are sized by the previous snapshot's bytes") {
+    import org.apache.spark.sql.Row
+    val dir = tmp()
+    val df = (0L until 2000L).map(i => (i, i / 7.0, (i * 31 % 97).toFloat, i % 5))
+      .toDF("id", "x", "f", "bucket").repartition(8)
+    // (not a coalesce: Catalyst merges a coalesce over a coalesce into
+    // the outer one)
+    val twoParts = df.repartition(2)
+    def bits(rows: Array[Row]): Set[(Long, Long, Int, Long)] = rows.map(r => (r.getLong(0),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
+      java.lang.Float.floatToRawIntBits(r.getFloat(2)), r.getAs[Number](3).longValue)).toSet
+    val expected = bits(df.collect())
+    def snap(name: String): (Long, Seq[Path]) = {
+      val id = StateStore.readEpoch(dir, StateStore.epochs(dir).last)(name)
+      (id, parquetFiles(s"$dir/$name/data/snap-$id"))
+    }
+    def reload(name: String): Set[(Long, Long, Int, Long)] =
+      bits(StateStore.load(spark, dir)(name).select("id", "x", "f", "bucket").collect())
+    val opts = Map("p" -> StateStore.CommitOpts(partitionCols = Seq("bucket")))
+    def save(split: Long => Long, flat: org.apache.spark.sql.DataFrame = df): Unit =
+      StateStore.save(spark, dir, Seq("t" -> flat, "p" -> df), opts, Nil, split)
+    // a first commit keeps the input partitioning: one file per task
+    save(_ => 1L)
+    assert(snap("t")._2.size == 8)
+    assert(snap("p")._2.size == 8 * 5)
+    assert(reload("t") == expected && reload("p") == expected)
+    // a second commit writes ceil(prevBytes / split) files
+    val prevT = TableIO.snapshotBytes(spark, s"$dir/t").get
+    val split = prevT / 3 + 1
+    save(b => if (b == prevT) split else Long.MaxValue)
+    assert(snap("t")._2.size == (prevT + split - 1) / split)
+    assert(snap("t")._2.size == 3)
+    // a partitioned component: one task, so at most one file per dir
+    val pFiles = snap("p")._2
+    assert(pFiles.size == 5 && pFiles.map(_.getParent).distinct.size == 5)
+    assert(reload("t") == expected && reload("p") == expected)
+    // coalesce never raises the partition count
+    save(_ => 1L, twoParts)
+    assert(snap("t")._2.size == 2)
+    assert(reload("t") == expected)
+    // the session's rule at local[4] and default file confs: a small
+    // state is one file, 70 MB is four, 1 GB is 128 MB files
+    val mb = 1L << 20
+    def files(bytes: Long) = (bytes - 1) / StateStore.splitBytes(spark, bytes) + 1
+    assert(files(mb) == 1 && files(70 * mb) == 4 && files(1024 * mb) == 8)
   }
 
   test("TSV dictionary sink round-trips sorted (reference at-rest format)") {
