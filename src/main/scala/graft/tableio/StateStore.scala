@@ -1,7 +1,13 @@
 package graft.tableio
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, Filter, LocalRelation,
+  LogicalPlan, MapElements, MapPartitions, Project, SerializeFromObject, SubqueryAlias,
+  TypedFilter, Union}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.sql.execution.datasources.{FilePartition, LogicalRelation}
 
 /** Atomic MULTI-TABLE state commits: the generic core of the durable
   * continuous-state discipline (factored out of
@@ -39,13 +45,19 @@ import org.apache.spark.sql.execution.datasources.FilePartition
   * written through `coalesce(ceil(bytes / split))`. A small component is
   * one file (a `partitionCols` table: at most one per partition dir); a
   * large one keeps its parallelism; `coalesce` never raises the
-  * partition count (but Catalyst merges a coalesce over a coalesce into
-  * the outer one, so a component that is itself a coalesce would be
-  * re-widened — no state component is). A component with no previous
-  * snapshot keeps its input partitioning. `coalesce` is narrow: it
-  * pulls the component's upstream plan into those tasks, which is cheap
-  * because every state component is a union or filter over
-  * materialized pieces.
+  * partition count. A component with no previous snapshot keeps its
+  * input partitioning. `coalesce` is narrow: it
+  * pulls the component's upstream plan into those tasks. That is cheap
+  * only when the plan runs no shuffle, so only such a component is
+  * coalesced: row-local operators (projections, filters, unions) over
+  * file scans and RDDs whose lineage reaches no shuffle that a
+  * checkpoint has not already cut. A component that still has a
+  * shuffle's reduce side to run (a lazy cut over an aggregation that
+  * nothing has acted on yet, such as the vocab fold's counts or the LSH
+  * fold's pairs, which union in a `distinct`) keeps its input
+  * partitioning, so that reduce side keeps its width. The choice is made for every component before any of their
+  * jobs starts (one component's write may materialize a lazy cut that
+  * another reads).
   */
 object StateStore {
 
@@ -75,12 +87,13 @@ object StateStore {
                           opts: Map[String, CommitOpts],
                           files: Seq[(String, String)],
                           split: Long => Long): Long = {
-    val commits = components.map { case (name, df) => () => {
+    val sized = components.map { case (name, df) =>
+      val bytes = if (runsNoShuffle(df)) TableIO.snapshotBytes(spark, s"$dir/$name") else None
+      name -> bytes.fold(df)(b => df.coalesce(fileCount(b, split(b))))
+    }
+    val commits = sized.map { case (name, df) => () => {
       val o = opts.getOrElse(name, CommitOpts())
-      val base = s"$dir/$name"
-      val sized = TableIO.snapshotBytes(spark, base)
-        .fold(df)(bytes => df.coalesce(fileCount(bytes, split(bytes))))
-      name -> TableIO.commit(spark, sized, base, "state",
+      name -> TableIO.commit(spark, df, s"$dir/$name", "state",
         inputs = o.inputs, partitionCols = o.partitionCols).id
     } }
     val ids = graft.util.ParJobs.run(spark, MaxParallelCommits)(commits)
@@ -99,6 +112,30 @@ object StateStore {
     val openCost = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.filesOpenCostInBytes
     FilePartition.maxSplitBytes(spark, bytes + openCost)
+  }
+
+  /** True when computing `df` runs no shuffle (see the sizing note
+    * above): its analyzed plan holds only row-local operators, and every
+    * RDD it scans reaches no shuffle dependency before a materialized
+    * checkpoint (whose dependencies Spark has already truncated). Any
+    * other operator counts as a shuffle. Reads only the plan and the RDD
+    * graph; runs no Spark job. */
+  private[graft] def runsNoShuffle(df: DataFrame): Boolean = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def rdd(r: RDD[_]): Boolean = !seen.add(r.id) || r.dependencies.forall {
+      case _: ShuffleDependency[_, _, _] => false
+      case d => rdd(d.rdd)
+    }
+    def plan(p: LogicalPlan): Boolean = p match {
+      case l: LogicalRDD => rdd(l.rdd)
+      case l: ExternalRDD[_] => rdd(l.rdd)
+      case _: LocalRelation | _: LogicalRelation => true
+      case _: Project | _: Filter | _: Union | _: SubqueryAlias | _: TypedFilter |
+           _: SerializeFromObject | _: DeserializeToObject | _: MapElements |
+           _: MapPartitions => p.children.forall(plan)
+      case _ => false
+    }
+    plan(df.queryExecution.analyzed)
   }
 
   /** `ceil(bytes / split)`, at least one file */

@@ -29,12 +29,6 @@ import scala.jdk.CollectionConverters._
   * schema-inference job; a manifest without it (committed by an older
   * build) falls back to inference.
   *
-  * The manifest's `bytes` field is the summed length of the snapshot's
-  * data files, taken from the same listing that reads their footers; it
-  * sizes the next write of the table ([[snapshotBytes]],
-  * [[StateStore.save]]). A manifest without it falls back to listing
-  * the snapshot's data dir.
-  *
   * Gives exactly the properties the north rule exercises: atomic
   * snapshot commit (manifest-last-write of a complete JSON), checkpointed
   * resume (a stage whose snapshot exists is skipped and read back),
@@ -136,19 +130,16 @@ object TableIO {
     * columns whose every row group carries non-null min/max statistics;
     * they feed the manifest's `col_stats` for metadata-driven file
     * skipping ([[prunedFiles]]/[[readRange]]). Also returns the Spark
-    * schema JSON stored in the first footer (null when no file has one)
-    * and the summed length of the data files. */
+    * schema JSON stored in the first footer (null when no file has one). */
   private def footerCounts(spark: SparkSession, dataPath: String)
-      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]], String, Long) = {
+      : (Map[String, Long], Map[String, Map[String, (BigDecimal, BigDecimal)]], String) = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(dataPath)
     val out = scala.collection.mutable.LinkedHashMap[String, Long]()
     val stats = scala.collection.mutable.LinkedHashMap[String, Map[String, (BigDecimal, BigDecimal)]]()
     var schema: String = null
-    var bytes = 0L
     dataFiles(spark, root).foreach { f =>
-      bytes += f.getLen
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
       try {
         val rel = root.toUri.relativize(f.getPath.toUri).toString
@@ -186,7 +177,7 @@ object TableIO {
         stats(rel) = perCol.filterNot { case (k, _) => disabled.contains(k) }.toMap
       } finally rd.close()
     }
-    (out.toMap, stats.toMap, schema, bytes)
+    (out.toMap, stats.toMap, schema)
   }
 
   /** The parquet data files under `root`, recursively (partition dirs
@@ -201,14 +192,13 @@ object TableIO {
     out.result()
   }
 
-  /** Data bytes of `base`'s latest snapshot (None when it has none): the
-    * manifest's `bytes`, or for a manifest without it (older build) the
-    * summed length of the snapshot's data files. Runs no Spark job. */
+  /** Data bytes of `base`'s latest snapshot (None when it has none):
+    * the summed length of its data files, from a listing of the
+    * snapshot's data dir. Runs no Spark job; sizes the next write of a
+    * state component ([[StateStore.save]]). */
   def snapshotBytes(spark: SparkSession, base: String): Option[Long] =
-    latestSnapshotId(base).map { id =>
-      Option(manifest(base, id).get("bytes")).map(_.asLong).getOrElse(
-        dataFiles(spark, new HPath(s"$base/data/snap-$id")).map(_.getLen).sum)
-    }
+    latestSnapshotId(base).map(id =>
+      dataFiles(spark, new HPath(s"$base/data/snap-$id")).map(_.getLen).sum)
 
   /** Commit df as the next snapshot of `base`. Returns the snapshot.
     * Data lands fully before the manifest is moved into place (atomic
@@ -240,7 +230,7 @@ object TableIO {
     val writer = clustered.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(dataPath) // the ONLY action that computes df
-    val (counts, colStats, schema, bytes) = footerCounts(spark, dataPath)
+    val (counts, colStats, schema) = footerCounts(spark, dataPath)
     val rows = counts.values.sum
     val wallMs = (System.nanoTime() - t0) / 1000000
     // S8 metric sink: one append-only row per commit, written from the
@@ -268,7 +258,7 @@ object TableIO {
       s"\"$p\":$body"
     }.mkString("{", ",", "}")
     val json =
-      s"""{"snapshot":$next,"stage":"${stage}","data":"${dataPath}","rows":$rows,"bytes":$bytes,
+      s"""{"snapshot":$next,"stage":"${stage}","data":"${dataPath}","rows":$rows,
          |"inputs":[${inputs.map(i => "\"" + i + "\"").mkString(",")}],
          |"partition_rows":$lineage,
          |"col_stats":$statsJson,

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 
 /** `limit(n).collect()` in ONE scheduled job.
   *
@@ -14,12 +15,19 @@ import org.apache.spark.sql.Dataset
   * exactly the serial floor the driver fast paths exist to avoid.
   *
   * Instead every partition takes at most `n` rows in the same job (the
-  * per-task early exit of [[BoundedProbe.atMost]]) and the driver keeps
-  * the first `n` in partition order — the rows CollectLimit returns, in
-  * the same order, with no session conf touched.
+  * per-task early exit of [[BoundedProbe.atMost]]) and ships them as
+  * binary rows; the driver decodes only the first `n` in partition
+  * order — the rows CollectLimit returns, in the same order, with no
+  * session conf touched. As in CollectLimit's own first round, an
+  * over-limit frame holds up to `n` binary rows per partition on the
+  * driver, but only `n` decoded objects.
   */
 object BoundedCollect {
 
-  def limitCollect[T](ds: Dataset[T], n: Int): Array[T] =
-    ds.mapPartitions(_.take(n))(ds.encoder).collect().take(n)
+  def limitCollect[T](ds: Dataset[T], n: Int): Array[T] = {
+    val qe = ds.queryExecution
+    val rows = qe.toRdd.mapPartitions(_.take(n).map(_.copy())).collect()
+    val decode = encoderFor(ds.encoder).resolveAndBind(qe.analyzed.output).createDeserializer()
+    rows.iterator.take(n).map(decode).toArray(ds.encoder.clsTag)
+  }
 }

@@ -612,6 +612,19 @@ class OperatorSpec extends SparkTestBase {
           assert(jobs == 1, s"parts=$parts n=$n ran $jobs jobs")
         }
       }
+      // over the cap on every partition, typed and untyped rows, and a
+      // frame whose last stage reads a shuffle
+      val pairs = spark.range(0, 4000, 1, 16).map(i => (i, s"v${i % 37}"))
+      import org.apache.spark.sql.functions.{count, lit, min}
+      val grouped = pairs.toDF("k", "v").groupBy("v").agg(count(lit(1)).as("n"), min("k").as("k"))
+      for (n <- Seq(1, 7, 100)) {
+        assert(graft.util.BoundedCollect.limitCollect(pairs, n).toSeq == pairs.limit(n).collect().toSeq)
+        val rows = graft.util.BoundedCollect.limitCollect(pairs.toDF("k", "v"), n)
+        assert(rows.toSeq == pairs.toDF("k", "v").limit(n).collect().toSeq)
+        assert(rows.head.schema.fieldNames.toSeq == Seq("k", "v"))
+        val got = graft.util.BoundedCollect.limitCollect(grouped, n)
+        assert(got.length == math.min(n, 37) && got.toSet.subsetOf(grouped.collect().toSet))
+      }
     } finally { stop.set(true); watcher.join() }
     assert(reads.get > 0)
     assert(!changed.get, "another thread saw the limit conf change")

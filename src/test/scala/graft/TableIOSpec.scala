@@ -280,41 +280,27 @@ class TableIOSpec extends SparkTestBase {
     finally st.close()
   }
 
-  test("the manifest records the data bytes; a manifest without them sizes by listing") {
+  test("snapshotBytes is the latest snapshot's on-disk data bytes, with no Spark job") {
     val base = tmp()
     assert(TableIO.snapshotBytes(spark, base).isEmpty)
     val df = (0L until 300L).map(i => (i, s"v$i", i % 4)).toDF("id", "v", "bucket").repartition(3)
     TableIO.commit(spark, df, base, "s", partitionCols = Seq("bucket"))
-    val onDisk = parquetFiles(s"$base/data/snap-0").map(Files.size).sum
-    assert(onDisk > 0)
-    val mf = Path.of(base, "_meta", "snapshot-0.json")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readString(mf))
-    assert(root.get("bytes").asLong == onDisk)
-    assert(TableIO.snapshotBytes(spark, base).contains(onDisk))
-    // the manifest as an older build wrote it: no bytes field
-    Files.writeString(mf, Files.readString(mf).replaceFirst("\"bytes\":\\d+,", ""))
-    assert(!Files.readString(mf).contains("bytes"))
-    val (listed, jobs) = countJobs(TableIO.snapshotBytes(spark, base))
-    assert(listed.contains(onDisk) && jobs == 0)
-    // and the next state commit sizes from the listed bytes
-    val dir = tmp()
-    val sdf = (0L until 300L).map(i => (i, s"v$i")).toDF("id", "v").repartition(6)
-    StateStore.save(spark, dir, Seq("t" -> sdf), Map.empty, Nil, _ => Long.MaxValue)
-    val tmf = Path.of(dir, "t", "_meta", "snapshot-0.json")
-    Files.writeString(tmf, Files.readString(tmf).replaceFirst("\"bytes\":\\d+,", ""))
-    val prev = parquetFiles(s"$dir/t/data/snap-0").map(Files.size).sum
-    StateStore.save(spark, dir, Seq("t" -> sdf), Map.empty, Nil, b => { assert(b == prev); (b + 1) / 2 })
-    assert(parquetFiles(s"$dir/t/data/snap-1").size == 2)
+    val first = parquetFiles(s"$base/data/snap-0").map(Files.size).sum
+    assert(first > 0)
+    val (bytes, jobs) = countJobs(TableIO.snapshotBytes(spark, base))
+    assert(bytes.contains(first) && jobs == 0)
+    TableIO.commit(spark, df.filter($"id" < 10), base, "s")
+    val second = parquetFiles(s"$base/data/snap-1").map(Files.size).sum
+    assert(second != first && TableIO.snapshotBytes(spark, base).contains(second))
   }
 
   test("state commits are sized by the previous snapshot's bytes") {
     import org.apache.spark.sql.Row
     val dir = tmp()
+    // materialized pieces: the state components' shape, no shuffle left
     val df = (0L until 2000L).map(i => (i, i / 7.0, (i * 31 % 97).toFloat, i % 5))
-      .toDF("id", "x", "f", "bucket").repartition(8)
-    // (not a coalesce: Catalyst merges a coalesce over a coalesce into
-    // the outer one)
-    val twoParts = df.repartition(2)
+      .toDF("id", "x", "f", "bucket").repartition(8).localCheckpoint()
+    val twoParts = df.repartition(2).localCheckpoint()
     def bits(rows: Array[Row]): Set[(Long, Long, Int, Long)] = rows.map(r => (r.getLong(0),
       java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
       java.lang.Float.floatToRawIntBits(r.getFloat(2)), r.getAs[Number](3).longValue)).toSet
@@ -347,6 +333,24 @@ class TableIOSpec extends SparkTestBase {
     save(_ => 1L, twoParts)
     assert(snap("t")._2.size == 2)
     assert(reload("t") == expected)
+    // a component with a shuffle still to run keeps its partitioning,
+    // so the shuffle's reduce side keeps its width; once a job has
+    // materialized its cut, it is sized like any other
+    val pending = df.repartition(4).localCheckpoint(eager = false)
+    assert(!StateStore.runsNoShuffle(pending))
+    save(_ => Long.MaxValue, pending)
+    assert(snap("t")._2.size == 4)
+    assert(reload("t") == expected)
+    assert(StateStore.runsNoShuffle(pending))
+    save(_ => Long.MaxValue, pending)
+    assert(snap("t")._2.size == 1)
+    assert(reload("t") == expected)
+    assert(StateStore.runsNoShuffle(df.filter($"id" > 3).union(df).select("id")))
+    assert(StateStore.runsNoShuffle(df.union(twoParts).localCheckpoint(eager = false)))
+    assert(StateStore.runsNoShuffle(StateStore.load(spark, dir)("t")))
+    assert(!StateStore.runsNoShuffle(df.repartition(4)))
+    assert(!StateStore.runsNoShuffle(df.groupBy("bucket").count()))
+    assert(!StateStore.runsNoShuffle(df.union(df.distinct())))
     // the session's rule at local[4] and default file confs: a small
     // state is one file, 70 MB is four, 1 GB is 128 MB files
     val mb = 1L << 20
