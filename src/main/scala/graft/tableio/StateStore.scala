@@ -46,18 +46,22 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, LogicalRelatio
   * one file (a `partitionCols` table: at most one per partition dir); a
   * large one keeps its parallelism; `coalesce` never raises the
   * partition count. A component with no previous snapshot keeps its
-  * input partitioning. `coalesce` is narrow: it
-  * pulls the component's upstream plan into those tasks. That is cheap
-  * only when the plan runs no shuffle, so only such a component is
-  * coalesced: row-local operators (projections, filters, unions) over
-  * file scans and RDDs whose lineage reaches no shuffle that a
-  * checkpoint has not already cut. A component that still has a
-  * shuffle's reduce side to run (a lazy cut over an aggregation that
-  * nothing has acted on yet, such as the vocab fold's counts or the LSH
-  * fold's pairs, which union in a `distinct`) keeps its input
-  * partitioning, so that reduce side keeps its width. The choice is made for every component before any of their
-  * jobs starts (one component's write may materialize a lazy cut that
-  * another reads).
+  * input partitioning. The estimate lags one commit, so a bulk batch
+  * after a small state is written by as few tasks as the small state
+  * needed.
+  *
+  * `coalesce` is narrow: it pulls the component's upstream plan into
+  * those tasks. That is cheap only when the plan runs no shuffle, so
+  * only such a component is coalesced ([[runsNoShuffle]]): row-local
+  * operators (projections, filters, unions) over file scans and RDDs
+  * whose lineage reaches no shuffle that a checkpoint has not already
+  * cut. A component that still has a shuffle's reduce side to run (a
+  * lazy cut over an aggregation that nothing has acted on yet, such as
+  * the vocab fold's counts or the LSH fold's pairs, which union in a
+  * `distinct`) keeps its input partitioning, so that reduce side keeps
+  * its width. The choice is made for every component before any of
+  * their jobs starts (one component's write may materialize a lazy cut
+  * that another reads).
   */
 object StateStore {
 
@@ -87,13 +91,13 @@ object StateStore {
                           opts: Map[String, CommitOpts],
                           files: Seq[(String, String)],
                           split: Long => Long): Long = {
-    val sized = components.map { case (name, df) =>
-      val bytes = if (runsNoShuffle(df)) TableIO.snapshotBytes(spark, s"$dir/$name") else None
-      name -> bytes.fold(df)(b => df.coalesce(fileCount(b, split(b))))
-    }
-    val commits = sized.map { case (name, df) => () => {
+    val sizable = components.map { case (_, df) => runsNoShuffle(df) }
+    val commits = components.zip(sizable).map { case ((name, df), canSize) => () => {
       val o = opts.getOrElse(name, CommitOpts())
-      name -> TableIO.commit(spark, df, s"$dir/$name", "state",
+      val base = s"$dir/$name"
+      val sized = (if (canSize) TableIO.snapshotBytes(spark, base) else None)
+        .fold(df)(bytes => df.coalesce(fileCount(bytes, split(bytes))))
+      name -> TableIO.commit(spark, sized, base, "state",
         inputs = o.inputs, partitionCols = o.partitionCols).id
     } }
     val ids = graft.util.ParJobs.run(spark, MaxParallelCommits)(commits)
