@@ -8,7 +8,7 @@ import jdk.incubator.vector.VectorSpecies;
 /**
  * SIMD quantized-dot kernel (Panama vector API, incubator module shipped
  * with JDK 17) for the LSH/IVF scoring inner loop — the hottest frame of
- * the candidate stage (~70% of its CPU in StackProfile at E=50k).
+ * the candidate stage (~70% of its CPU in E=50k stack samples, BENCH.md).
  *
  * EXACTNESS: pure integer arithmetic — the returned int is bit-identical
  * to the scalar loop's. Overflow cannot occur anywhere: inputs are
@@ -18,7 +18,7 @@ import jdk.incubator.vector.VectorSpecies;
  * accumulator, every partial lane combination and the final reduction
  * are subset sums, all under half of Integer.MAX_VALUE. Gated against
  * the long-accumulated reference (incl. +-unit-spike worst cases) in
- * OperatorSpec and tools/DotBench.
+ * OperatorSpec.
  *
  * Loaded reflectively-by-effect: LshTopK probes it once and falls back
  * to the scalar loop if the incubator module is absent at runtime.

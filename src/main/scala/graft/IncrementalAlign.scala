@@ -108,9 +108,7 @@ final case class IncrementalConfig(
       * the designed path at that scale, and switching rules must be the
       * caller's explicit choice because exact and indexed lists are
       * different contracts. ≤ 0 disables the gate. */
-    exactBootstrapMaxRows: Long = 4_000_000L,
-    /** per-phase wall + set-size diagnostics on stderr */
-    diag: Boolean = false)
+    exactBootstrapMaxRows: Long = 4_000_000L)
 
 /** Committed state — one row per KG1 query in `topk` (the scored
   * candidate table, query encodings denormalized in), current encodings
@@ -284,8 +282,7 @@ object IncrementalAlign {
     val entsP = cut(ents)
     // one bounded probe decides every forced dim-broadcast of the
     // bootstrap (PipelineConfig.dimBroadcastMaxRows discipline)
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(entsP.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = graft.util.BoundedProbe.dimsBounded(entsP.toDF(), cfg.dimBroadcastMaxRows)
     val idT = cut(Extraction.idTriplesP(spark, Extraction.rawTriples(spark, docs), entsP,
       dimsBounded))
     val rawE = cut(Embedder.embedEntities(spark, entsP, cfg.embed))
@@ -333,13 +330,26 @@ object IncrementalAlign {
       (tk, sIds, Some(g), Some(ix))
     }
 
-    val accepted = cut(topkC.filter(_.acceptedDst >= 0L)
-      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
-    val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
-    val canonical = cut(materialize(spark, idT, assignment, entsP, dimsBounded))
-    canonical.count()
+    val (accepted, assignment, canonical) =
+      canonicalize(spark, topkC, idT, entsP, dimsBounded)
     AlignState(entsP, idT, rawE, encoded, topkC, sampleIds, accepted, assignment,
       canonical, weights, geom, index)
+  }
+
+  /** The bootstrap tail shared by [[initial]] and [[rebootstrap]]:
+    * accepted edges → connected components → canonical triples.
+    * `dimsBounded` is by-name: a probe the caller passes runs after the
+    * components, which keeps [[rebootstrap]]'s job order. */
+  private def canonicalize(spark: SparkSession, topk: Dataset[ScoredQuery],
+                           triples: Dataset[DocTriple], ents: Dataset[Entity],
+                           dimsBounded: => Boolean): (DataFrame, DataFrame, DataFrame) = {
+    import spark.implicits._
+    val accepted = cut(topk.filter(_.acceptedDst >= 0L)
+      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
+    val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
+    val canonical = cut(materialize(spark, triples, assignment, ents, dimsBounded))
+    canonical.count()
+    (accepted, assignment, canonical)
   }
 
   /** INDEXED bootstrap scorer — DISTRIBUTED end-to-end (round 3.5): the
@@ -415,14 +425,8 @@ object IncrementalAlign {
       .as[(Long, Array[Float])]
     val (tk, sIds, g, ix) =
       indexedBootstrap(spark, corpusDs, queries, geometry, cfg, kPrime, tau)
-    val accepted = cut(tk.filter(_.acceptedDst >= 0L)
-      .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
-    val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(state.ents.toDF(), cfg.dimBroadcastMaxRows)
-    val canonical = cut(materialize(spark, state.idTriples, assignment, state.ents,
-      dimsBounded))
-    canonical.count()
+    val (accepted, assignment, canonical) = canonicalize(spark, tk, state.idTriples,
+      state.ents, graft.util.BoundedProbe.dimsBounded(state.ents.toDF(), cfg.dimBroadcastMaxRows))
     state.copy(topk = tk, sampleIds = sIds, accepted = accepted,
       assignment = assignment, canonical = canonical,
       geometry = Some(g), index = Some(ix),
@@ -474,9 +478,6 @@ object IncrementalAlign {
             cfg: IncrementalConfig): AlignState = {
     import spark.implicits._
     val sc = spark.sparkContext
-    val tStart = System.nanoTime()
-    def diag(msg: => String): Unit = if (cfg.diag)
-      System.err.println(f"[inc-apply ${(System.nanoTime() - tStart) / 1e9}%6.1f s] $msg")
     val newEnts = if (staticallyEmpty(ents2)) None else Some(cut(ents2))
     val newDocs = if (staticallyEmpty(adds)) None else Some(adds)
     if (newEnts.isEmpty && newDocs.isEmpty && tombstones.isEmpty) return state
@@ -487,8 +488,7 @@ object IncrementalAlign {
     // LogicalRDDs — shallow; StreamingKg's commits compact it.
     val entsU = newEnts.fold(state.ents)(state.ents.unionByName(_))
     // one bounded probe per batch over the UPDATED dictionary
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(entsU.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = graft.util.BoundedProbe.dimsBounded(entsU.toDF(), cfg.dimBroadcastMaxRows)
     val rawU = newEnts.fold(state.rawEmbs)(e =>
       state.rawEmbs.unionByName(cut(Embedder.embedEntities(spark, e, cfg.embed))))
     val deltaT = newDocs.map(d => cut(Extraction.idTriplesP(spark,
@@ -513,7 +513,6 @@ object IncrementalAlign {
       val kg = Extraction.kgOf(docId); Iterator(h -> kg, t -> kg)
     }.toMap
     val touched: Map[Long, Int] = endpoints ++ newIds
-    diag(s"touched=${touched.size} (new=${newIds.size}, tombstones=${tombstones.size})")
 
     val deltaKg2Ids = newIds.collect { case (id, 2) => id }.toArray
     // rows of these docs materialize regardless of component changes
@@ -528,12 +527,10 @@ object IncrementalAlign {
       .filter(t => bcTouched.value.contains(t.head) || bcTouched.value.contains(t.tail))
     val encodedT = encodeIds(spark, touchedSet, touched, incident, entsU, rawU,
       state.weights, dim, dimsBounded)
-    diag("re-encode: encodeIds plan built")
     val encodedUC = cut(state.encoded.as[(Long, Int, Array[Float])]
       .filter(r => !bcTouched.value.contains(r._1)).toDF("id", "kg", "emb")
       .unionByName(encodedT))
     encodedUC.count()
-    diag("re-encode done")
 
     // ---- calibration sample (exact order-statistics merge), delta
     //      corpus and re-encoded queries, fetched in ONE pass ----
@@ -557,7 +554,6 @@ object IncrementalAlign {
     val bcDeltaCorpus = sc.broadcast(
       fetched.filter(r => r._2 == 2 && bcChangedKg2.value.contains(r._1))
         .map { case (i, _, e) => Emb(i, e) }.sortBy(_.id))
-    diag(s"delta corpus=${bcDeltaCorpus.value.length} (changed kg2=${changedKg2.size}), touched kg1=${touchedKg1.size}")
 
     // ---- drift monitor (indexed mode): score this batch's fresh
     //      encodings against the frozen geometry, from arrays already
@@ -567,7 +563,6 @@ object IncrementalAlign {
       val reference = bcSample.value.filter(e => !bcChangedKg2.value.contains(e.id))
       graft.candidates.DriftMonitor.assess(bcDeltaCorpus.value, reference, g)
     }
-    driftStats.foreach(s => diag(s"drift monitor: $s"))
 
     // ---- indexed mode: maintain the committed bucket index FIRST so
     //      the rescore pass probes current encodings — drop re-encoded
@@ -626,7 +621,6 @@ object IncrementalAlign {
     // committed row — untouched, so encoded and topk agree on it
     val rescoreQs = fetched.collect { case (i, 1, e) if touchedKg1(i) => (i, e) } ++
       stale.collect { case (i, _, e) if !touchedKg1(i) => (i, e) }
-    diag(s"phase A done; rescore queries=${rescoreQs.length} (stale lists=${oldAccepted.size - oldAccepted.keySet.count(touchedKg1)}, stale encodings=${oldAccepted.keySet.count(touchedKg1)}, new=${rescoreQs.length - oldAccepted.size})")
     val bcQs = sc.broadcast(rescoreQs)
     val bcOld = sc.broadcast(oldAccepted)
     // scored-pair mass of the rescore pass — the deterministic evidence
@@ -701,7 +695,6 @@ object IncrementalAlign {
     val maintained = phaseA.filter(!_.rescore).unionByName(rescored).persist(lvl)
     val topkU = cut(maintained.map(_.q))
     topkU.count()
-    diag(s"phase B (rescore) done; scored pairs=${candAcc.value}")
 
     // ---- canonicalization maintenance on the accepted-edge diff ----
     val edgeChanges = maintained
@@ -709,10 +702,8 @@ object IncrementalAlign {
       .filter(c => c._2 != c._3).persist(lvl)
     val added = edgeChanges.filter(_._3 >= 0L).map(c => (c._1, c._3)).toDF("a", "b")
     val removed = edgeChanges.filter(_._2 >= 0L).map(c => (c._1, c._2)).toDF("a", "b")
-    diag(s"edge diff built")
     val (assignmentU, changedNodes) = ConnectedComponents.maintainDetailed(
       spark, state.assignment, state.accepted, added, removed)
-    diag(s"CC maintainDetailed returned")
     val assignP = cut(assignmentU)
     val acceptedU = cut(topkU.filter(_.acceptedDst >= 0L)
       .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
@@ -737,13 +728,11 @@ object IncrementalAlign {
     val relabel = triplesU
       .filter(t => bcChangedNodes.value.contains(t.head) ||
         bcChangedNodes.value.contains(t.tail) || bcNewDocs.value.contains(t.docId))
-    diag(s"CC maintain done; changed nodes=${bcChangedNodes.value.size}")
     val canonicalU = cut(keep.unionByName(
         materialize(spark, relabel, assignP, entsU, dimsBounded))
       .select(CanonCols.map(col): _*))
     canonicalU.count()
 
-    diag("canonical maintenance done")
     phaseA.unpersist(blocking = false)
     maintained.unpersist(blocking = false)
     edgeChanges.unpersist(blocking = false)

@@ -37,7 +37,7 @@ object KgQueries {
       "spark.sql.shuffle.partitions" -> "8") ++ (if (interpreted) Seq(
       // janino compilation of per-plan generated classes is the other
       // fixed driver cost of the tiny fixtures (codegen frames ~70
-      // CPU-s over the two incremental builds, tools/CpuProfile);
+      // CPU-s over the two incremental builds in a CPU profile);
       // interpreted evaluation is semantically identical (it is
       // Spark's own codegen fallback) and instant on ≤80-row frames.
       // NOT applied to the LSH/IVF candidate queries (interpreted =
@@ -196,8 +196,8 @@ object KgQueries {
     * geometry from the CURRENT corpus sample, rebuilds index +
     * candidate lists through the same distributed cogroup scorer as the
     * bootstrap, and emits the rebuilt canonical triples — the recovery
-    * operation for bootstrap-sample drift (recall evidence in BENCH.md,
-    * tools/DriftProbe). Rows-only; the binding gate is IncrementalSpec's
+    * operation for bootstrap-sample drift (recall evidence in
+    * BENCH.md). Rows-only; the binding gate is IncrementalSpec's
     * component-for-component equality with a fresh initial over the
     * grown corpus, including the freshly fit geometry. */
   def qKgRebootstrap(spark: SparkSession, dir: String): DataFrame = {

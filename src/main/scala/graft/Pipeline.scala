@@ -184,8 +184,7 @@ object Pipeline {
       else ents0)
 
     // one bounded probe decides every forced dim-broadcast this run
-    val dimsBounded = cfg.dimBroadcastMaxRows > 0 &&
-      graft.util.BoundedProbe.atMost(ents.toDF(), cfg.dimBroadcastMaxRows)
+    val dimsBounded = graft.util.BoundedProbe.dimsBounded(ents.toDF(), cfg.dimBroadcastMaxRows)
 
     // ---- stage 1: extraction (checkpointable) ----
     val raw0 = Extraction.rawTriples(spark, docs)
@@ -203,7 +202,7 @@ object Pipeline {
       // two union branches are separate map subtrees over the doc
       // source) and the stage-6 materialize join (a third pass).
       // Measured at E=50k/8c: the re-extraction stage billed ~147
-      // task-seconds of the 559 s run (tools/BenchOne stage table);
+      // task-seconds of the 559 s run (stage table in BENCH.md);
       // the localCheckpoint is one narrow triple table.
       case None => graft.util.Lineage.cut(Extraction.idTriples(spark, raw, ents, dimsBounded))
     }
@@ -341,7 +340,7 @@ object Pipeline {
     // the SAME un-projected plan, so the pair of broadcast exchanges
     // canonicalizes identically and AQE builds each broadcast ONCE
     // instead of twice (a duplicate exchange costs a job + ~0.5 s of
-    // driver planning gap on the bench VM — tools/JobCount; the serial
+    // driver planning gap on the bench VM, BENCH.md; the serial
     // floor that Amdahl-caps small-rung N-vs-4N scaling)
     val canonMap = comps.select(col("node"), col("component"))
     val names = graft.util.BoundedProbe.dimHint(

@@ -92,7 +92,7 @@ object TextQueries {
     // NOT persisted: the expensive part of `shingles` (scan → explode →
     // the distinct's exchange) is shared across all three consumers by
     // Catalyst's ReuseExchange — only the cheap post-shuffle dedup
-    // re-runs per consumer. Measured (TimeOne/NgramProbe, sf0.1 battery
+    // re-runs per consumer. Measured (BENCH.md, sf0.1 battery
     // conditions): uncached 4.4 s / 837 user-jiffies vs 3.2 s + cache
     // build for the persisted plan — and materializing a cache INSIDE a
     // multi-branch join intermittently triggers a kernel-side mmap storm

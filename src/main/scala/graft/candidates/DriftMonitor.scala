@@ -9,7 +9,7 @@ import graft.kg.Emb
   * must not drift batch to batch — the delta/retract exactness laws),
   * and [[graft.IncrementalAlign.rebootstrap]] is the recovery
   * operation — but the decay it recovers from is SILENT by the cheap
-  * metrics: DriftProbe measured candidate recall sagging 0.93 → 0.60
+  * metrics: a drift probe measured candidate recall sagging 0.93 → 0.60
   * while candidate mass stayed LOW (BENCH.md drift table), so nothing
   * an operator watches for cost tells them the index has gone stale.
   * This monitor turns state the refresh pass already holds on the
@@ -23,7 +23,7 @@ import graft.kg.Emb
   *  - '''widthRatio''' — rms per-coordinate residual of the fresh rows
   *    around the FROZEN center, divided by the fitted residual width
   *    (`geometry.width / wScale` — exactly `sqrt(residVar/dim)` of the
-  *    bootstrap sample, [[IndexGeometry.fit]]). The DriftProbe decay
+  *    bootstrap sample, [[IndexGeometry.fit]]). The measured decay
   *    mechanism is precisely this statistic blowing past 1: a drifted
   *    population's residuals span multiple frozen buckets, so true
   *    neighbors stop sharing bands.
@@ -36,7 +36,7 @@ import graft.kg.Emb
   *    with history ⇒ ≪ 1 — the "recall sags while candidate mass stays
   *    low" signature measured directly.
   *
-  * Thresholds (validated on the DriftProbe two-pole fixture, numbers
+  * Thresholds (validated on the two-pole drift fixture, numbers
   * in BENCH.md): advise `rebootstrap` when `widthRatio >` 1.5 or
   * `collisionRatio <` 0.5; `score` normalizes both so score ≥ 1 ⟺
   * advised. Cost: O(min(Δ,512) × (dim + 512·bands)) driver arithmetic

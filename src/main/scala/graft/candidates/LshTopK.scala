@@ -111,12 +111,13 @@ object LshTopK {
     * PREFIX sum of products is bounded by |a|·|b| ≤ (32767 + ½√n)² ≈
     * 1.08e9 — under half of Int.MaxValue, so the int accumulator can
     * never wrap (exactness re-checked against a long-accumulated
-    * reference incl. ±unit-spike worst cases in OperatorSpec and
-    * tools/DotBench). The payoff is the paired form
+    * reference incl. ±unit-spike worst cases in OperatorSpec). The
+    * payoff is the paired form
     * `s += a(i)*b(i) + a(i+1)*b(i+1)`, which HotSpot C2 recognizes as
     * MulAddS2I and auto-vectorizes to pmaddwd-class SIMD — measured
     * ~4× the long-accumulated scalar loop on this box, on the frame
-    * that is ~70% of the LSH scoring stage's CPU (StackProfile E=50k).
+    * that is ~70% of the LSH scoring stage's CPU (E=50k stack samples,
+    * BENCH.md).
     * The returned integer is bit-identical either way, so every
     * candidate score is unchanged. */
   private[candidates] def dotQScalarInt(a: Array[Short], b: Array[Short]): Int = {
@@ -267,7 +268,7 @@ object LshTopK {
     // consumer is the cell join; the hot-cell count reads a KEYS-ONLY
     // banding pass over the persisted inputs (20 projection dots per row,
     // no quantize/prefix materialization), so a columnar cache build of
-    // the ~bands×-expanded frames (~45 CPU-s at E=50k, tools/CpuProfile)
+    // the ~bands×-expanded frames (~45 CPU-s at E=50k, BENCH.md)
     // buys nothing.
     // The partition count is DATA-derived (~64 MB of banded rows per
     // partition), floored by the session parallelism — NOT a multiple of

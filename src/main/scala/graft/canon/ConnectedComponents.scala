@@ -87,28 +87,24 @@ object ConnectedComponents {
   /** edges: DataFrame(a LONG, b LONG) undirected.
     * Returns DataFrame(node LONG, component LONG) where component is the
     * minimum node id reachable — for every node appearing in any edge. */
-  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 20,
-          verbose: Boolean = false): DataFrame =
+  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 20): DataFrame =
     graft.util.JobDesc.withJobDesc(spark, "graft: connected components") {
-      runImpl(spark, edges0, maxIter, verbose)
+      runImpl(spark, edges0, maxIter)
     }
 
-  private def runImpl(spark: SparkSession, edges0: DataFrame, maxIter: Int,
-          verbose: Boolean): DataFrame = {
+  private def runImpl(spark: SparkSession, edges0: DataFrame, maxIter: Int): DataFrame = {
     var edges = cut(edges0.select(col("a").cast("long"), col("b").cast("long"))
       .filter(col("a") =!= col("b")).distinct())
     var prev = checksum(edges)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val t0 = System.nanoTime()
       val next = cut(smallStar(largeStar(edges)))
       val cur = checksum(next)
       converged = cur == prev
       prev = cur
       edges = next
       it += 1
-      if (verbose) println(f"[cc] round $it: edges=${cur._1} ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
     }
     // at convergence every edge is (node > root, root = component min)
     val nodes = edges.select(col("a").as("node"), col("b").as("component"))
@@ -143,64 +139,17 @@ object ConnectedComponents {
                   newEdges0: DataFrame, maxIter: Int = 20,
                   driverCap: Int = 2000000): DataFrame = {
     import spark.implicits._
-    val prior = priorAssign
-      .select(col("node").cast("long"), col("component").cast("long"))
-    // DRIVER FAST PATH (round 6) — the same shape as maintainDetailed's:
-    // the delta and the touched components' member sets are delta-sized
-    // in the continuous-ingest contract, so the merge solves in a
-    // driver union-find with three narrow jobs instead of the
-    // distributed path's ~12 join/broadcast query stages (each job
-    // bills 0.1-5 s of driver latency in this VM's degraded windows).
-    // Falls back to the distributed merge when any collected set
-    // exceeds driverCap. Exactness: both paths are gated by the same
-    // OperatorSpec incremental == run(E1 ∪ E2) laws.
-    val newArr0 = graft.util.BoundedCollect.limitCollect(
-      newEdges0.select(col("a").cast("long"), col("b").cast("long"))
-        .filter(col("a") =!= col("b")).as[(Long, Long)], driverCap + 1)
-    if (newArr0.length <= driverCap && newArr0.length <= 100000) {
-      val newSet = newArr0.iterator.map(e => normPair(e._1, e._2)).toSet
-      val endpointSet = newSet.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-      val bcEndp = spark.sparkContext.broadcast(endpointSet)
-      val priorT = prior.as[(Long, Long)]
-      val touchedComps = priorT.filter(r => bcEndp.value.contains(r._1))
-        .map(_._2).collect().toSet
-      val bcComps = spark.sparkContext.broadcast(touchedComps)
-      val membersArr = graft.util.BoundedCollect.limitCollect(
-        priorT.filter(r => bcComps.value.contains(r._2)), driverCap + 1)
-      if (membersArr.length <= driverCap) {
-        // star edges preserve each touched component's connectivity
-        val starEdges = membersArr.iterator
-          .filter { case (n, c) => n != c }.map { case (n, c) => (n, c) }
-        val merged = localCC((starEdges ++ newSet.iterator).toArray)
-        val keepPrior = priorT.filter(r => !bcComps.value.contains(r._2))
-          .toDF("node", "component")
-        return keepPrior.unionByName(
-          spark.createDataset(merged.toSeq).toDF("node", "component"))
-      }
-    }
-    val newEdges = newEdges0
-      .select(col("a").cast("long"), col("b").cast("long"))
-      .filter(col("a") =!= col("b")).distinct()
-    val endpoints = newEdges.select(col("a").as("node"))
-      .unionByName(newEdges.select(col("b").as("node"))).distinct()
-    // components owning a delta endpoint; delta-sized by construction
-    val touchedComps = broadcast(
-      prior.join(broadcast(endpoints), "node").select("component").distinct())
-    // every member of a touched component re-enters the merge as a star
-    // edge; singleton roots carry no star edge but are delta endpoints
-    // by definition of touched, so run() still covers them
-    val starEdges = prior.join(touchedComps, "component")
-      .filter(col("node") =!= col("component"))
+    // [[maintain]] with the prior's star edges as its edge table and no
+    // removals; above the driver cap its rebuild pays a distinct over
+    // the star edges
+    val starEdges = priorAssign.filter(col("node") =!= col("component"))
       .select(col("node").as("a"), col("component").as("b"))
-    val merged = runSmall(spark, starEdges.unionByName(newEdges), maxIter, driverCap)
-    // USING-join moves the join column first — re-fix (node, component)
-    prior.join(touchedComps, Seq("component"), "left_anti")
-      .select(col("node"), col("component"))
-      .unionByName(merged)
+    maintain(spark, priorAssign, starEdges, newEdges0,
+      spark.emptyDataset[(Long, Long)].toDF("a", "b"), maxIter, driverCap)
   }
 
   /** Min-label connected components of a small edge array — the driver
-    * fast path of [[incremental]]/[[maintain]]. Union-find with
+    * fast path of [[runAuto]]/[[maintain]]. Union-find with
     * union-by-min-id (the root IS the component label) + path
     * compression. Exact twin of [[run]]'s output on the same edges. */
   private[canon] def localCC(edges: Array[(Long, Long)]): Array[(Long, Long)] = {

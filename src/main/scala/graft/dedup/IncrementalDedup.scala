@@ -72,6 +72,11 @@ object IncrementalDedup {
       .select(least(col("s.doc_id"), col("n.doc_id")).as("d1"),
         greatest(col("s.doc_id"), col("n.doc_id")).as("d2"))
     val newPairs = cut(within.unionByName(cross).distinct())
+    // act on the cut now: a pairs union still holding the distinct's
+    // pending shuffle keeps one commit file per input partition, so a
+    // durable writer's pairs would gain a file every batch
+    // (StateStore.runsNoShuffle)
+    newPairs.count()
     val stateU = DedupState(
       cut(state.bands.unionByName(newBands)),
       cut(state.pairs.unionByName(newPairs)))

@@ -124,7 +124,7 @@ object Extraction {
     // children then canonicalize identically and AQE's stage cache
     // builds ONE broadcast instead of two — each duplicate exchange
     // costs a scheduled job plus ~0.5-0.9 s of driver planning gap on
-    // the bench VM (tools/JobCount), pure serial floor at small rungs.
+    // the bench VM (BENCH.md), pure serial floor at small rungs.
     val e = graft.util.BoundedProbe.dimHint(ents.toDF(), boundedDims)
     raw.toDF().as("r")
       .join(e.as("es"), col("r.subj") === col("es.name") && col("r.kg") === col("es.kg"))

@@ -264,7 +264,7 @@ object NeighborAgg {
       // The pack happens ON THE EXECUTORS (round 6): `embs.collect()`
       // decoded 100k embedding rows through the row encoder on the
       // driver, single-threaded — measured as a 6.6 s driver gap at
-      // E=50k (tools/CpuProfile), a pure serial term that Amdahl-caps
+      // E=50k (BENCH.md), a pure serial term that Amdahl-caps
       // the N-vs-4N ladder. Each partition now emits ONE
       // (ids, packed-floats) pair — executor-parallel packing, and the
       // driver's decode of a handful of primitive-array rows is bulk

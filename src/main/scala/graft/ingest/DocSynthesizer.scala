@@ -169,8 +169,8 @@ object DocSynthesizer {
     * map/cut, and each cut()/persist block costs a buffer-chunk
     * allocation on this host's slow page-alloc path (measured: the
     * 32-partition fixtures burned ~50 CPU-s in
-    * ChunkedByteBufferOutputStream/HeapByteBuffer allocation alone,
-    * tools/CpuProfile). Row CONTENT is a pure function of the row
+    * ChunkedByteBufferOutputStream/HeapByteBuffer allocation alone).
+    * Row CONTENT is a pure function of the row
     * index, so partitioning never changes any produced row. */
   private def partsFor(spark: SparkSession, rows: Long): Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism,

@@ -57,9 +57,8 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, LogicalRelatio
   * whose lineage reaches no shuffle that a checkpoint has not already
   * cut. A component that still has a shuffle's reduce side to run (a
   * lazy cut over an aggregation that nothing has acted on yet, such as
-  * the vocab fold's counts or the LSH fold's pairs, which union in a
-  * `distinct`) keeps its input partitioning, so that reduce side keeps
-  * its width. The choice is made for every component before any of
+  * the vocab fold's counts) keeps its input partitioning, so that
+  * reduce side keeps its width. The choice is made for every component before any of
   * their jobs starts (one component's write may materialize a lazy cut
   * that another reads).
   */

@@ -30,6 +30,12 @@ object BoundedProbe {
     counts.sum <= maxRows
   }
 
+  /** The forced dim-broadcast decision of a run or a maintenance pass:
+    * [[atMost]] under `maxRows`, and false without a job when
+    * `maxRows` ≤ 0 (forcing disabled). */
+  def dimsBounded(df: DataFrame, maxRows: Long): Boolean =
+    maxRows > 0 && atMost(df, maxRows)
+
   /** Force-broadcast only when the caller proved the frame bounded;
     * otherwise leave the join strategy to Catalyst/AQE. */
   def dimHint(df: DataFrame, bounded: Boolean): DataFrame =

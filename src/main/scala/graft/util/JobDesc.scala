@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Scoped Spark job descriptions: every action fired inside `f` carries
   * `desc` in its job-start event and the cluster UI. Costs one
   * thread-local property write; pays for itself the first time anyone
-  * reads a stage table (BenchOne attributes stages through this) or an
-  * executor timeline on a real cluster. Restores the caller's
-  * description on exit so nested scopes compose. */
+  * reads a stage table or an executor timeline on a real cluster.
+  * Restores the caller's description on exit so nested scopes compose. */
 object JobDesc {
   def withJobDesc[T](spark: SparkSession, desc: String)(f: => T): T = {
     val sc = spark.sparkContext

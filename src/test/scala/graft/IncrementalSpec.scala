@@ -847,8 +847,8 @@ class IncrementalSpec extends SparkTestBase {
   test("drift monitor: fires on the two-pole drift fixture, quiet pre-drift, surfaced from delta") {
     import graft.candidates.{DriftMonitor, IndexGeometry}
     import graft.kg.Emb
-    import graft.tools.DriftProbe.{around, normalize, sampleOf, unitNoise}
-    // ---- unit gate on the DriftProbe two-pole construction (the
+    import graft.ReferenceFixtures.{around, normalize, sampleOf, unitNoise}
+    // ---- unit gate on the two-pole drift construction (the
     // measured silent-decay fixture: recall 0.93 → 0.60 under the
     // frozen geometry while candidate mass stays low, BENCH.md) ----
     val dim = 32; val n = 2000; val seed = 37L
@@ -892,7 +892,7 @@ class IncrementalSpec extends SparkTestBase {
   test("DriftMonitor: stats are permutation-tolerant and duplication-invariant (property)") {
     import graft.candidates.{DriftMonitor, IndexGeometry}
     import graft.kg.Emb
-    import graft.tools.DriftProbe.{around, normalize, sampleOf, unitNoise}
+    import graft.ReferenceFixtures.{around, normalize, sampleOf, unitNoise}
     // n chosen so even the duplicated delta (2n = 400) stays under
     // DriftMonitor.MaxSide — above it the stride subsample would make
     // duplication only approximately invariant

@@ -498,7 +498,7 @@ class OperatorSpec extends SparkTestBase {
       for (a <- vecs.take(16) ++ Array(spike, negSpike);
            b <- vecs.take(16) ++ Array(spike, negSpike)) {
         val got = LshTopK.dotQ(a, b)
-        val want = graft.tools.DotBench.dotQRefLong(a, b)
+        val want = ReferenceFixtures.dotQRefLong(a, b)
         assert(got == want, s"dim=$dim: $got != $want")
       }
     }

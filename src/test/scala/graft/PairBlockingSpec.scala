@@ -312,4 +312,36 @@ class PairBlockingSpec extends SparkTestBase {
     assert(pairSet(handle2.state.pairs) == batchPairs)
     assert(handle2.state.bands.count() == all.size)
   }
+
+  test("a durable lshWriter commits its pairs as one file once it has a snapshot") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("lsh-layout").toString
+    val source = MemoryStream[(Long, Int, Long)]
+    val (writer, handle) = graft.streaming.StreamingDedup.lshWriter(
+      source.toDF().toDF("doc_id", "band", "key"),
+      graft.dedup.IncrementalDedup.emptyState(spark), cap = 8,
+      stateDir = Some(dir), commitEvery = 1)
+    val batches = Seq(0 until 30, 30 until 50, 50 until 70, 70 until 90)
+    val q = writer.start()
+    try batches.foreach { r => source.addData(skewedBands(r): _*); q.processAllAvailable() }
+    finally q.stop()
+    val epochs = graft.tableio.StateStore.epochs(dir)
+    assert(epochs.size == batches.size)
+    val pairFiles = epochs.map { k =>
+      val id = graft.tableio.StateStore.readEpoch(dir, k)("pairs")
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "pairs", "data", s"snap-$id"))
+      try st.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally st.close()
+    }
+    // the first commit has no snapshot to size from; every later one
+    // writes a single file instead of one more per batch
+    assert(pairFiles.tail.forall(_ == 1), s"pairs files per epoch: $pairFiles")
+    val all = skewedBands(0 until 90)
+    val batchPairs = pairSet(
+      graft.candidates.PairBlocking.pairs(all.toDF("doc_id", "band", "key"), cap = 8).distinct())
+    assert(pairSet(handle.state.pairs) == batchPairs)
+    assert(pairSet(graft.dedup.IncrementalDedup.load(spark, dir).pairs) == batchPairs)
+  }
 }

@@ -188,4 +188,16 @@ class PipelineSpec extends SparkTestBase {
     val t2 = r2.canonicalTriples.select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSet
     assert(t2 == t1)
   }
+
+  test("driver entry returns rows and canonicalization merges the aligned KG2 entities") {
+    import org.apache.spark.sql.functions.col
+    val df = SparkEntry.entry(spark)
+    val n = df.count()
+    assert(n > 0, "entry must return rows > 0")
+    // merged rows carry the KG1 canonical id, so the KG2-id-space
+    // survivors (subjId >= 1000000) are only the unaligned share of
+    // the fixture's 100 KG2 entities
+    val kg2Subj = df.filter(col("subjId") >= 1000000L).select("subjId").distinct().count()
+    assert(kg2Subj < 60, s"canonicalization merged too few KG2 entities ($kg2Subj survivors)")
+  }
 }
