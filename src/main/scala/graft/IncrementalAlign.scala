@@ -8,7 +8,7 @@ import graft.align.{GatKernel, GatWeights, MoCoTrainer}
 import graft.candidates.{BucketIndex, CellJoin, IndexGeometry, ScoredTopK}
 import graft.candidates.BucketIndex.IndexRow
 import graft.candidates.ScoredTopK.ScoredQuery
-import graft.canon.ConnectedComponents
+import graft.canon.{CanonicalTriples, ConnectedComponents}
 import graft.embed.{Embedder, EmbedderConfig}
 import graft.extract.Extraction
 import graft.graph.NeighborAgg
@@ -79,16 +79,6 @@ final case class IncrementalConfig(
       * pass probes the committed index table instead of scanning the
       * corpus — the 10^12-doc shape of the continuous mode. */
     useIndex: Boolean = false,
-    /** 16 bands (vs the batch LSH's 10): the maintained index is the
-      * recall-critical path — a missed candidate stays missed until the
-      * entity is touched again, so the default buys per-edge miss
-      * ~0.84^16 ≈ 6% instead of ~18% for 1.6× index rows */
-    indexBands: Int = 16,
-    indexRowsPerBand: Int = 2,
-    indexWScale: Double = 1.0,
-    /** per-cogroup-cell member cap for the distributed indexed bootstrap
-      * (hot buckets tile into ≤cap²-pair tasks, see BucketIndex) */
-    indexCellCap: Int = 512,
     /** Forced-broadcast gate for entity-dimension joins (extraction
       * dict, neighbor name/kg dims, canonical names) — the batch
       * pipeline's [[PipelineConfig.dimBroadcastMaxRows]] discipline:
@@ -157,6 +147,18 @@ object IncrementalAlign {
     * because Catalyst's generated encoder class must reach it. */
   final case class Maint(q: ScoredQuery, oldAccepted: Long, rescore: Boolean)
 
+  /** Bands of the indexed mode's frozen geometry — 16 (vs the batch
+    * LSH's 10) of [[IndexRowsPerBand]] rows: the maintained index is the
+    * recall-critical path — a missed candidate stays missed until the
+    * entity is touched again, so 16 bands buy a per-edge miss of
+    * ~0.84^16 ≈ 6% instead of ~18% for 1.6× index rows. */
+  val IndexBands = 16
+  val IndexRowsPerBand = 2
+
+  /** Per-cogroup-cell member cap of the distributed indexed bootstrap
+    * (hot buckets tile into ≤cap²-pair tasks, see BucketIndex). */
+  val IndexCellCap = 512
+
   private def lvl = StorageLevel.MEMORY_AND_DISK
 
   /** State-boundary lineage cut (the Pipeline stage-4 discipline):
@@ -169,39 +171,22 @@ object IncrementalAlign {
     * session has a checkpoint dir (real cluster), lazy local otherwise. */
   private def cut[T](ds: Dataset[T]): Dataset[T] = graft.util.Lineage.cut(ds)
 
-  /** blocks for the given triples; centers restricted to `centers` when
-    * given (the touched set) — identical per-center rows to a full run
-    * because a center's complete incident edge set is present */
-  private def blocksFor(spark: SparkSession, triples: Dataset[DocTriple], ents: Dataset[Entity],
-                        rawEmbs: Dataset[Emb], dim: Int,
-                        centers: Option[Set[Long]],
-                        boundedDims: Boolean = true): Dataset[NeighborBlock] = {
-    import spark.implicits._
-    // seq stays a pure function of triple CONTENT (not provenance): the
-    // first-seen neighbor order is invariant under retract/re-add
-    val withSeq = triples.map(dt => (dt.triple, (dt.head << 20) ^ dt.tail ^ (dt.rel << 40)))
-    val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents, boundedDims)
-    val ordered0 = NeighborAgg.orderedNeighbors(spark, edges, ents, boundedDims = boundedDims)
-    val ordered = centers match {
-      case Some(cs) =>
-        val bc = spark.sparkContext.broadcast(cs)
-        ordered0.filter(r => bc.value.contains(r._1))
-      case None => ordered0
-    }
-    NeighborAgg.blocks(spark, ordered, rawEmbs, ents, dim, boundedDims)
-  }
-
   /** encode the given id set: GAT over its blocks, raw-embedding
-    * fallback for blockless entities (the batch pipeline's encodedAll
-    * discipline) → (id, kg, emb) */
+    * fallback for blockless entities, kg from the driver map → (id, kg,
+    * emb). The delta-sized twin of [[MoCoTrainer.encodeCorpus]]: the
+    * touched ids and their kgs are already on the driver, so it needs
+    * no dictionary join. Centers are restricted to `ids`; `triples`
+    * holds each one's complete incident edge set, so its block equals
+    * the full run's. */
   private def encodeIds(spark: SparkSession, ids: Set[Long], kgOf: Map[Long, Int],
                         triples: Dataset[DocTriple], ents: Dataset[Entity],
                         rawEmbs: Dataset[Emb], weights: GatWeights,
-                        dim: Int, boundedDims: Boolean = true): DataFrame = {
+                        dim: Int, boundedDims: Boolean): DataFrame = {
     import spark.implicits._
     val bcIds = spark.sparkContext.broadcast(ids)
     val bcKg = spark.sparkContext.broadcast(kgOf)
-    val blocks = blocksFor(spark, triples, ents, rawEmbs, dim, Some(ids), boundedDims)
+    val blocks = NeighborAgg.blocksOf(spark, triples.map(_.triple), ents, rawEmbs, dim,
+      boundedDims, centers = Some(ids))
     // cut: `enc` is referenced twice below (union branch + anti-join
     // build side) — without it the whole NeighborAgg+GAT subtree (three
     // shuffles) computes twice inside every downstream action
@@ -212,55 +197,6 @@ object IncrementalAlign {
     enc.unionByName(blockless).as[(Long, Array[Float])]
       .map { case (id, emb) => (id, bcKg.value(id), emb) }
       .toDF("id", "kg", "emb")
-  }
-
-  /** bootstrap encoding of the ENTIRE dictionary — the distributed twin
-    * of [[encodeIds]] (which is delta-sized by contract and ships driver
-    * id/kg sets): GAT over all blocks, raw-embedding fallback for
-    * blockless entities via anti-join, kg attached by a dictionary JOIN —
-    * no driver collect of the entity table anywhere, so the indexed
-    * mode's bootstrap keeps its 10^12-row shape end-to-end. */
-  private def encodeAll(spark: SparkSession, triples: Dataset[DocTriple],
-                        ents: Dataset[Entity], rawEmbs: Dataset[Emb],
-                        weights: GatWeights, dim: Int,
-                        boundedDims: Boolean): DataFrame = {
-    val blocks = blocksFor(spark, triples, ents, rawEmbs, dim, None, boundedDims)
-    val enc = cut(MoCoTrainer.encode(spark, blocks, weights).toDF("id", "emb"))
-    val blockless = rawEmbs.toDF("id", "emb")
-      .join(graft.util.BoundedProbe.dimHint(enc.select("id"), boundedDims),
-        Seq("id"), "left_anti")
-    val kgOf = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("kg")), boundedDims)
-    enc.unionByName(blockless).join(kgOf, "id")
-      .select(col("id"), col("kg"), col("emb"))
-  }
-
-  /** canonical materialization with (head, rel, tail) lineage retained —
-    * the batch pipeline's stage 6 over an arbitrary triple subset */
-  private def materialize(spark: SparkSession, triples: Dataset[DocTriple],
-                          assignment: DataFrame, ents: Dataset[Entity],
-                          boundedDims: Boolean = true): DataFrame = {
-    // renames live in the join CONDITION (aliases over the same
-    // un-projected plan) so each dimension's pair of broadcast exchanges
-    // canonicalizes identically and AQE builds it once — the Pipeline
-    // stage-6 discipline (one broadcast of a multi-GB dictionary at the
-    // design point, and one fewer scheduled job per duplicate here)
-    val canonMap = assignment.select(col("node"), col("component"))
-    val names = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("name")), boundedDims)
-    triples.toDF().as("t")
-      .join(canonMap.as("ch"), col("t.head") === col("ch.node"), "left")
-      .join(canonMap.as("ct"), col("t.tail") === col("ct.node"), "left")
-      .withColumn("subjId", coalesce(col("ch.component"), col("t.head")))
-      .withColumn("objId", coalesce(col("ct.component"), col("t.tail")))
-      .join(names.as("ns"), col("subjId") === col("ns.id"))
-      .join(names.as("no"), col("objId") === col("no.id"))
-      .select(col("t.docId").as("docId"), col("t.head").as("head"),
-        col("t.rel").as("rel"), col("t.tail").as("tail"),
-        col("ns.name").as("subj"),
-        concat(lit("rel_"), col("t.rel")).as("pred"),
-        col("no.name").as("obj"),
-        col("subjId"), col("objId"))
   }
 
   private val CanonCols = Seq("docId", "head", "rel", "tail", "subj", "pred",
@@ -287,8 +223,9 @@ object IncrementalAlign {
       dimsBounded))
     val rawE = cut(Embedder.embedEntities(spark, entsP, cfg.embed))
     val weights = GatKernel.initWeights(cfg.embed.dim)
-    val encoded = cut(encodeAll(spark, idT, entsP, rawE, weights, cfg.embed.dim,
-      dimsBounded))
+    val blocks = NeighborAgg.blocksOf(spark, idT.map(_.triple), entsP, rawE, cfg.embed.dim,
+      dimsBounded)
+    val encoded = cut(MoCoTrainer.encodeCorpus(spark, blocks, weights, rawE, entsP, dimsBounded))
     encoded.count()
 
     // store top-k' (k' = 2k) with completeness — the maintenance slack
@@ -347,7 +284,8 @@ object IncrementalAlign {
     val accepted = cut(topk.filter(_.acceptedDst >= 0L)
       .map(q => (q.srcId, q.acceptedDst)).toDF("a", "b"))
     val assignment = cut(ConnectedComponents.runAuto(spark, accepted))
-    val canonical = cut(materialize(spark, triples, assignment, ents, dimsBounded))
+    val canonical = cut(CanonicalTriples.of(triples.toDF(), assignment, ents, dimsBounded)
+      .select(CanonCols.map(col): _*))
     canonical.count()
     (accepted, assignment, canonical)
   }
@@ -367,8 +305,7 @@ object IncrementalAlign {
       : (Dataset[ScoredQuery], Array[Long], IndexGeometry, Dataset[IndexRow]) = {
     import spark.implicits._
     val sample = CellJoin.countAndSample(corpusDs, cfg.sampleSize)._2
-    val g = geometry.getOrElse(IndexGeometry.fit(sample, cfg.indexBands,
-      cfg.indexRowsPerBand, cfg.indexWScale))
+    val g = geometry.getOrElse(IndexGeometry.fit(sample, IndexBands, IndexRowsPerBand))
     val bcG = spark.sparkContext.broadcast(g)
     val bcSample = spark.sparkContext.broadcast(sample)
     val ix = cut(corpusDs.flatMap(e => BucketIndex.rowsOf(e.id, e.emb, bcG.value)))
@@ -376,7 +313,7 @@ object IncrementalAlign {
     // ONE left join of the queries to the scored lists, so the cell
     // join evaluates once; a query with no candidate gets an empty
     // COMPLETE list
-    val scored = BucketIndex.cogroupTopK(queries, ix, g, kPrime, cfg.indexCellCap)
+    val scored = BucketIndex.cogroupTopK(queries, ix, g, kPrime, IndexCellCap)
       .map { case (id, _, ids, cs, cands) => (id, ids, cs, cands) }
       .toDF("id", "ids", "cs", "cands")
     val tk = cut(queries.toDF("id", "emb").join(scored, Seq("id"), "left")
@@ -729,7 +666,7 @@ object IncrementalAlign {
       .filter(t => bcChangedNodes.value.contains(t.head) ||
         bcChangedNodes.value.contains(t.tail) || bcNewDocs.value.contains(t.docId))
     val canonicalU = cut(keep.unionByName(
-        materialize(spark, relabel, assignP, entsU, dimsBounded))
+        CanonicalTriples.of(relabel.toDF(), assignP, entsU, dimsBounded))
       .select(CanonCols.map(col): _*))
     canonicalU.count()
 
@@ -777,7 +714,8 @@ object IncrementalAlign {
       "topk" -> state.topk.toDF(),
       "accepted" -> state.accepted,
       "assignment" -> state.assignment,
-      "canonical" -> state.canonical.withColumn("bucket", pmod(col("subjId"), lit(16)))) ++
+      "canonical" -> state.canonical
+        .withColumn("bucket", CanonicalTriples.bucket(col("subjId")))) ++
       state.index.map(ix => "index" -> ix.toDF())
     graft.tableio.StateStore.save(spark, dir, components, Map(
       "canonical" -> graft.tableio.StateStore.CommitOpts(
@@ -790,8 +728,7 @@ object IncrementalAlign {
   private val MetaFile = "align"
 
   /** (kind, idx, value) rows of the GAT weights and, in indexed mode,
-    * the frozen geometry — the layout of the `meta` table that states
-    * saved before the driver-written file carry */
+    * the frozen geometry — the content of the driver-written meta file */
   private[graft] def metaRows(state: AlignState): Seq[(String, Long, Double)] = {
     val w = state.weights
     def arr(kind: String, a: Array[Float]) = Option(a).iterator.flatMap(
@@ -802,7 +739,7 @@ object IncrementalAlign {
       one("neighborNorm", if (w.neighborNorm) 1.0 else 0.0) ++
       // the seed rides via longBitsToDouble — bit-exact for any 64-bit value
       state.geometry.iterator.flatMap(g => one("geomBands", g.bands) ++ one("geomRows", g.rows) ++
-        one("geomWidth", g.width) ++ one("geomWScale", g.wScale) ++
+        one("geomWidth", g.width) ++
         one("geomSeed", java.lang.Double.longBitsToDouble(g.seed)) ++ arr("geomCenter", g.center))
       ).toSeq
   }
@@ -826,22 +763,16 @@ object IncrementalAlign {
   def stateEpochs(dir: String): Seq[Long] = graft.tableio.StateStore.epochs(dir)
 
   /** Resume the committed state from `dir`: components resolve through
-    * the newest epoch marker (see [[save]] — a torn save is invisible);
-    * a marker-less legacy dir falls back to each table's latest
-    * snapshot. Pass `epoch` to time-travel to an older retained save. */
+    * the newest epoch marker (see [[save]] — a torn save is invisible).
+    * Pass `epoch` to time-travel to an older retained save. */
   def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): AlignState = {
     import spark.implicits._
     val epochK = epoch.orElse(stateEpochs(dir).lastOption)
-    val epochIds: Option[Map[String, Long]] = epochK.map(graft.tableio.StateStore.readEpoch(dir, _))
-    def rd(name: String): DataFrame = epochIds.flatMap(_.get(name)) match {
-      case Some(id) => TableIO.readAt(spark, s"$dir/$name", id)
-      case None     => TableIO.read(spark, s"$dir/$name")
-    }
-    // states saved before the driver-written meta file carry `meta` and
-    // `sample` tables instead (two collect jobs)
-    val (meta, sampleIds) = epochK.flatMap(graft.tableio.StateStore.readFile(dir, _, MetaFile))
-      .map(decodeMeta).getOrElse((rd("meta").as[(String, Long, Double)].collect(),
-        rd("sample").as[(Long, Long)].collect().sortBy(_._1).map(_._2)))
+      .getOrElse(sys.error(s"no committed state epoch under $dir"))
+    val epochIds = graft.tableio.StateStore.readEpoch(dir, epochK)
+    def rd(name: String): DataFrame = TableIO.readAt(spark, s"$dir/$name", epochIds(name))
+    val (meta, sampleIds) = decodeMeta(graft.tableio.StateStore.readFile(dir, epochK, MetaFile)
+      .getOrElse(sys.error(s"epoch $epochK under $dir has no $MetaFile file")))
     def arr(kind: String): Array[Float] = {
       val a = meta.filter(_._1 == kind).sortBy(_._2).map(_._3.toFloat)
       if (a.isEmpty) null else a
@@ -854,10 +785,7 @@ object IncrementalAlign {
       IndexGeometry(scalar("geomBands").toInt, scalar("geomRows").toInt,
         scalar("geomWidth"),
         java.lang.Double.doubleToRawLongBits(scalar("geomSeed")),
-        arr("geomCenter"),
-        // pre-round-5 states carry no wScale row; 1.0 was the only
-        // value those fits were made with (the IncrementalConfig default)
-        meta.find(_._1 == "geomWScale").map(_._3).getOrElse(1.0))
+        arr("geomCenter"))
     }
     AlignState(
       ents = cut(rd("ents").as[Entity]),

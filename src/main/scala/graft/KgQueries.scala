@@ -214,10 +214,8 @@ object KgQueries {
     import spark.implicits._
     val r = tinyResult(spark)
     val ents = r.entities
-    val withSeq = r.idTriples.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-    val edges = graft.graph.NeighborAgg.undirectedEdges(spark, withSeq, ents)
-    val ordered = graft.graph.NeighborAgg.orderedNeighbors(spark, edges, ents)
-    graft.graph.NeighborAgg.blocks(spark, ordered, graft.embed.Embedder.embedEntities(spark, ents, tinyCfg.embed), ents, tinyCfg.embed.dim)
+    graft.graph.NeighborAgg.blocksOf(spark, r.idTriples, ents,
+        graft.embed.Embedder.embedEntities(spark, ents, tinyCfg.embed), tinyCfg.embed.dim)
       .map(b => (b.id, b.kg, b.validLen))
       .toDF("id", "kg", "valid_len")
   }

@@ -9,7 +9,7 @@ import graft.embed.{Embedder, EmbedderConfig}
 import graft.graph.NeighborAgg
 import graft.align.{GatWeights, MoCoTrainer, MoCoConfig}
 import graft.candidates.{ExactTopK, IvfTopK, LshTopK}
-import graft.canon.ConnectedComponents
+import graft.canon.{CanonicalTriples, ConnectedComponents}
 import graft.tableio.TableIO
 
 /** End-to-end KG-construction pipeline (the north star, BASELINE.json):
@@ -111,9 +111,6 @@ final case class PipelineResult(
     mediaFeatures: DataFrame,
     /** best per-epoch valid Hit@1 when eval-every-epoch ran */
     validHit1: Option[Double],
-    /** true iff the LSH candidate path actually ran (round-2 ADVICE: this
-      * used to report the auto decision even when IVF overrode it) */
-    usedLsh: Boolean,
     /** which candidate path actually ran: "exact", "lsh", or "ivf" —
       * auto-selection is observable */
     candidatePath: String)
@@ -235,12 +232,7 @@ object Pipeline {
     // the raw embeddings (narrow broadcast join, zero extra shuffles)
     val blocks =
       if (cfg.useSsl) align.SslPath.singletonBlocks(spark, embs, ents, dimsBounded)
-      else {
-        val withSeq = idTriples.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-        val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents, dimsBounded)
-        val ordered = NeighborAgg.orderedNeighbors(spark, edges, ents, boundedDims = dimsBounded)
-        NeighborAgg.blocks(spark, ordered, embs, ents, cfg.embed.dim, dimsBounded)
-      }
+      else NeighborAgg.blocksOf(spark, idTriples, ents, embs, cfg.embed.dim, dimsBounded)
 
     def fit(ev: Option[GatWeights => Double]): GatWeights =
       if (cfg.useSsl) align.SslPath.train(spark, blocks, cfg.embed.dim, cfg.moco, ev)
@@ -258,26 +250,8 @@ object Pipeline {
       }
       else align.GatKernel.initWeights(cfg.embed.dim)
         .withNorms(cfg.moco.centerNorm, cfg.moco.neighborNorm)
-    // cut: `encoded` is referenced twice below (union branch + the
-    // anti-join's id projection), and the encode stage has no exchange
-    // of its own for Spark's shuffle-stage reuse to land on once the
-    // broadcast block assembly is in — without the cut the GAT forward
-    // pass over every block ran TWICE per downstream action (round 6;
-    // the incremental twins encodeIds/encodeAll have always cut here)
-    val encoded = graft.util.Lineage.cut(MoCoTrainer.encode(spark, blocks, weights))
-
-    // entities with no triples keep their raw embedding (reference blocks
-    // exist only for entities appearing in triples). The anti-join's
-    // build side is an id-only projection bounded by |ents| — under the
-    // dim gate it broadcasts (a shuffle of the full embedding payload
-    // just to find blockless rows was the alternative plan)
-    val encodedAll = encoded.toDF("id", "emb").unionByName(
-      embs.toDF("id", "emb").join(graft.util.BoundedProbe.dimHint(
-        encoded.toDF("id", "emb2").select("id"), dimsBounded), Seq("id"), "left_anti"))
 
     // ---- stage 4: candidate top-k join (KG1 queries vs KG2 corpus) ----
-    val kgOf = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("kg")), dimsBounded)
     // lineage cut + compute-once: BOTH candidate sides (q1, c2) read this
     // — without it the whole upstream (extraction → blocks → GAT encode)
     // runs twice. CHECKPOINT (not persist) because the candidate stage
@@ -291,7 +265,8 @@ object Pipeline {
     // a checkpoint dir (real cluster — survives executor loss), lazy
     // localCheckpoint otherwise (single box, where the first candidate
     // job materializes the blocks and executor loss ≡ JVM loss anyway).
-    val embById = graft.util.Lineage.cut(encodedAll.join(kgOf, "id"))
+    val embById = graft.util.Lineage.cut(
+      MoCoTrainer.encodeCorpus(spark, blocks, weights, embs, ents, dimsBounded))
     val q1 = embById.filter(col("kg") === 1).select(col("id"), col("emb")).as[Emb]
     val c2 = embById.filter(col("kg") === 2).select(col("id"), col("emb")).as[Emb]
     // lazy: the auto decision (and its dictionary count job) runs only
@@ -336,25 +311,9 @@ object Pipeline {
     val comps = ConnectedComponents.runAuto(spark, acceptedEdges)
 
     // ---- stage 6: materialize canonical (subj, pred, obj) ----
-    // Each dimension (canonMap, names) joins TWICE — via aliases over
-    // the SAME un-projected plan, so the pair of broadcast exchanges
-    // canonicalizes identically and AQE builds each broadcast ONCE
-    // instead of twice (a duplicate exchange costs a job + ~0.5 s of
-    // driver planning gap on the bench VM, BENCH.md; the serial
-    // floor that Amdahl-caps small-rung N-vs-4N scaling)
-    val canonMap = comps.select(col("node"), col("component"))
-    val names = graft.util.BoundedProbe.dimHint(
-      ents.toDF().select(col("id"), col("name")), dimsBounded)
-    val t = idTriples.toDF().as("t")
-      .join(canonMap.as("ch"), col("t.head") === col("ch.node"), "left")
-      .join(canonMap.as("ct"), col("t.tail") === col("ct.node"), "left")
-      .withColumn("subjId", coalesce(col("ch.component"), col("t.head")))
-      .withColumn("objId", coalesce(col("ct.component"), col("t.tail")))
-      .join(names.as("ns"), col("subjId") === col("ns.id"))
-      .join(names.as("no"), col("objId") === col("no.id"))
-      .select(col("ns.name").as("subj"), concat(lit("rel_"), col("t.rel")).as("pred"),
-        col("no.name").as("obj"),
-        col("subjId"), col("objId"), pmod(col("subjId"), lit(16)).as("bucket"))
+    val t = CanonicalTriples.of(idTriples.toDF(), comps, ents, dimsBounded)
+      .select(col("subj"), col("pred"), col("obj"), col("subjId"), col("objId"),
+        CanonicalTriples.bucket(col("subjId")).as("bucket"))
     val canonical = cfg.checkpointDir match {
       case Some(dir) =>
         TableIO.computeIfAbsent(spark, s"$dir/triples_canonical", "materialize",
@@ -363,7 +322,6 @@ object Pipeline {
     }
 
     PipelineResult(docs, ents, raw, idTriples, cands, comps, canonical,
-      mediaFeatures = mediaFeatures, validHit1 = validHit1,
-      usedLsh = candidatePath == "lsh", candidatePath = candidatePath)
+      mediaFeatures = mediaFeatures, validHit1 = validHit1, candidatePath = candidatePath)
   }
 }

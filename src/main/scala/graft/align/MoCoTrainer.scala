@@ -1,8 +1,10 @@
 package graft.align
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.kg._
 import graft.embed.Embedder
+import graft.util.BoundedProbe
 
 /** SelfKG-style self-supervised training + RSM scoring.
   *
@@ -369,6 +371,26 @@ object MoCoTrainer {
       val wv = bc.value
       it.map(b => Emb(b.id, GatKernel.forward(wv, b)))
     }
+  }
+
+  /** Full-corpus alignment embeddings `(id, kg, emb)`, shared by the
+    * batch pipeline and the continuous-mode bootstrap: the GAT encoding
+    * of `blocks`, the raw embedding for every entity without a block
+    * (reference blocks exist only for entities in triples), and the kg
+    * attached by a dictionary join. The encoder output is cut: the union
+    * and the anti-join's id side both read it, and without the cut the
+    * GAT forward pass over every block runs twice per downstream action.
+    * The anti-join's build side is an id-only projection bounded by
+    * |ents|, so under the dim gate it broadcasts instead of shuffling the
+    * embedding payload. */
+  def encodeCorpus(spark: SparkSession, blocks: Dataset[NeighborBlock], w: GatWeights,
+                   rawEmbs: Dataset[Emb], ents: Dataset[Entity],
+                   boundedDims: Boolean): DataFrame = {
+    val enc = graft.util.Lineage.cut(encode(spark, blocks, w).toDF("id", "emb"))
+    val blockless = rawEmbs.toDF("id", "emb")
+      .join(BoundedProbe.dimHint(enc.select("id"), boundedDims), Seq("id"), "left_anti")
+    val kgOf = BoundedProbe.dimHint(ents.toDF().select(col("id"), col("kg")), boundedDims)
+    enc.unionByName(blockless).join(kgOf, "id").select(col("id"), col("kg"), col("emb"))
   }
 
   /** RSM calibration: mean/std of cosine against a deterministic sample of

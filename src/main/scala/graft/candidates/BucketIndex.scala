@@ -26,21 +26,14 @@ import CellJoin.CellRow
   * indexed candidate rule (gated in IncrementalSpec).
   *
   * The geometry is [[LshTopK]]'s (seeded deterministic unit projections,
-  * mean-centering, banded FNV keys, width = wScale × per-coordinate
+  * mean-centering, banded FNV keys, width = per-coordinate
   * residual std of the calibration sample; LshTopK.topK fits it per
   * call) — but here it is COMMITTED in the alignment state rather than
   * re-derived per call, because candidate membership must not drift as
   * the corpus grows; a production system refreshes the geometry only on
   * an explicit index rebuild. */
 final case class IndexGeometry(bands: Int, rows: Int, width: Double,
-                               seed: Long, center: Array[Float],
-                               /** the width-scale `fit` was called with —
-                                 * carried IN the geometry so consumers
-                                 * (DriftMonitor's fitted-residual
-                                 * baseline = width/wScale) cannot be
-                                 * mis-scaled by a config that differs
-                                 * from the one the frozen fit used */
-                               wScale: Double = 1.0) {
+                               seed: Long, center: Array[Float]) {
   @transient private lazy val projs =
     LshTopK.projections(bands, rows, seed, center.length)
 
@@ -57,7 +50,7 @@ object IndexGeometry {
   /** Fit a geometry from the (deterministic, driver-side, id-sorted)
     * calibration sample. */
   def fit(sample: Array[Emb], bands: Int = 10, rows: Int = 2,
-          wScale: Double = 1.0, seed: Long = Dims.Seed): IndexGeometry = {
+          seed: Long = Dims.Seed): IndexGeometry = {
     require(sample.nonEmpty, "IndexGeometry.fit: empty sample")
     val dim = sample(0).emb.length
     val mean = new Array[Float](dim)
@@ -70,7 +63,7 @@ object IndexGeometry {
     var i = 0
     while (i < dim) { mean(i) = (acc(i) / n).toFloat; i += 1 }
     val residVar = math.max(1e-12, sq / n - mean.map(x => x.toDouble * x).sum)
-    IndexGeometry(bands, rows, wScale * math.sqrt(residVar / dim), seed, mean, wScale)
+    IndexGeometry(bands, rows, math.sqrt(residVar / dim), seed, mean)
   }
 }
 

@@ -22,7 +22,7 @@ import graft.kg.Emb
   *
   *  - '''widthRatio''' — rms per-coordinate residual of the fresh rows
   *    around the FROZEN center, divided by the fitted residual width
-  *    (`geometry.width / wScale` — exactly `sqrt(residVar/dim)` of the
+  *    (`geometry.width` — exactly `sqrt(residVar/dim)` of the
   *    bootstrap sample, [[IndexGeometry.fit]]). The measured decay
   *    mechanism is precisely this statistic blowing past 1: a drifted
   *    population's residuals span multiple frozen buckets, so true
@@ -79,12 +79,9 @@ object DriftMonitor {
   /** Assess one delta batch's fresh encodings against the committed
     * calibration rows (`reference` must EXCLUDE rows (re-)encoded by
     * this very batch — the caller filters by its changed-id set so the
-    * reference stays historical). The fitted-residual baseline comes
-    * from the geometry's OWN recorded wScale (not the caller's config —
-    * a config differing from the frozen fit's would mis-scale every
-    * widthRatio). Returns None when either side is too small to say
-    * anything (empty delta, reference < 2 rows) — the quiet answer,
-    * never a false alarm. */
+    * reference stays historical). Returns None when either side is too
+    * small to say anything (empty delta, reference < 2 rows) — the quiet
+    * answer, never a false alarm. */
   def assess(delta: Array[Emb], reference: Array[Emb],
              geom: IndexGeometry): Option[DriftStats] = {
     if (delta.isEmpty || reference.length < 2) None
@@ -99,7 +96,7 @@ object DriftMonitor {
           val x = e.emb(i) - geom.center(i); sq += x.toDouble * x; i += 1
         }
       }
-      val fitted = math.max(geom.width / math.max(geom.wScale, 1e-12), 1e-12)
+      val fitted = math.max(geom.width, 1e-12)
       val widthRatio = math.sqrt(sq / (d.length.toDouble * dim)) / fitted
       val dKeys = d.map(e => geom.keysOf(e.emb))
       val rKeys = r.map(e => geom.keysOf(e.emb))

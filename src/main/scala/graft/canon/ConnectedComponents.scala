@@ -36,6 +36,10 @@ import org.apache.spark.sql.expressions.Window
   */
 object ConnectedComponents {
 
+  /** Star-round cap of the distributed loop: alignment components
+    * converge in 2–4 rounds (class doc), O(log^2 n) in general. */
+  private val MaxIter = 20
+
   /** Round lineage cut: reliable checkpoint when the session has a
     * checkpoint dir, executor-local otherwise (see class doc). The local
     * form is LAZY — the checksum that immediately follows every cut
@@ -87,18 +91,18 @@ object ConnectedComponents {
   /** edges: DataFrame(a LONG, b LONG) undirected.
     * Returns DataFrame(node LONG, component LONG) where component is the
     * minimum node id reachable — for every node appearing in any edge. */
-  def run(spark: SparkSession, edges0: DataFrame, maxIter: Int = 20): DataFrame =
+  def run(spark: SparkSession, edges0: DataFrame): DataFrame =
     graft.util.JobDesc.withJobDesc(spark, "graft: connected components") {
-      runImpl(spark, edges0, maxIter)
+      runImpl(spark, edges0)
     }
 
-  private def runImpl(spark: SparkSession, edges0: DataFrame, maxIter: Int): DataFrame = {
+  private def runImpl(spark: SparkSession, edges0: DataFrame): DataFrame = {
     var edges = cut(edges0.select(col("a").cast("long"), col("b").cast("long"))
       .filter(col("a") =!= col("b")).distinct())
     var prev = checksum(edges)
     var converged = false
     var it = 0
-    while (!converged && it < maxIter) {
+    while (!converged && it < MaxIter) {
       val next = cut(smallStar(largeStar(edges)))
       val cur = checksum(next)
       converged = cur == prev
@@ -136,8 +140,7 @@ object ConnectedComponents {
     * delta comparable to the corpus should just re-[[run]].
     */
   def incremental(spark: SparkSession, priorAssign: DataFrame,
-                  newEdges0: DataFrame, maxIter: Int = 20,
-                  driverCap: Int = 2000000): DataFrame = {
+                  newEdges0: DataFrame, driverCap: Int = 2000000): DataFrame = {
     import spark.implicits._
     // [[maintain]] with the prior's star edges as its edge table and no
     // removals; above the driver cap its rebuild pays a distinct over
@@ -145,7 +148,7 @@ object ConnectedComponents {
     val starEdges = priorAssign.filter(col("node") =!= col("component"))
       .select(col("node").as("a"), col("component").as("b"))
     maintain(spark, priorAssign, starEdges, newEdges0,
-      spark.emptyDataset[(Long, Long)].toDF("a", "b"), maxIter, driverCap)
+      spark.emptyDataset[(Long, Long)].toDF("a", "b"), driverCap)
   }
 
   /** Min-label connected components of a small edge array — the driver
@@ -182,20 +185,18 @@ object ConnectedComponents {
     * scaling). Sets above `driverCap` fall back to the distributed
     * star loop — the 100-TB shape. Exact twin of [[run]] on the same
     * edges (equality-gated in OperatorSpec). */
-  def runAuto(spark: SparkSession, edges: DataFrame, maxIter: Int = 20,
-              driverCap: Int = 2000000): DataFrame =
+  def runAuto(spark: SparkSession, edges: DataFrame, driverCap: Int = 2000000): DataFrame =
     graft.util.JobDesc.withJobDesc(spark, "graft: connected components") {
-      runSmall(spark, edges, maxIter, driverCap)
+      runSmall(spark, edges, driverCap)
     }
 
-  private def runSmall(spark: SparkSession, edges: DataFrame, maxIter: Int,
-                       driverCap: Int): DataFrame = {
+  private def runSmall(spark: SparkSession, edges: DataFrame, driverCap: Int): DataFrame = {
     import spark.implicits._
     val normed = edges.select(col("a").cast("long"), col("b").cast("long"))
       .filter(col("a") =!= col("b"))
     val local = graft.util.BoundedCollect.limitCollect(
       normed.as[(Long, Long)], driverCap + 1)
-    if (local.length > driverCap) run(spark, edges, maxIter)
+    if (local.length > driverCap) run(spark, edges)
     else if (local.isEmpty) spark.emptyDataset[(Long, Long)].toDF("node", "component")
     else spark.createDataFrame(localCC(local).toSeq).toDF("node", "component")
   }
@@ -227,9 +228,9 @@ object ConnectedComponents {
     * edgeless by the removals. Edge identity is undirected: (a,b) and
     * (b,a) are the same edge on every input. */
   def maintain(spark: SparkSession, priorAssign: DataFrame, edgesTable: DataFrame,
-               added0: DataFrame, removed0: DataFrame, maxIter: Int = 20,
+               added0: DataFrame, removed0: DataFrame,
                driverCap: Int = 2000000): DataFrame =
-    maintainDetailed(spark, priorAssign, edgesTable, added0, removed0, maxIter, driverCap)._1
+    maintainDetailed(spark, priorAssign, edgesTable, added0, removed0, driverCap)._1
 
   /** [[maintain]] plus the CHANGE SET: (new assignment, the (node,
     * component) rows whose label differs from the prior assignment —
@@ -239,7 +240,7 @@ object ConnectedComponents {
     * count, so the caller never diffs two corpus-sized assignments. */
   def maintainDetailed(spark: SparkSession, priorAssign: DataFrame, edgesTable: DataFrame,
                        added0: DataFrame, removed0: DataFrame,
-                       maxIter: Int = 20, driverCap: Int = 2000000): (DataFrame, DataFrame) = {
+                       driverCap: Int = 2000000): (DataFrame, DataFrame) = {
     import spark.implicits._
     val prior = priorAssign
       .select(col("node").cast("long"), col("component").cast("long"))
@@ -322,7 +323,7 @@ object ConnectedComponents {
       .unionByName(endpoints).distinct()
     val rebuildEdges = newEdges.join(broadcast(members),
       newEdges("a") === members("node"), "left_semi")
-    val rebuilt = runSmall(spark, rebuildEdges, maxIter, driverCap)
+    val rebuilt = runSmall(spark, rebuildEdges, driverCap)
     // PRIOR members left edgeless by removals still exist — as singletons
     // (endpoints seen only in no-op removals never existed and stay out;
     // added endpoints always carry their added edge into the rebuild)

@@ -65,6 +65,30 @@ class OrderedDedupAgg(limit: Int)
   * (SURVEY.md §2.4 A2; loader/DBP15KRawNeighbors.py:66-82). */
 object NeighborAgg {
 
+  /** A triple's first-seen position: a pure function of its CONTENT,
+    * not of partitioning or document provenance, so the neighbor order
+    * is the same at any parallelism and under retract/re-add. */
+  def contentSeq(t: Triple): Long = (t.head << 20) ^ t.tail ^ (t.rel << 40)
+
+  /** Block assembly from id triples, shared by the batch pipeline and
+    * the continuous mode: content-ordered undirected 1-hop neighborhoods
+    * ([[undirectedEdges]] → [[orderedNeighbors]]), centers restricted to
+    * `centers` when given, then [[blocks]]. A restricted center's row is
+    * identical to the full run's as long as `triples` holds its complete
+    * incident edge set. */
+  def blocksOf(spark: SparkSession, triples: Dataset[Triple], ents: Dataset[Entity],
+               embs: Dataset[Emb], dim: Int, boundedDims: Boolean = true,
+               centers: Option[Set[Long]] = None): Dataset[NeighborBlock] = {
+    import spark.implicits._
+    val edges = undirectedEdges(spark, triples.map(t => (t, contentSeq(t))), ents, boundedDims)
+    val ordered = orderedNeighbors(spark, edges, ents, boundedDims = boundedDims)
+    val kept = centers.fold(ordered) { cs =>
+      val bc = spark.sparkContext.broadcast(cs)
+      ordered.filter(r => bc.value.contains(r._1))
+    }
+    blocks(spark, kept, embs, ents, dim, boundedDims)
+  }
+
   /** Both-direction edge stream with stable seq: head→tail gets seq*2,
     * tail→head seq*2+1 (the reference processes the head side then the
     * tail side of each line — loader/DBP15KRawNeighbors.py:36-45). */

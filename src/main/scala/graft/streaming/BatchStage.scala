@@ -112,21 +112,6 @@ final class BatchStage(stateDir: Option[String], writerId: Option[String] = None
     val kids = new java.io.File(root).listFiles()
     if (kids != null) kids.iterator.filterNot(f => keep.contains(f.getName))
       .foreach(graft.util.LocalFs.deleteRecursively)
-    // pre-namespacing layouts staged batch-N directly under _staging;
-    // those leftovers belong to no namespace and would otherwise never
-    // be swept (a live same-layout writer cannot own them — every
-    // current writer stages under a w-*/default namespace).
-    // MIXED-VERSION CONSTRAINT (ADVICE r5): a still-running
-    // pre-namespacing writer on the SAME stateDir would have its live
-    // staged batches swept by this release — stop old-layout writers
-    // before starting new-binary writers on a shared stateDir (rolling
-    // upgrades must drain first; same-binary writers are unaffected)
-    val parent = new java.io.File(root).getParentFile
-    if (parent != null && parent.getName == "_staging") {
-      val legacy = parent.listFiles()
-      if (legacy != null) legacy.iterator.filter(_.getName.startsWith("batch-"))
-        .foreach(graft.util.LocalFs.deleteRecursively)
-    }
     cur = Nil
   }
 }

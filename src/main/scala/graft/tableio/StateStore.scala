@@ -194,9 +194,8 @@ object StateStore {
       .map { l => val Array(n, i) = l.split(' '); n -> i.toLong }.toMap
   }
 
-  /** Resolve every component of the newest (or given) epoch; a
-    * marker-less legacy dir is not resolvable here — callers with a
-    * legacy fallback read each table's latest snapshot themselves. */
+  /** Resolve every component of the newest (or given) epoch; a dir
+    * without an epoch marker has no committed state. */
   def load(spark: SparkSession, dir: String,
            epoch: Option[Long] = None): Map[String, DataFrame] = {
     val k = epoch.orElse(epochs(dir).lastOption)

@@ -278,21 +278,11 @@ object TableIO {
     reader(spark, manifest(base, id)).parquet(s"$base/data/snap-$id")
   }
 
-  /** The append-only commit-metrics table of `base` (S8 sink): the
-    * per-commit row files plus any parquet rows older builds appended. */
-  def metrics(spark: SparkSession, base: String): DataFrame = {
-    val dir = s"$base/_metrics"
-    val rows = spark.read.schema(MetricsSchema)
-      .option("pathGlobFilter", "commit-*.json").json(dir)
-    val legacy = {
-      val st = Files.list(Paths.get(dir))
-      try st.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      finally st.close()
-    }
-    if (!legacy) rows
-    else rows.unionByName(spark.read.schema(MetricsSchema)
-      .option("pathGlobFilter", "*.parquet").parquet(dir))
-  }
+  /** The append-only commit-metrics table of `base` (S8 sink): one
+    * row file per commit. */
+  def metrics(spark: SparkSession, base: String): DataFrame =
+    spark.read.schema(MetricsSchema)
+      .option("pathGlobFilter", "commit-*.json").json(s"$base/_metrics")
 
   /** Manifest-driven file skipping: the data files of `base`'s latest
     * snapshot whose committed [min,max] range on `column` intersects

@@ -218,9 +218,9 @@ class IncrementalSpec extends SparkTestBase {
     // into load() (latest-of-each would tear the state here)
     import spark.implicits._
     graft.tableio.TableIO.commit(spark,
-      Seq((-1L, "torn")).toDF("idx", "id"), s"$dir/sample", "state")
+      Seq((-1L, -1L)).toDF("a", "b"), s"$dir/accepted", "state")
     val resumed = IncrementalAlign.load(spark, dir)
-    assert(resumed.sampleIds.toSeq == s2.sampleIds.toSeq)       // not the torn row
+    assert(acceptedSet(resumed) == acceptedSet(s2))             // not the torn row
     assert(topkMap(resumed) == topkMap(s2))
     // epoch time travel: epoch 0 is still exactly s1
     val old = IncrementalAlign.load(spark, dir, epoch = Some(0L))
@@ -232,6 +232,9 @@ class IncrementalSpec extends SparkTestBase {
     // load-visible either way)
     graft.tableio.StateStore.expire(dir, keepEpochs = 1)
     assert(IncrementalAlign.stateEpochs(dir) == Seq(1L))
+    // only the newest epoch's marker and meta file remain
+    assert(java.nio.file.Paths.get(dir, "_state").toFile.list()
+      .filterNot(_.startsWith(".")).sorted.toSeq == Seq("align-1.txt", "epoch-1.txt"))
     intercept[Exception](IncrementalAlign.load(spark, dir, epoch = Some(0L)))
     // epoch 1 still loads bit-exact after expiry and keeps ingesting
     val afterExpire = IncrementalAlign.load(spark, dir)
@@ -255,6 +258,7 @@ class IncrementalSpec extends SparkTestBase {
     assert(saveJobs == n, s"save of $n components ran $saveJobs jobs")
     val (loaded, loadJobs) = countJobs(IncrementalAlign.load(spark, dir))
     assert(loadJobs == 0, s"load ran $loadJobs jobs") // meta and sample come from the file
+    assert(metaBits(loaded) == metaBits(s1))
     assert(topkMap(loaded) == topkMap(s1))
   }
 
@@ -262,38 +266,6 @@ class IncrementalSpec extends SparkTestBase {
   private def metaBits(s: AlignState): (Seq[(String, Long, Long)], Seq[Long]) =
     (IncrementalAlign.metaRows(s).map { case (k, i, v) =>
       (k, i, java.lang.Double.doubleToRawLongBits(v)) }, s.sampleIds.toSeq)
-
-  test("an epoch saved with meta and sample tables instead of the meta file loads bit-exactly") {
-    val ((d1, e1), _) = splitFixture(20, 30)
-    val s1 = IncrementalAlign.initial(spark, d1, e1, icfgIdx)
-    val dir = java.nio.file.Files.createTempDirectory("align-legacy").toString
-    IncrementalAlign.save(spark, s1, dir)
-    assert(metaBits(IncrementalAlign.load(spark, dir)) == metaBits(s1))
-    // rewrite epoch 0 in the earlier layout: `meta` and `sample` tables
-    // named by the marker, no driver-written file
-    val tio = graft.tableio.TableIO
-    val metaId = tio.commit(spark, IncrementalAlign.metaRows(s1).toDF("kind", "idx", "value"),
-      s"$dir/meta", "state").id
-    val sampleId = tio.commit(spark, s1.sampleIds.zipWithIndex
-      .map { case (id, i) => (i.toLong, id) }.toSeq.toDF("idx", "id"), s"$dir/sample", "state").id
-    val state = java.nio.file.Paths.get(dir, "_state")
-    val marker = state.resolve("epoch-0.txt")
-    java.nio.file.Files.writeString(marker,
-      java.nio.file.Files.readString(marker) + s"\nmeta $metaId\nsample $sampleId")
-    java.nio.file.Files.delete(state.resolve("align-0.txt"))
-    val (legacy, jobs) = countJobs(IncrementalAlign.load(spark, dir))
-    assert(jobs == 2, s"legacy load ran $jobs jobs") // the meta and sample collects
-    assert(metaBits(legacy) == metaBits(s1))
-    assert(legacy.geometry.get.center.toSeq == s1.geometry.get.center.toSeq)
-    assert(topkMap(legacy) == topkMap(s1))
-    // the next save writes the file again; expiring the legacy epoch
-    // leaves only the newest epoch's marker and file
-    IncrementalAlign.save(spark, legacy, dir)
-    graft.tableio.StateStore.expire(dir, keepEpochs = 1)
-    assert(state.toFile.list().filterNot(_.startsWith(".")).sorted.toSeq ==
-      Seq("align-1.txt", "epoch-1.txt"))
-    assert(metaBits(IncrementalAlign.load(spark, dir)) == metaBits(s1))
-  }
 
   test("a failing component aborts the save: siblings cancelled, no marker, previous epoch intact") {
     val ((d1, e1), (d2, e2)) = splitFixture(35, 50)
@@ -744,7 +716,7 @@ class IncrementalSpec extends SparkTestBase {
     val queries = st.encoded.filter("kg = 1").select("id", "emb").as[(Long, Array[Float])]
     val (_, oneEval) = sumAccumulator(graft.candidates.BucketIndex.ScoredTiles)(
       graft.candidates.BucketIndex.cogroupTopK(queries, st.index.get, st.geometry.get,
-        2 * icfgIdx.topK, icfgIdx.indexCellCap).count())
+        2 * icfgIdx.topK, IncrementalAlign.IndexCellCap).count())
     assert(oneEval > 0)
     assert(bootTiles == oneEval, s"bootstrap scored $bootTiles tiles, one evaluation $oneEval")
   }

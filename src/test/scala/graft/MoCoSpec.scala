@@ -19,11 +19,8 @@ class MoCoSpec extends SparkTestBase {
     val ents = DocSynthesizer.entities(spark, synth)
     val triples = DocSynthesizer.goldTriples(spark, synth, 1)
       .union(DocSynthesizer.goldTriples(spark, synth, 2))
-    val withSeq = triples.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
-    val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents)
-    val ordered = NeighborAgg.orderedNeighbors(spark, edges, ents)
-    NeighborAgg.blocks(spark, ordered,
-      Embedder.embedEntities(spark, ents, embedCfg), ents, 32).repartition(parts)
+    NeighborAgg.blocksOf(spark, triples, ents,
+      Embedder.embedEntities(spark, ents, embedCfg), 32).repartition(parts)
   }
 
   test("MoCo epoch: runs the queue discipline, returns grid alpha + finite loss") {

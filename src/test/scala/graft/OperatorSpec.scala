@@ -515,7 +515,7 @@ class OperatorSpec extends SparkTestBase {
     val ents = ingest.DocSynthesizer.entities(spark, synth)
     val triples = ingest.DocSynthesizer.goldTriples(spark, synth, 1)
       .union(ingest.DocSynthesizer.goldTriples(spark, synth, 2))
-    val withSeq = triples.map(t => (t, (t.head << 20) ^ t.tail ^ (t.rel << 40)))
+    val withSeq = triples.map(t => (t, NeighborAgg.contentSeq(t)))
     val edges = NeighborAgg.undirectedEdges(spark, withSeq, ents)
     val ordered = NeighborAgg.orderedNeighbors(spark, edges, ents)
     // drop a few embedding rows to exercise the missing-id semantics

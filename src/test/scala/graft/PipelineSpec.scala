@@ -52,7 +52,7 @@ class PipelineSpec extends SparkTestBase {
     // acceptance threshold was a z-score — useLsh=true silently produced
     // ZERO merges. Both paths must land edges past rsmThreshold.
     val r = Pipeline.runSynthetic(spark, cfg.copy(useLsh = Some(true)))
-    assert(r.usedLsh)
+    assert(r.candidatePath == "lsh")
     val lshComps = r.components.count()
     val exactComps = result.components.count()
     assert(lshComps > 0, "LSH path accepted no canonicalization edges")
@@ -65,9 +65,9 @@ class PipelineSpec extends SparkTestBase {
 
   test("IVF path emits RSM-scale scores and merges like the exact path") {
     val r = Pipeline.runSynthetic(spark, cfg.copy(useIvf = true))
-    // round-2 ADVICE: usedLsh used to report the auto decision even when
-    // IVF overrode it — the result must name the path that actually ran
-    assert(r.candidatePath == "ivf" && !r.usedLsh)
+    // round-2 ADVICE: the result used to report the auto decision even
+    // when IVF overrode it — it must name the path that actually ran
+    assert(r.candidatePath == "ivf")
     val ivfComps = r.components.count()
     val exactComps = result.components.count()
     assert(ivfComps > 0, "IVF path accepted no canonicalization edges")
@@ -129,11 +129,22 @@ class PipelineSpec extends SparkTestBase {
 
   test("auto candidate path: big corpus → LSH, small corpus → exact broadcast") {
     // default fixture (80 ents × dim 48) fits the broadcast budget → exact
-    assert(!result.usedLsh)
+    assert(result.candidatePath == "exact")
     // force the budget below any corpus → auto must select LSH (no
     // driver-side corpus collect in the flagship plan at scale)
     val big = Pipeline.runSynthetic(spark, cfg.copy(exactPathMaxFloats = 1L))
-    assert(big.usedLsh)
+    assert(big.candidatePath == "lsh")
+  }
+
+  test("Pipeline.run on the LSH path stays within its job budget") {
+    // run plus the canonical-table action: every stage of the batch path
+    // (probe, extraction, blocks, encode, LSH candidates, CC, materialize)
+    val (_, jobs) = countJobs {
+      val r = Pipeline.runSynthetic(spark, cfg.copy(useLsh = Some(true)))
+      r.canonicalTriples.count()
+      r.alignment.unpersist(blocking = false)
+    }
+    assert(jobs == 25, s"Pipeline.run + canonical count ran $jobs jobs")
   }
 
   test("two-set eval: sentinel counts missing-target sources as misses") {

@@ -261,13 +261,6 @@ class StreamingSpec extends SparkTestBase {
     a2.pin(Seq((9L, "z")).toDF("id", "v"), 5L)
     a2.release(); a2.release()
     assert(pb.count() == 2)
-    // a PRE-NAMESPACING crashed run's flat-layout leftover
-    // (_staging/batch-N) belongs to no namespace — release sweeps it,
-    // live namespaces untouched
-    Files.createDirectories(java.nio.file.Paths.get(s"$stateDir/_staging/batch-77"))
-    a2.release()
-    assert(!new java.io.File(s"$stateDir/_staging/batch-77").exists)
-    assert(pb.count() == 2)
   }
 
   test("BatchStage: shape edge cases — zero-row batch, empty partitions, wide batch") {

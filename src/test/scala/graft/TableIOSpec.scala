@@ -74,23 +74,6 @@ class TableIOSpec extends SparkTestBase {
     assert(TableIO.readAt(spark, base, 0).count() == 2)
   }
 
-  test("metrics returns legacy parquet rows together with per-commit rows") {
-    val base = tmp()
-    TableIO.commit(spark, Seq((1L, "a")).toDF("k", "v"), base, "s")
-    TableIO.commit(spark, Seq((2L, "b"), (3L, "c")).toDF("k", "v"), base, "s")
-    TableIO.commit(spark, Seq((4L, "d")).toDF("k", "v"), base, "s")
-    // snapshot 0's row as an older build appended it: parquet, no row file
-    Files.delete(Path.of(base, "_metrics", "commit-0.json"))
-    Seq((0L, "s", 1L, 1L, 5L)).toDF("snapshot", "stage", "rows", "n_files", "wall_ms")
-      .write.mode("append").parquet(s"$base/_metrics")
-    def rows() = TableIO.metrics(spark, base).collect()
-      .map(r => (r.getAs[Long]("snapshot"), r.getAs[Long]("rows"))).sortBy(_._1).toSeq
-    assert(rows() == Seq((0L, 1L), (1L, 2L), (2L, 1L)))
-    TableIO.expireSnapshots(base, keepLast = 1)
-    assert(TableIO.metrics(spark, base).count() == 3) // history append-only
-    assert(rows() == Seq((0L, 1L), (1L, 2L), (2L, 1L)))
-  }
-
   test("manifest column stats: readRange skips files by committed ranges, result exact") {
     val base = tmp()
     // 8 range-disjoint files over id ∈ [0, 8000): stats land per file
