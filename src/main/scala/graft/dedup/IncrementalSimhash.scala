@@ -2,26 +2,28 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.candidates.PairBlocking
+import IncrementalDedup.DedupState
 
 /** Continuous SimHash deduplication: maintain the banded 16-bit
   * signature index under delta doc batches and emit each batch's NEW
-  * near-duplicate pairs (Hamming ≤ maxHamming) at delta-sized cost —
-  * the continuous-ingest twin of the batch `q_simhash_pairs` operator,
-  * completing the dedup family's incremental surface next to
-  * [[IncrementalDedup]] (MinHash-LSH). The reference has no dedup at
-  * all; this is engine-side surface for the 10^12-doc operating mode.
+  * near-duplicate pairs (Hamming ≤ 2) at delta-sized cost —
+  * the continuous-ingest twin of the batch `q_simhash_pairs` operator.
+  * The reference has no dedup at all; this is engine-side surface for
+  * the 10^12-doc operating mode.
+  *
+  * This object is a signature codec over [[IncrementalDedup]], the
+  * family's one banded-pair maintainer: it turns signatures into band
+  * rows and verifies candidate pairs; the within-delta
+  * [[graft.candidates.PairBlocking]], the broadcast-probed cross join
+  * against the committed index, the lineage cuts and the durable
+  * `save`/`load` are the maintainer's.
   *
   * Blocking is the same pigeonhole-lossless banding as the batch
   * operator (4 bands × 4 bits: a pair within Hamming distance 2
   * differs in at most 2 bands, so it shares at least one band key),
   * which makes the incremental fold EXACT, not approximate: every
   * Hamming-≤2 pair is enumerated in the batch where its later doc
-  * arrives — as a WITHIN pair (both docs new, skew-tiled
-  * [[PairBlocking]]) or a CROSS pair (delta bands probe the committed
-  * index on (band, key); the delta side rides a broadcast hint while a
-  * bounded probe proves it small, so the corpus-sized index never
-  * shuffles).
+  * arrives.
   *
   * The signature rides INSIDE the blocking id — `packed = doc_id *
   * 2^16 + simhash` — so candidate verification (exact Hamming) is
@@ -35,20 +37,17 @@ import graft.candidates.PairBlocking
   * column through the blocking join (the [[graft.candidates.BucketIndex]]
   * discipline) instead — same plan shape, one extra shuffled column.
   *
-  * State frames are lineage-cut per generation (reliable checkpoint
-  * under a checkpoint dir, lazy local otherwise) so an unbounded batch
-  * chain keeps O(1) plan depth. Contract: doc_ids unique across live
-  * batches (retract before re-adding).
+  * State: bands are packed (doc_id, band, key) index rows; pairs are
+  * (d1, d2, hamming) with d1 < d2 in DOC ids. Contract: doc_ids unique
+  * across live batches (retract before re-adding).
   */
 object IncrementalSimhash {
 
-  /** bands: packed (doc_id, band, key) index rows; pairs: accumulated
-    * (d1, d2, hamming) with d1 < d2 in DOC ids. */
-  final case class SimhashState(bands: DataFrame, pairs: DataFrame)
-
   private val Pack = 65536L // 2^16: signature occupies the low 16 bits
 
-  private def cut(df: DataFrame): DataFrame = graft.util.Lineage.cut(df)
+  /** Largest Hamming distance kept — the most the 4-band geometry
+    * finds losslessly. */
+  private val MaxHamming = 2
 
   /** Banded index rows for a signature batch (doc_id, simhash) →
     * (packed doc_id, band, key); 4 bands × 4 bits over the 16-bit
@@ -62,73 +61,34 @@ object IncrementalSimhash {
   /** Packed candidate pairs → verified (d1, d2, hamming) rows: unpack
     * both ids, compute the exact Hamming distance from the in-row
     * signatures, keep pairs within the threshold. */
-  private def verified(cands: DataFrame, maxHamming: Int): DataFrame =
+  private def verified(cands: DataFrame): DataFrame =
     cands.distinct()
       .select(expr(s"d1 DIV $Pack").as("doc1"), expr(s"d2 DIV $Pack").as("doc2"),
         expr(s"CAST(bit_count((d1 % $Pack) ^ (d2 % $Pack)) AS BIGINT)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .select(col("doc1").as("d1"), col("doc2").as("d2"), col("hamming"))
 
   /** Zero-batch state: a [[delta]] over it IS the bootstrap. */
-  def emptyState(spark: SparkSession): SimhashState = {
+  def emptyState(spark: SparkSession): DedupState = {
     import spark.implicits._
-    SimhashState(Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "key"),
-      Seq.empty[(Long, Long, Long)].toDF("d1", "d2", "hamming"))
+    IncrementalDedup.emptyState(spark)
+      .copy(pairs = Seq.empty[(Long, Long, Long)].toDF("d1", "d2", "hamming"))
   }
 
   /** Bootstrap from the first signature batch (doc_id, simhash). */
-  def initial(spark: SparkSession, sigs: DataFrame, cap: Int = 4096,
-              maxHamming: Int = 2): SimhashState = {
-    val bands = bandRows(sigs)
-    SimhashState(cut(bands),
-      cut(verified(PairBlocking.pairs(bands, cap), maxHamming)))
-  }
+  def initial(spark: SparkSession, sigs: DataFrame, cap: Int = 4096): DedupState =
+    IncrementalDedup.initialWith(bandRows(sigs), cap)(verified)
 
   /** Merge a delta signature batch: returns the updated state and the
     * batch's new pairs (every pair with at least one delta doc —
     * disjoint from the committed set, which never rescans). */
-  def delta(spark: SparkSession, state: SimhashState, newSigs: DataFrame,
-            cap: Int = 4096, maxHamming: Int = 2,
-            broadcastMaxRows: Long = 4000000L): (SimhashState, DataFrame) = {
-    val newBands = bandRows(newSigs)
-    val within = PairBlocking.pairs(newBands, cap)
-    val deltaSide =
-      if (graft.util.BoundedProbe.atMost(newBands, broadcastMaxRows)) broadcast(newBands)
-      else newBands
-    val cross = state.bands.as("s")
-      .join(deltaSide.as("n"),
-        col("s.band") === col("n.band") && col("s.key") === col("n.key"))
-      .select(least(col("s.doc_id"), col("n.doc_id")).as("d1"),
-        greatest(col("s.doc_id"), col("n.doc_id")).as("d2"))
-    val newPairs = cut(verified(within.unionByName(cross), maxHamming))
-    val stateU = SimhashState(
-      cut(state.bands.unionByName(newBands)),
-      cut(state.pairs.unionByName(newPairs)))
-    (stateU, newPairs)
-  }
-
-  /** Durable state via [[graft.tableio.StateStore]] — atomic two-table
-    * epochs, time travel, retention; resume with [[load]] and keep
-    * folding (gated in PairBlockingSpec). `extras` commit in the same
-    * epoch, as in [[IncrementalDedup.save]]. */
-  def save(spark: SparkSession, state: SimhashState, dir: String,
-           extras: Seq[(String, DataFrame)] = Nil): Long =
-    graft.tableio.StateStore.save(spark, dir,
-      extras ++ Seq("bands" -> state.bands, "pairs" -> state.pairs))
-
-  def load(spark: SparkSession, dir: String, epoch: Option[Long] = None): SimhashState = {
-    val m = graft.tableio.StateStore.load(spark, dir, epoch)
-    SimhashState(cut(m("bands")), cut(m("pairs")))
-  }
+  def delta(spark: SparkSession, state: DedupState, newSigs: DataFrame,
+            cap: Int = 4096): (DedupState, DataFrame) =
+    IncrementalDedup.deltaWith(state, bandRows(newSigs), cap)(verified)
 
   /** Retract a doc set (takedown): drop its index rows and every pair
-    * touching it — delta-sized broadcast filters.
-    * `retract(delta(initial(b1), b2)._1, docs(b2)) == initial(b1)`. */
-  def retract(spark: SparkSession, state: SimhashState, docIds: Set[Long]): SimhashState = {
-    val bc = spark.sparkContext.broadcast(docIds)
-    SimhashState(
-      cut(state.bands.filter(r => !bc.value.contains(r.getAs[Long]("doc_id") / Pack))),
-      cut(state.pairs.filter(r =>
-        !bc.value.contains(r.getAs[Long]("d1")) && !bc.value.contains(r.getAs[Long]("d2")))))
-  }
+    * touching it. `retract(delta(initial(b1), b2)._1, docs(b2)) ==
+    * initial(b1)`. */
+  def retract(spark: SparkSession, state: DedupState, docIds: Set[Long]): DedupState =
+    IncrementalDedup.retractWith(spark, state, docIds)(_ / Pack)
 }

@@ -66,13 +66,9 @@ object StreamProgress {
     StateStore.epochs(dir).reverse.iterator
       .flatMap(k => StateStore.readEpoch(dir, k).get(Component))
       .map { id =>
-        val df = TableIO.readAt(spark, s"$dir/$Component", id)
-        // pre-identity epochs carry only batch_id — treat as "no identity"
-        val cols = if (df.columns.contains("stream_id")) Seq("batch_id", "stream_id")
-                   else Seq("batch_id")
-        val row = df.select(cols.head, cols.tail: _*).collect().head
-        val persistedId =
-          if (cols.size < 2 || row.isNullAt(1)) None else Some(row.getLong(1))
+        val row = TableIO.readAt(spark, s"$dir/$Component", id)
+          .select("batch_id", "stream_id").collect().head
+        val persistedId = if (row.isNullAt(1)) None else Some(row.getLong(1))
         (persistedId, currentId) match {
           case (Some(p), Some(c)) if p != c => -1L // new lineage: ids not comparable
           case _                            => row.getLong(0)

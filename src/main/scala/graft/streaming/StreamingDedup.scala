@@ -75,16 +75,17 @@ object StreamingDedup {
     * (doc_id, simhash) drives [[IncrementalSimhash.delta]] once per
     * micro-batch — the maintained banded index + accumulated Hamming-≤2
     * pair set equal the one-shot batch operator after any batch prefix
-    * (pigeonhole banding is lossless across micro-batch boundaries too). */
+    * (pigeonhole banding is lossless across micro-batch boundaries too).
+    * Start from [[IncrementalSimhash.emptyState]]. */
   def simhashWriter(sigs: DataFrame,
-                    state0: IncrementalSimhash.SimhashState,
+                    state0: IncrementalDedup.DedupState,
                     cap: Int = 4096,
                     stateDir: Option[String] = None,
                     commitEvery: Int = 1,
                     retainEpochs: Option[Int] = None,
                     checkpointLocation: Option[String] = None)
-      : (DataStreamWriter[Row], Handle[IncrementalSimhash.SimhashState]) =
-    StateFold.writer(sigs, state0)(IncrementalSimhash.save(_, _, _, _), IncrementalSimhash.load(_, _),
+      : (DataStreamWriter[Row], Handle[IncrementalDedup.DedupState]) =
+    StateFold.writer(sigs, state0)(IncrementalDedup.save(_, _, _, _), IncrementalDedup.load(_, _),
         stateDir, commitEvery, retainEpochs, checkpointLocation) { (spark, st, rows) =>
       IncrementalSimhash.delta(spark, st, rows, cap)._1
     }

@@ -305,14 +305,13 @@ object TableIO {
     val root = manifest(base, id)
     val dataPath = root.get("data").asText()
     val statsNode = root.get("col_stats")
-    // partition_rows is the authoritative file inventory (present since
-    // round 1); col_stats may be absent on manifests committed before it
+    // partition_rows is the authoritative file inventory
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
     val it = root.get("partition_rows").fieldNames()
     while (it.hasNext) {
       val file = it.next()
       val range =
-        if (statsNode == null || statsNode.get(file) == null) null
+        if (statsNode.get(file) == null) null
         else statsNode.get(file).get(column)
       val keep = range == null ||
         (BigDecimal(range.get(0).decimalValue()) <= hi &&

@@ -238,8 +238,8 @@ class PairBlockingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val s1 = graft.dedup.IncrementalSimhash.initial(spark,
       sig.toDF("doc_id", "simhash"), cap = 8)
-    graft.dedup.IncrementalSimhash.save(spark, s1, dir)
-    val loaded = graft.dedup.IncrementalSimhash.load(spark, dir)
+    graft.dedup.IncrementalDedup.save(spark, s1, dir)
+    val loaded = graft.dedup.IncrementalDedup.load(spark, dir)
     assert(hamSet(loaded.pairs) == hamSet(s1.pairs))
     assert(loaded.bands.count() == s1.bands.count())
   }
@@ -313,35 +313,85 @@ class PairBlockingSpec extends SparkTestBase {
     assert(handle2.state.bands.count() == all.size)
   }
 
-  test("a durable lshWriter commits its pairs as one file once it has a snapshot") {
+  // A durable dedup writer's pairs must not gain a commit file per
+  // batch. Each case streams four micro-batches at commitEvery = 1 into
+  // `dir` and returns (folded pairs, reloaded pairs, batch operator's
+  // pairs).
+  private def lshLayoutCase(dir: String): (Set[_], Set[_], Set[_]) = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import scala.jdk.CollectionConverters._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("lsh-layout").toString
     val source = MemoryStream[(Long, Int, Long)]
     val (writer, handle) = graft.streaming.StreamingDedup.lshWriter(
       source.toDF().toDF("doc_id", "band", "key"),
       graft.dedup.IncrementalDedup.emptyState(spark), cap = 8,
       stateDir = Some(dir), commitEvery = 1)
-    val batches = Seq(0 until 30, 30 until 50, 50 until 70, 70 until 90)
     val q = writer.start()
-    try batches.foreach { r => source.addData(skewedBands(r): _*); q.processAllAvailable() }
-    finally q.stop()
-    val epochs = graft.tableio.StateStore.epochs(dir)
-    assert(epochs.size == batches.size)
-    val pairFiles = epochs.map { k =>
-      val id = graft.tableio.StateStore.readEpoch(dir, k)("pairs")
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "pairs", "data", s"snap-$id"))
-      try st.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-      finally st.close()
-    }
-    // the first commit has no snapshot to size from; every later one
-    // writes a single file instead of one more per batch
-    assert(pairFiles.tail.forall(_ == 1), s"pairs files per epoch: $pairFiles")
-    val all = skewedBands(0 until 90)
-    val batchPairs = pairSet(
-      graft.candidates.PairBlocking.pairs(all.toDF("doc_id", "band", "key"), cap = 8).distinct())
-    assert(pairSet(handle.state.pairs) == batchPairs)
-    assert(pairSet(graft.dedup.IncrementalDedup.load(spark, dir).pairs) == batchPairs)
+    try Seq(0 until 30, 30 until 50, 50 until 70, 70 until 90).foreach { r =>
+      source.addData(skewedBands(r): _*); q.processAllAvailable()
+    } finally q.stop()
+    val all = skewedBands(0 until 90).toDF("doc_id", "band", "key")
+    (pairSet(handle.state.pairs), pairSet(graft.dedup.IncrementalDedup.load(spark, dir).pairs),
+      pairSet(graft.candidates.PairBlocking.pairs(all, cap = 8).distinct()))
+  }
+
+  private def simhashLayoutCase(dir: String): (Set[_], Set[_], Set[_]) = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val docs = simhashDocsDir()
+    val sig = TextQueries.qSimhash(spark, docs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val source = MemoryStream[(Long, Long)]
+    val (writer, handle) = graft.streaming.StreamingDedup.simhashWriter(
+      source.toDF().toDF("doc_id", "simhash"),
+      graft.dedup.IncrementalSimhash.emptyState(spark), cap = 8,
+      stateDir = Some(dir), commitEvery = 1)
+    val q = writer.start()
+    try Seq(sig.take(8), sig.slice(8, 15), sig.slice(15, 22), sig.drop(22)).foreach { b =>
+      source.addData(b: _*); q.processAllAvailable()
+    } finally q.stop()
+    (hamSet(handle.state.pairs), hamSet(graft.dedup.IncrementalDedup.load(spark, dir).pairs),
+      hamSet(TextQueries.qSimhashPairs(spark, docs)))
+  }
+
+  Seq("lshWriter" -> lshLayoutCase _, "simhashWriter" -> simhashLayoutCase _).foreach {
+    case (name, run) =>
+      test(s"a durable $name commits its pairs as one file once it has a snapshot") {
+        import scala.jdk.CollectionConverters._
+        val dir = java.nio.file.Files.createTempDirectory(s"$name-layout").toString
+        val (folded, reloaded, batchPairs) = run(dir)
+        val pairFiles = graft.tableio.StateStore.epochs(dir).map { k =>
+          val id = graft.tableio.StateStore.readEpoch(dir, k)("pairs")
+          val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "pairs", "data", s"snap-$id"))
+          try st.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+          finally st.close()
+        }
+        assert(pairFiles.size == 4)
+        // the first commit has no snapshot to size from; every later one
+        // writes a single file instead of one more per batch
+        assert(pairFiles.tail.forall(_ == 1), s"pairs files per epoch: $pairFiles")
+        assert(batchPairs.nonEmpty)
+        assert(folded == batchPairs)
+        assert(reloaded == batchPairs)
+      }
+  }
+
+  test("one dedup delta runs a fixed number of jobs: MinHash as before, SimHash plus the shared count") {
+    import graft.dedup.{IncrementalDedup, IncrementalSimhash}
+    val s1 = IncrementalDedup.initial(spark, skewedBands(0 until 60).toDF("doc_id", "band", "key"), cap = 8)
+    s1.bands.count(); s1.pairs.count()
+    val b2 = skewedBands(60 until 90).toDF("doc_id", "band", "key")
+    val (_, lshJobs) = countJobs(IncrementalDedup.delta(spark, s1, b2, cap = 8))
+    val sig = TextQueries.qSimhash(spark, simhashDocsDir())
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.toDF("doc_id", "simhash")
+    val h1 = IncrementalSimhash.initial(spark, sig.filter($"doc_id" < 150), cap = 8)
+    h1.bands.count(); h1.pairs.count()
+    val (_, simJobs) = countJobs(
+      IncrementalSimhash.delta(spark, h1, sig.filter($"doc_id" >= 150), cap = 8))
+    // before the two maintainers shared one delta body: 10 MinHash jobs,
+    // 6 SimHash jobs. SimHash now also runs the count() of newPairs that
+    // lets a durable writer commit its pairs as one file; under AQE that
+    // count is two jobs (the partial-count shuffle stage and the result)
+    assert(lshJobs == 10, s"MinHash delta ran $lshJobs jobs")
+    assert(simJobs == 8, s"SimHash delta ran $simJobs jobs")
   }
 }
